@@ -1,21 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Timing JSON for the query board: best-of-3 wall per query at
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1). Positional query names restrict
+  * the run — fixture pre-build and timing — to those queries:
+  *
+  *   sbt "runMain graft.Bench x_pagerank q14_promo_share"
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Verify/specs: Tables' NTZ->LTZ relabel and CdcTable's
-      // month bucketing are session-zone-dependent — benched plans must
-      // be the very plans the oracles verified
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val all = SparkEntry.queries
+    val unknown = args.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    val selected = all.toSeq
+      .filter { case (n, _) => args.isEmpty || args.contains(n) }
+      .sortBy(_._1)
+    val sfDir = SparkEntry.envSfDir
+    val cpus = SparkEntry.envCpus
+    val spark = SparkEntry.session(cpus)
     // untimed warm-up: classloading, codegen compiler, parquet footers,
     // first shuffle and window machinery — otherwise whichever query runs
     // first absorbs several seconds of one-time JVM cost
@@ -24,7 +25,7 @@ object Bench {
       """SELECT x % 10 AS k, count(*), sum(x),
         |  row_number() OVER (PARTITION BY x % 10 ORDER BY x) AS rn
         |FROM (SELECT id AS x FROM range(100000)) GROUP BY x % 10, x""".stripMargin).count()
-    try SparkEntry.queries.get("a1_minmax_bounds").foreach(_(spark, sfDir).count())
+    try all.get("a1_minmax_bounds").foreach(_(spark, sfDir).count())
     catch { case _: Throwable => () }
     // the HLL register aggregator and the hive dynamic-partition writer
     // each cost seconds of one-time codegen/classloading on first use
@@ -67,7 +68,7 @@ object Bench {
     // longest single build was 20 s; pool 6 starts all five multi-second
     // builds together and the wall converges to the longest build.
     val fixturePool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(6, math.max(2, scala.util.Try(cpus.toInt).getOrElse(4) / 5)))
+      math.min(6, math.max(2, cpus / 5)))
     // longest-expected-first submission (static cost hints from measured
     // builds): alphabetical order started the three ~20s join-view
     // builds LAST, tailing together on a near-empty pool — classic LPT
@@ -80,7 +81,7 @@ object Bench {
       "x_gram_view_incremental" -> 3, "x_pca_view_incremental" -> 3,
       "k_dv_delete" -> 3, "k_ttl_drop" -> 2,
       "k_bloom_pruned_scan" -> 2, "k_hour_pruned_scan" -> 2)
-    val fixtureTimes = SparkEntry.queries.toSeq
+    val fixtureTimes = selected
       .filter { case (n, _) => fixtureBacked.exists(n.startsWith) }
       .sortBy { case (n, _) => (-costHint.getOrElse(n, 1), n) }
       .map { case (name, fn) =>
@@ -114,7 +115,7 @@ object Bench {
     // regions, so each query is measured against its own garbage, not
     // its 253 predecessors' — the per-query isolation the metric means.
     System.gc()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map { case ((name, fn), i) =>
+    val results = selected.zipWithIndex.map { case ((name, fn), i) =>
       if (i > 0 && i % 32 == 0) System.gc()
       def once(): Option[Double] = {
         val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: print the formatted physical plan of named queries
   * (all queries when no names given). Used to keep plans honest — filter
   * pushdown reaching the parquet scan, broadcast joins on dimension
@@ -11,17 +9,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = SparkEntry.envSfDir
+    val spark = SparkEntry.session(SparkEntry.envCpus)
     // SPARK_GRAFT_FINAL=1: execute each query first so the printed plan
     // is AQE's FINAL re-optimized plan (runtime join-strategy changes,
     // coalesced reads) instead of the initial isFinalPlan=false sketch.

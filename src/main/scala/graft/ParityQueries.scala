@@ -333,7 +333,8 @@ object ParityQueries extends QueryPack {
   // window's month partitions and the refresh's delta stays
   // window-bounded — the realistic recent-data churn shape, and what
   // keeps fixture build cost month-bounded instead of table-bounded.
-  // Whole-table churn remains covered by CdcScaleBench.
+  // Whole-table churn is measured in BASELINE.md "Write-path (CDC/DML)
+  // scaling slopes".
   private val churnWin = col("o_orderdate") >=
     lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00"))
   private val churnWinSql = "o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'"
@@ -361,8 +362,9 @@ object ParityQueries extends QueryPack {
           .withColumn(JoinView.TsCol, lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))))
         val (f0, d0) = (fact.currentVersion.get, dim.currentVersion.get)
         // within the churn window: 60% repriced, 20% deleted, 20%
-        // re-inserted under fresh keys — the CdcScaleBench churn shape,
-        // modulo-gated for the SQL twin
+        // re-inserted under fresh keys — the churn shape of BASELINE.md
+        // "Write-path (CDC/DML) scaling slopes", modulo-gated for the
+        // SQL twin
         val slot = col("o_orderkey") % 10
         val fts = lit(java.sql.Timestamp.valueOf("2001-01-02 00:00:00"))
         val ups = orders.filter(slot < 6 && churnWin)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of the driver testdata: clone every scaling
@@ -45,16 +45,8 @@ object ScaleData {
     val pos = args.filterNot(_.startsWith("--"))
     val outDir = pos.headOption.getOrElse("/root/repo/testdata/sf1")
     val factor = pos.lift(1).map(_.toInt).getOrElse(10)
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val srcDir = SparkEntry.envSfDir
+    val spark = SparkEntry.session(SparkEntry.envCpus)
     // events.parquet carries TIMESTAMP(NANOS): read it as raw longs and
     // write it back as raw longs, so the scaled dir round-trips through
     // graft.Tables exactly like the source dir does

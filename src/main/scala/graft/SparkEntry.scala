@@ -11,6 +11,33 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
+  /** The one session every main and the spec suite run under, so the
+    * plans Bench times are the plans Verify checked. UTC because
+    * Tables' NTZ->LTZ relabel and CdcTable's month bucketing depend on
+    * the session zone; TIMESTAMP_MICROS so written files carry INT64
+    * timestamps with full min/max stats.
+    */
+  def session(cpus: Int, appName: String = "graft"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `SPARK_GRAFT_CPUS`, else every core this JVM may use. */
+  lazy val envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `SPARK_GRAFT_SF_DIR`, else sf0.1 — the scale Bench times. */
+  lazy val envSfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   private val packs: Seq[QueryPack] = Seq(
     ParityQueries,
     AnalyticsQueries,

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,22 +9,7 @@ object Verify {
     // optional third arg: comma-separated query names for a targeted
     // re-verify (the driver always runs the full set)
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOTE: deliberately NOT setting spark.sql.parquet.outputTimestampType
-      // here — the RESULT dumps below must stay INT96 so DuckDB reads them
-      // as naive timestamps matching its own oracle output (TIMESTAMP_MICROS
-      // carries isAdjustedToUTC and would surface as TIMESTAMPTZ, failing
-      // the driver's value compare on every timestamp column). CdcTable
-      // forces INT64 around its own data writes internally, so table-file
-      // stats completeness does not depend on this session conf.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(SparkEntry.envCpus)
     new java.io.File(outDir).mkdirs()
     // Board contract (also spec-pinned in BoardContractSpec): every query
     // must have an oracle (or an explicit exemption) — the driver counts
@@ -44,7 +29,7 @@ object Verify {
         val offenders = SparkEntry.boardTypeOffenders(df.schema)
         require(offenders.isEmpty,
           s"board contract: non-hashable output columns ${offenders.mkString(", ")}")
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        dump(df, s"$outDir/$name")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -65,5 +50,21 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes one result dump as INT96 timestamps, which DuckDB reads as
+    * naive timestamps matching its own oracle output (TIMESTAMP_MICROS
+    * carries isAdjustedToUTC and would surface as TIMESTAMPTZ, failing
+    * the value compare on every timestamp column). The queries
+    * themselves run under the shared session conf; only this write
+    * switches, which is safe because Verify runs one query at a time.
+    */
+  private[graft] def dump(df: DataFrame, path: String): Unit = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val conf = df.sparkSession.conf
+    val prior = conf.get(key)
+    conf.set(key, "INT96")
+    try df.coalesce(1).write.mode("overwrite").parquet(path)
+    finally conf.set(key, prior)
   }
 }

@@ -1424,8 +1424,9 @@ final class CdcTable(
     case None => df
     case Some(v) =>
       // the schema sidecar spares a per-append mergeSchema inference over
-      // the data files (measured: it dominated CdcScaleBench's append
-      // step); the relation-based fallback covers pre-sidecar tables
+      // the data files (measured: it dominated the keyless-append step,
+      // BASELINE.md "Write-path (CDC/DML) scaling slopes", r11 refresh);
+      // the relation-based fallback covers pre-sidecar tables
       val curT = schemaAt(v).map(_.map(f => f.name -> f.dataType).toMap)
         .getOrElse(readAt(v).schema.map(f => f.name -> f.dataType).toMap)
       val bad = scala.collection.mutable.Buffer.empty[String]

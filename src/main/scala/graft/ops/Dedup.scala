@@ -30,8 +30,8 @@ object Dedup {
     * production skew shape) collapses map-side instead of crossing the
     * wire and landing on a single reducer. The previous window
     * row_number form shuffles every row and gives the whole hot group
-    * to one task; it is kept as [[latestWinsWindow]] so the skew bench
-    * can measure the difference rather than assert it.
+    * to one task; it is kept as [[latestWinsWindow]], the reference
+    * form this one is checked against.
     */
   def latestWins(df: DataFrame, keys: Seq[String], ts: String,
                  tieBreakers: Seq[String] = Nil): DataFrame = {
@@ -47,7 +47,8 @@ object Dedup {
 
   /** The pre-r16 window form of [[latestWins]] (one shuffle, whole key
     * group in one task) — result-identical under a total order; retained
-    * for the CdcScaleBench skew comparison only.
+    * as the reference `CdcMergeSpec` checks the aggregate form against
+    * (skew timings of both forms: BASELINE.md "r16 skewed WRITE path").
     */
   private[graft] def latestWinsWindow(df: DataFrame, keys: Seq[String], ts: String,
                                       tieBreakers: Seq[String] = Nil): DataFrame = {

@@ -204,7 +204,8 @@ object FileSkipping {
       // footer reads fan out over a bounded local pool: a big commit
       // writes many files per dir and the reads are independent —
       // serial driver-side I/O was the measurable part of commit wall
-      // time in CdcScaleBench's init/merge steps
+      // time in the init/merge steps (BASELINE.md "Write-path (CDC/DML)
+      // scaling slopes", r11 refresh)
       val files = dataFiles(dir)
       val fresh = files.filterNot(f => reuse.contains(f.getName))
       val computed: Map[String, FileStats] =

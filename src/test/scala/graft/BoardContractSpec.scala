@@ -68,4 +68,23 @@ class BoardContractSpec extends SparkSpec {
     assert(got === Seq("-2.2500", "-0.0001", "0.0000", "1.5000",
       "12345678901234.5678"))
   }
+
+  test("Verify dumps timestamps as INT96 and restores the session's TIMESTAMP_MICROS") {
+    // DuckDB reads INT96 as a naive timestamp, matching its oracle output;
+    // INT64 micros carry isAdjustedToUTC and would surface as TIMESTAMPTZ
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val key = "spark.sql.parquet.outputTimestampType"
+    assert(spark.conf.get(key) === "TIMESTAMP_MICROS")
+    val out = s"${tmpDir("graft_dump")}/ts"
+    Verify.dump(spark.sql("SELECT TIMESTAMP '2001-02-03 04:05:06' AS at, 1 AS n"), out)
+    assert(spark.conf.get(key) === "TIMESTAMP_MICROS")
+    val part = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(part.getPath), spark.sparkContext.hadoopConfiguration))
+    val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    val at = schema.getType(schema.getFieldIndex("at")).asPrimitiveType
+    assert(at.getPrimitiveTypeName === PrimitiveTypeName.INT96)
+  }
 }
