@@ -17,10 +17,10 @@ object SparkEntry {
     * the session zone; TIMESTAMP_MICROS so written files carry INT64
     * timestamps with full min/max stats.
     */
-  def session(cpus: Int, appName: String = "graft"): SparkSession = {
+  def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName(appName)
+      .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -11,5 +11,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkEntry.session(4, "graft-test")
+  lazy val session: SparkSession = SparkEntry.session(4)
 }
