@@ -712,7 +712,7 @@ object ParityQueries extends QueryPack {
 
     // K10/K2, merge-on-read DELETE: two overlapping vectored deletes (the
     // union must not double-delete) followed by an append whose
-    // hard-linked carry must keep the vector live — the read equals
+    // carried files must keep the vector live — the read equals
     // DuckDB's replay of the same delete-then-append arithmetic. The
     // table rewrites ZERO data files for the deletes (DeletionVectorSpec
     // asserts the file-level invariants; this oracle proves the values).

@@ -9,34 +9,42 @@ import org.apache.spark.sql.functions._
   * reference's Iceberg v2 copy-on-write tables
   * (incremental_kafka_s3_cdc.py:126-148, write.delete.mode=copy-on-write).
   *
-  * Both layouts commit through the same versioned protocol: data
-  * materializes fully in immutable locations first, then a version
-  * directory `vNNNNNNNN` is finalized, then the `_current` pointer file is
-  * repointed with one atomic POSIX rename. A crash at ANY step leaves the
-  * previous version live and readable; leftovers the pointer never reached
-  * are garbage-collected by [[expire]] on the next successful commit. The
-  * pointer also yields time travel ([[readVersion]]) and snapshot expiry
-  * (`retainVersions`) — the reference's Iceberg snapshot/maintenance
-  * surface (incremental_kafka_s3_cdc.py:405-423) on plain parquet.
-  *
-  *   - '''Unpartitioned.''' Each version directory holds the full table;
-  *     merge/compact write the next `vNNNNNNNN` and repoint.
+  * One commit layout, the Iceberg/Delta metadata-layer idea (snapshot =
+  * manifest of immutable files): data lives only in immutable commit
+  * directories `cNNNNNNNN`, written once and never rewritten, and a
+  * version directory `vNNNNNNNN` holds only METADATA — its
+  * `manifest.tsv` maps each partition key to the data directories holding
+  * that key's current rows, plus the schema, commit-info, tag and
+  * deletion-vector sidecars. A commit writes only the keys it changes
+  * into a fresh commit dir, re-points every other key at its old
+  * directories (never read, never rewritten), finalizes the version dir,
+  * then repoints the `_current` pointer file with one atomic rename. A
+  * crash at ANY step leaves the previous version live and readable;
+  * leftovers the pointer never reached are garbage-collected by
+  * [[expire]], which also frees every commit dir no retained manifest
+  * names. The pointer yields time travel ([[readVersion]]) and snapshot
+  * expiry (`retainVersions`) — the reference's Iceberg
+  * snapshot/maintenance surface (incremental_kafka_s3_cdc.py:405-423) on
+  * plain parquet.
   *
   *   - '''Partitioned (hive-layout by derived month `__part_month`,''' the
   *     reference's hidden `MONTHS(created_col)` transform, chosen by its
   *     heuristic: a timestamp column whose name contains "create" —
-  *     SURVEY.md K6'''.)''' Copying the whole table per version would
-  *     defeat partition-pruned copy-on-write, so versions are MANIFESTS:
-  *     each merge writes only the touched months' data into an immutable
-  *     commit directory `cNNNNNNNN/__part_month=M/`, and the version's
-  *     `manifest.tsv` maps every live month to the commit directory that
-  *     holds its current rows — untouched months keep pointing at their
-  *     old files (never read, never rewritten, byte-identical across
-  *     versions). This is the Iceberg/Delta metadata-layer idea
-  *     (snapshot = manifest of immutable files) at month granularity; the
-  *     merge itself keeps the reference's `months(t.pc)=months(s.pc)`
-  *     pruning conjunct (incremental_kafka_s3_cdc.py:262-264) plus the
-  *     moved-key guard.
+  *     SURVEY.md K6'''.)''' Keys are months; a commit writes the touched
+  *     months under `cNNNNNNNN/__part_month=M/`, so a merge rewrites only
+  *     the months its batch touches. The merge keeps the reference's
+  *     `months(t.pc)=months(s.pc)` pruning conjunct
+  *     (incremental_kafka_s3_cdc.py:262-264) plus the moved-key guard.
+  *
+  *   - '''Unpartitioned.''' The degenerate case: one constant key `""`
+  *     whose data sits directly in `cNNNNNNNN/`. Merge and compaction
+  *     rewrite that key; append adds one directory per batch; restore
+  *     and vectored deletes only re-point the manifest.
+  *
+  * A version directory with parquet directly inside and no manifest was
+  * written by the earlier full-copy unpartitioned layout; it reads as a
+  * one-entry manifest naming itself, and [[expire]] keeps it while a
+  * retained manifest still names it.
   *
   * Concurrency (SURVEY.md §7 risk e): commits use OPTIMISTIC version
   * reservation — a commit first claims its version number with one atomic
@@ -250,11 +258,10 @@ final class CdcTable(
   }
 
   /** Reject `df` when any row violates a declared constraint — called at
-    * the head of both commit funnels, BEFORE version reservation, so a
+    * the head of the commit funnel, BEFORE version reservation, so a
     * bad batch burns nothing and surfaces no conflict to other writers.
     * Cost: one filter+limit job per constraint over the commit's rewrite
-    * set (delta-sized on the partitioned layout's untouched months by
-    * construction — they are never part of `df`).
+    * set (carried keys are never part of `df`).
     */
   private def enforceConstraints(df: DataFrame): Unit = {
     enforceLayout()
@@ -267,19 +274,23 @@ final class CdcTable(
     }
   }
 
-  // ------------------------------------------------- manifests (partitioned)
+  // ------------------------------------------------------------- manifests
 
-  /** Version manifest: `(month, commit-relative data dir)` lines. A month
-    * may map to several directories (keyless appends add one per batch).
+  /** Version manifest: `(partition key, table-relative data dir)` lines.
+    * A key may map to several directories (appends add one per batch);
+    * an unpartitioned table's only key is `""`. A version dir without a
+    * manifest is a legacy full-copy version and reads as one entry
+    * naming itself.
     */
   def manifest(v: Long): Seq[(String, String)] = {
     val f = manifestFile(v)
-    if (!io.exists(f.getPath))
-      throw new ExpiredVersionException(s"version $v of $path is expired or never existed")
-    io.readLines(f.getPath).map { l =>
-      val i = l.indexOf('\t')
-      (l.substring(0, i), l.substring(i + 1))
-    }
+    if (io.exists(f.getPath))
+      io.readLines(f.getPath).map { l =>
+        val i = l.indexOf('\t')
+        (l.substring(0, i), l.substring(i + 1))
+      }
+    else if (io.exists(versionDir(v).getPath)) Seq("" -> versionDir(v).getName)
+    else throw new ExpiredVersionException(s"version $v of $path is expired or never existed")
   }
 
   private def writeManifest(v: Long, entries: Seq[(String, String)]): Unit = {
@@ -288,18 +299,23 @@ final class CdcTable(
       entries.map { case (m, d) => s"$m\t$d" }.mkString("\n"))
   }
 
-  private def relDir(v: Long, month: String): String = f"c$v%08d/$PartCol=$month"
+  /** Data dir of `key` in commit `v`: the hive key dir, or the commit dir
+    * itself for the unpartitioned table's constant key.
+    */
+  private def relDir(v: Long, key: String): String =
+    if (key.isEmpty) commitDir(v).getName else f"c$v%08d/$PartCol=$key"
 
   /** Union the manifest's data directories (optionally only `months`),
-    * re-attaching the month as `__part_month`. Per-directory reads union
-    * by name so additive schema evolution across commits just works; the
-    * directory list is metadata-scale (months x commits), never data-scale.
+    * re-attaching a partitioned table's month as `__part_month`.
+    * Per-directory reads union by name so additive schema evolution
+    * across commits just works; the directory list is metadata-scale
+    * (keys x commits), never data-scale.
     *
     * `at` names the version the entries came from: a version whose
     * manifest is EMPTY (a delete matched every row) reads as an empty
     * DataFrame with that version's recorded schema (the `_schema.json`
-    * sidecar each partitioned commit writes) instead of throwing —
-    * a fully-deleted table stays readable.
+    * sidecar each commit writes) instead of throwing — a fully-deleted
+    * table stays readable.
     */
   private def readParts(entries: Seq[(String, String)], months: Option[Set[String]],
                         at: Long): DataFrame = {
@@ -329,10 +345,12 @@ final class CdcTable(
     // applies after the union
     val dv = dvAt(at)
     val unioned = picked.groupBy(_._2.takeWhile(_ != '/')).toSeq.sortBy(_._1).map { case (cdir, es) =>
-      val base = spark.read.option("mergeSchema", "true")
+      val scan = spark.read.option("mergeSchema", "true")
         .option("basePath", new File(path, cdir).getPath)
         .parquet(es.map(e => new File(path, e._2).getPath): _*)
-        .withColumn(PartCol, col(PartCol).cast("string"))
+      val base =
+        if (scan.columns.contains(PartCol)) scan.withColumn(PartCol, col(PartCol).cast("string"))
+        else scan
       if (dv.isEmpty) base
       else base.withColumn(DvSubCol, dvSubExpr)
         .withColumn(DvFileCol, col("_metadata.file_name"))
@@ -348,7 +366,7 @@ final class CdcTable(
   // ----------------------------------------------------------------- reads
 
   /** Current table content (user columns only). */
-  def read: DataFrame = readAt(currentOrThrow)
+  def read: DataFrame = readVersion(currentOrThrow)
 
   /** Partition-pruned read: only the named months' data directories are
     * listed and scanned (manifest-level pruning — the reader never
@@ -362,7 +380,7 @@ final class CdcTable(
     if (entries.isEmpty && io.exists(schemaFile(cur).getPath))
       // typed empty from the schema sidecar — zero file listing/footers
       readParts(Nil, None, cur).drop(PartCol)
-    else if (entries.isEmpty) readAt(cur).filter(lit(false))
+    else if (entries.isEmpty) readVersion(cur).filter(lit(false))
     else readParts(entries, None, cur).drop(PartCol)
   }
 
@@ -391,7 +409,7 @@ final class CdcTable(
     val kept = scanDirs(v, preds).flatMap(FileSkipping.prunedFiles(conf, _, preds))
     val residual = preds.map(FileSkipping.residualOf)
       .reduceOption(_ && _).getOrElse(lit(true))
-    if (kept.isEmpty) readAt(v).filter(lit(false))
+    if (kept.isEmpty) readVersion(v).filter(lit(false))
     else {
       val df = applyDv(
         spark.read.option("mergeSchema", "true").parquet(kept.map(_.getPath): _*), v)
@@ -412,7 +430,7 @@ final class CdcTable(
     val conf = spark.sessionState.newHadoopConf()
     val ranges = FileSkipping.predsOf(pred)
     val kept = scanDirs(cur, ranges).flatMap(FileSkipping.prunedFiles(conf, _, ranges))
-    if (kept.isEmpty) readAt(cur).filter(lit(false))
+    if (kept.isEmpty) readVersion(cur).filter(lit(false))
     else {
       val df = applyDv(
         spark.read.option("mergeSchema", "true").parquet(kept.map(_.getPath): _*), cur)
@@ -428,9 +446,6 @@ final class CdcTable(
   def scanProfile(preds: Seq[FileSkipping.Pred]): (Int, Int) =
     scanProfileAt(currentOrThrow, preds)
 
-  /** [[scanProfile]] at a pinned version (the audit face for
-    * version-pinned maintenance scans).
-    */
   /** Exact `read.filter(preds).count()` answered from METADATA where
     * provable — the Iceberg/Delta manifest-count analogue. Files whose
     * stats prove every row matches ([[FileSkipping.mustMatchFile]])
@@ -461,8 +476,7 @@ final class CdcTable(
     // partial files scan vector-applied like any other read
     val dvCount = dvSummary(cur).map { case (d, f, c) => (dvSubOf(d), f) -> c }.toMap
     val metaRows = full.map { case (f, rows) =>
-      val sub = if (partitionSource.isDefined) f.getParentFile.getName else ""
-      rows - dvCount.getOrElse((sub, f.getName), 0L)
+      rows - dvCount.getOrElse((f.getParentFile.getName, f.getName), 0L)
     }.sum
     val scanned =
       if (partial.isEmpty) 0L
@@ -528,6 +542,9 @@ final class CdcTable(
     }.toDF("column", "rows", "nulls", "min", "max")
   }
 
+  /** [[scanProfile]] at a pinned version (the audit face for
+    * version-pinned maintenance scans).
+    */
   def scanProfileAt(v: Long, preds: Seq[FileSkipping.Pred]): (Int, Int) = {
     val conf = spark.sessionState.newHadoopConf()
     val dirs = scanDirs(v, preds)
@@ -536,8 +553,8 @@ final class CdcTable(
   }
 
   /** The data directories a predicate scan must consider: manifest
-    * entries with months outside the predicate's `yyyy-MM` range dropped
-    * (partitioned), or the current version dir (unpartitioned). Month
+    * entries, minus (partitioned) those whose months fall outside the
+    * predicate's `yyyy-MM` range. Month
     * bounds derive from range bounds on the partition-source column:
     * STRING-normalized bounds truncate to their `yyyy-MM` prefix (ISO
     * dates and month keys both sort lexically), and — when the schema
@@ -547,51 +564,54 @@ final class CdcTable(
     * matters: a numeric partition source must not be misread as micros,
     * so unproven Long bounds skip month pruning instead.
     */
-  private def scanDirs(cur: Long, preds: Seq[FileSkipping.Pred]): Seq[File] =
-    partitionSource match {
-      case Some(src) =>
-        lazy val srcIsTimestamp = schemaAt(cur)
-          .flatMap(_.find(_.name == src))
-          .exists(_.dataType == org.apache.spark.sql.types.TimestampType)
-        def month(v: Any): Option[String] = FileSkipping.norm(v) match {
-          case s: String =>
-            // Normalize a timestamp-string bound to the key alphabet:
-            // hour keys are 'yyyy-MM-dd-HH' (dash at index 10) while
-            // bounds arrive as '2001-01-01 11:30:00' or ISO 'T'-separated
-            // — left unmapped, ' '/'T' sort on the wrong side of '-' and
-            // the bound check silently drops qualifying partitions.
-            val k = s.take(partPattern.length)
-            if (k.length > 10 && (k.charAt(10) == ' ' || k.charAt(10) == 'T'))
-              Some(k.updated(10, '-'))
-            else Some(k)
-          case m: Long if srcIsTimestamp =>
-            val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
-            Some(java.time.Instant.ofEpochSecond(Math.floorDiv(m, 1000000L)).atZone(zone)
-              .format(java.time.format.DateTimeFormatter.ofPattern(partPattern)))
-          case _ => None
-        }
-        // can month `m` hold a row satisfying `p`? Conservative: any
-        // predicate not range/IN-shaped on the partition source (or whose
-        // bounds don't map to months) allows every month; a disjunction
-        // allows a month any branch allows.
-        def monthAllows(m: String, p: FileSkipping.Pred): Boolean = p match {
-          case r: FileSkipping.Range if r.column == src =>
-            r.lower.flatMap(month).forall(m >= _) && r.upper.flatMap(month).forall(m <= _)
-          case FileSkipping.InSet(c, vs) if c == src =>
-            // only when EVERY member yields a month (else no month pruning)
-            val ms = vs.map(month)
-            !ms.forall(_.isDefined) || ms.flatten.contains(m)
-          case FileSkipping.AnyOf(bs) => bs.exists(_.forall(monthAllows(m, _)))
-          case _ => true
-        }
-        manifest(cur)
-          .filter { case (m, _) => preds.forall(monthAllows(m, _)) }
-          .map(e => new File(path, e._2))
-      case None => Seq(versionDir(cur))
+  private def scanDirs(cur: Long, preds: Seq[FileSkipping.Pred]): Seq[File] = {
+    val entries = manifest(cur)
+    val kept = partitionSource.fold(entries) { src =>
+      lazy val srcIsTimestamp = schemaAt(cur)
+        .flatMap(_.find(_.name == src))
+        .exists(_.dataType == org.apache.spark.sql.types.TimestampType)
+      def month(v: Any): Option[String] = FileSkipping.norm(v) match {
+        case s: String =>
+          // Normalize a timestamp-string bound to the key alphabet:
+          // hour keys are 'yyyy-MM-dd-HH' (dash at index 10) while
+          // bounds arrive as '2001-01-01 11:30:00' or ISO 'T'-separated
+          // — left unmapped, ' '/'T' sort on the wrong side of '-' and
+          // the bound check silently drops qualifying partitions.
+          val k = s.take(partPattern.length)
+          if (k.length > 10 && (k.charAt(10) == ' ' || k.charAt(10) == 'T'))
+            Some(k.updated(10, '-'))
+          else Some(k)
+        case m: Long if srcIsTimestamp =>
+          val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+          Some(java.time.Instant.ofEpochSecond(Math.floorDiv(m, 1000000L)).atZone(zone)
+            .format(java.time.format.DateTimeFormatter.ofPattern(partPattern)))
+        case _ => None
+      }
+      // can month `m` hold a row satisfying `p`? Conservative: any
+      // predicate not range/IN-shaped on the partition source (or whose
+      // bounds don't map to months) allows every month; a disjunction
+      // allows a month any branch allows.
+      def monthAllows(m: String, p: FileSkipping.Pred): Boolean = p match {
+        case r: FileSkipping.Range if r.column == src =>
+          r.lower.flatMap(month).forall(m >= _) && r.upper.flatMap(month).forall(m <= _)
+        case FileSkipping.InSet(c, vs) if c == src =>
+          // only when EVERY member yields a month (else no month pruning)
+          val ms = vs.map(month)
+          !ms.forall(_.isDefined) || ms.flatten.contains(m)
+        case FileSkipping.AnyOf(bs) => bs.exists(_.forall(monthAllows(m, _)))
+        case _ => true
+      }
+      entries.filter { case (m, _) => preds.forall(monthAllows(m, _)) }
     }
+    kept.map(e => new File(path, e._2))
+  }
+
+  private def copySchema(from: Long, to: Long): Unit =
+    if (io.exists(schemaFile(from).getPath))
+      io.copy(schemaFile(from).getPath, schemaFile(to).getPath)
 
   /** Recorded schema of version `v` from its `_schema.json` sidecar, if
-    * present (every partitioned commit writes one); metadata-only.
+    * present (every commit writes one); metadata-only.
     */
   private def schemaAt(v: Long): Option[org.apache.spark.sql.types.StructType] = {
     val f = schemaFile(v)
@@ -616,19 +636,7 @@ final class CdcTable(
   }
 
   /** Time travel: read a specific retained version. */
-  def readVersion(v: Long): DataFrame = partitionSource match {
-    case Some(_) => readParts(manifest(v), None, v).drop(PartCol)
-    case None =>
-      val d = versionDir(v)
-      if (!io.exists(d.getPath))
-        throw new ExpiredVersionException(s"version $v of $path is expired or never existed")
-      applyDv(spark.read.option("mergeSchema", "true").parquet(d.getPath), v)
-  }
-
-  private def readAt(v: Long): DataFrame = {
-    val df = readVersion(v)
-    if (df.columns.contains(PartCol)) df.drop(PartCol) else df
-  }
+  def readVersion(v: Long): DataFrame = readParts(manifest(v), None, v).drop(PartCol)
 
   // --------------------------------------------------------------- commits
 
@@ -710,8 +718,8 @@ final class CdcTable(
 
   /** One row per retained version, newest first: operation, commit
     * timestamp, data-file count — the table's `DESCRIBE HISTORY` face.
-    * Metadata-only (pointer + sidecar reads, one listing per version;
-    * partitioned versions count their manifests' referenced dirs).
+    * Metadata-only (pointer + sidecar reads, one listing per data dir
+    * the version's manifest references).
     */
   def history: DataFrame = {
     val sq = spark
@@ -721,11 +729,8 @@ final class CdcTable(
         case Some((o, t)) => (o, java.lang.Long.valueOf(t))
         case None         => (null: String, null: java.lang.Long)
       }
-      val files =
-        if (manifestExists(v))
-          manifest(v).map(_._2).distinct
-            .map(rel => dataFileCount(new File(path, rel))).sum
-        else dataFileCount(versionDir(v))
+      val files = manifest(v).map(_._2).distinct
+        .map(rel => dataFileCount(new File(path, rel))).sum
       (v, op, ts, files.toLong)
     }.toDF("version", "operation", "ts_millis", "num_files")
   }
@@ -770,7 +775,7 @@ final class CdcTable(
     val sq = spark
     import sq.implicits._
     val v = currentOrThrow
-    val schema = schemaAt(v).getOrElse(readAt(v).schema)
+    val schema = schemaAt(v).getOrElse(readVersion(v).schema)
     val cols = schema.fields.toSeq.map(f =>
       (f.name, f.dataType.simpleString, f.nullable.toString))
     val layout = Seq(
@@ -794,9 +799,7 @@ final class CdcTable(
     import sq.implicits._
     val v = currentOrThrow
     val conf = spark.sessionState.newHadoopConf()
-    val dirs: Seq[(String, File)] =
-      if (manifestExists(v)) manifest(v).map(_._2).distinct.map(r => (r, new File(path, r)))
-      else Seq((f"v$v%08d", versionDir(v)))
+    val dirs = dataDirsAt(v)
     val dv = dvSummary(v).map { case (d, f, c) => (d, f) -> c }.toMap
     dirs.flatMap { case (rel, dir) =>
       FileSkipping.statsForDir(conf, dir).toSeq.map { case (name, st) =>
@@ -806,20 +809,9 @@ final class CdcTable(
       .toDF("data_dir", "file", "row_count", "deleted_rows")
   }
 
-  private def manifestExists(v: Long): Boolean =
-    io.exists(manifestFile(v).getPath)
-
   private def dataFileCount(dir: File): Long =
     io.list(dir.getPath).count(e => !e.isDir && e.name.endsWith(".parquet")).toLong
 
-  /** Unpartitioned commit: write `df` as the version after `expected`
-    * (into the reserved — therefore fresh and exclusively owned —
-    * directory). `expected` is the version `df` was DERIVED FROM: if any
-    * other writer committed after the caller read it, `expected + 1` is
-    * already reserved and this throws instead of silently losing that
-    * writer's update (the read-version and the commit base are the same
-    * version by construction).
-    */
   /** Runs `body` (a parquet write action) with INT64 timestamp output
     * (`TIMESTAMP_MICROS`) forced for the duration. Spark's DEFAULT
     * `spark.sql.parquet.outputTimestampType` is the legacy INT96, whose
@@ -857,33 +849,19 @@ final class CdcTable(
         .option("parquet.bloom.filter.max.bytes", (128 * 1024).toString)
     )((w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true"))
 
-  private def commitFull(df: DataFrame, expected: Option[Long]): Unit = {
-    enforceConstraints(df)
-    val next = expected.getOrElse(0L) + 1
-    reserveOrConflict(next)
-    withInt64Timestamps {
-      writer(df).mode(SaveMode.Append).parquet(versionDir(next).getPath)
-    }
-    // stats sidecar at write time: the footers just materialized and are
-    // cache-hot — the first pruned read must not pay a metadata storm
-    FileSkipping.writeStatsNow(spark.sessionState.newHadoopConf(), versionDir(next))
-    writeNdvSidecarFull(next)
-    // schema sidecar on the unpartitioned layout too: metadata consumers
-    // (append type alignment, typed empties) must not pay a mergeSchema
-    // inference over the data files just to learn the column types
-    io.writeString(schemaFile(next).getPath, df.schema.json)
-    commitPointer(next)
-  }
-
-  /** Partitioned commit: `df` (already carrying `__part_month`) holds the
-    * new content of exactly the `replaced` months; every other month is
-    * carried over from the previous manifest untouched. Months in
-    * `replaced` that `df` no longer contains vanish from the manifest
-    * (their old files stay until their last referencing version expires —
-    * that's what keeps time travel consistent).
+  /** The one commit: `df` (carrying `__part_month` on a partitioned
+    * table) is written into a fresh commit dir, and the new manifest is
+    * `carried` — entries of version `expected` kept verbatim, their files
+    * never read or rewritten — plus one entry per key `df` wrote. A
+    * replaced entry's old files stay until their last referencing version
+    * expires; that is what keeps time travel consistent. `expected` is the
+    * version `df` and `carried` were DERIVED FROM: if another writer
+    * committed after the caller read it, `expected + 1` is already
+    * reserved and this throws instead of silently losing that writer's
+    * update.
     */
-  private def commitPartitioned(
-      df: DataFrame, replaced: Set[String], expected: Option[Long]): Unit = {
+  private def commit(
+      df: DataFrame, carried: Seq[(String, String)], expected: Option[Long]): Unit = {
     enforceConstraints(df)
     val next = expected.getOrElse(0L) + 1
     // claim the version BEFORE materializing data: the reservation owns
@@ -893,47 +871,45 @@ final class CdcTable(
     // expected+1 makes read-base and commit-base the same version.
     reserveOrConflict(next)
     withInt64Timestamps {
-      writer(df).mode(SaveMode.Overwrite).partitionBy(PartCol).parquet(commitDir(next).getPath)
+      writer(df).mode(SaveMode.Overwrite).partitionBy(keyCols: _*)
+        .parquet(commitDir(next).getPath)
     }
-    // the hive directory names ARE the months actually written — no
-    // second evaluation of df's plan needed
-    val outMonths = io.list(commitDir(next).getPath)
-      .filter(e => e.isDir && e.name.startsWith(s"$PartCol="))
-      .map(_.name.stripPrefix(s"$PartCol=")).sorted
+    // the keys actually written, from the listing — no second evaluation
+    // of df's plan: each hive dir names a month, and parquet directly in
+    // the commit dir is the unpartitioned table's constant key
+    val outKeys = io.list(commitDir(next).getPath).collect {
+      case e if e.isDir && e.name.startsWith(s"$PartCol=") => e.name.stripPrefix(s"$PartCol=")
+      case e if !e.isDir && e.name.endsWith(".parquet") => ""
+    }.distinct.sorted
+    val outDirs = outKeys.map(k => new File(path, relDir(next, k)))
     // write-time stats sidecars for exactly the directories this commit
-    // produced (carried months keep theirs — the dirs are immutable)
+    // produced (carried dirs keep theirs — the dirs are immutable)
     locally {
       val conf = spark.sessionState.newHadoopConf()
-      // month dirs are independent: bound-parallel like the per-file
+      // key dirs are independent: bound-parallel like the per-file
       // footer reads inside writeStatsNow (a hot commit writes dozens of
       // months; serial sidecar emission was visible commit wall time)
-      if (outMonths.size <= 1)
-        outMonths.foreach(m =>
-          FileSkipping.writeStatsNow(conf, new File(commitDir(next), s"$PartCol=$m")))
+      if (outDirs.size <= 1) outDirs.foreach(FileSkipping.writeStatsNow(conf, _))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, outMonths.size))
+          math.min(8, outDirs.size))
         try {
           import scala.jdk.CollectionConverters._
-          pool.invokeAll(outMonths.map { m =>
-            (() => FileSkipping.writeStatsNow(conf,
-              new File(commitDir(next), s"$PartCol=$m"))):
-              java.util.concurrent.Callable[Unit]
+          pool.invokeAll(outDirs.map { d =>
+            (() => FileSkipping.writeStatsNow(conf, d)): java.util.concurrent.Callable[Unit]
           }.asJava).asScala.foreach(_.get())
         } finally pool.shutdown()
       }
     }
-    writeNdvSidecarsPartitioned(next, outMonths)
-    val carried = expected.map(manifest).getOrElse(Nil)
-      .filterNot { case (m, _) => replaced.contains(m) }
-    writeManifest(next, carried ++ outMonths.map(m => m -> relDir(next, m)))
+    writeNdvSidecars(next, outKeys)
+    writeManifest(next, carried ++ outKeys.map(k => k -> relDir(next, k)))
     // deletion vector: entries for carried dirs survive (their files are
-    // the same bytes); entries for replaced months fall away — those
-    // files were rewritten from a vector-applied read
+    // the same bytes); entries for replaced dirs fall away — those files
+    // were rewritten from a vector-applied read
     expected.foreach(carryDv(_, next, keepDirs = carried.map(_._2).toSet))
     // schema sidecar: the TABLE's schema as of this version — this
     // commit's write schema unioned with the previous version's recorded
-    // schema, matching what a mergeSchema read over every month's files
+    // schema, matching what a mergeSchema read over every carried file
     // would see. Recording only the write schema would lose an evolved
     // column carried solely by UNTOUCHED months' files, and the
     // changed-months-pruned changesBetween (which recovers pruned-away
@@ -980,109 +956,88 @@ final class CdcTable(
   /** Hard-link THIS table's current state — data files, stats + schema
     * sidecars, deletion vector — into version `destV` of `dest`, which
     * the caller must have already reserved. Metadata-speed: no data
-    * bytes move except a DV parquet rewrite when month folding renames
-    * files. Shared by [[cloneTo]] (fresh destination, destV = 1) and
+    * bytes move except a DV parquet rewrite when a file's identity
+    * changes. Shared by [[cloneTo]] (fresh destination, destV = 1) and
     * [[publish]] (the branch fast-forwards its parent, destV = parent
     * head + 1). The caller owns the pointer commit.
     */
   private def linkStateInto(dest: CdcTable, destV: Long): Unit = {
     val v = currentOrThrow
     val conf = spark.sessionState.newHadoopConf()
-    partitionSource match {
-      case Some(_) =>
-        // a month spanning several source commit dirs folds into ONE dest
-        // month dir (the hive layout readParts expects); file names get a
-        // source-commit prefix only when needed for uniqueness, and the
-        // stats sidecar entries remap to the new names — still zero
-        // footer reads on the clone
-        // (src dir rel -> (dst dir rel, file-name prefix)) — the same
-        // mapping the stats remap uses, reused below for the deletion
-        // vector (its entries reference files by dir + name)
-        val dirMap = scala.collection.mutable.Map.empty[String, (String, String)]
-        val entries = manifest(v).groupBy(_._1).toSeq.sortBy(_._1).map { case (m, es) =>
-          val dstRel = dest.relDir(destV, m)
-          val dst = new File(dest.path, dstRel)
-          val multi = es.size > 1
-          val reuse = es.flatMap { case (_, rel) =>
-            val src = new File(path, rel)
-            val prefix = if (multi) rel.takeWhile(_ != '/') + "_" else ""
-            dirMap(rel) = (dstRel, prefix)
-            val srcStats = FileSkipping.statsForDir(conf, src)
-            io.list(src.getPath)
-              .filter(e => !e.isDir && !e.name.startsWith("_") && !e.name.startsWith("."))
-              .flatMap { e =>
-                val dstName = prefix + e.name
-                io.linkOrCopy(new File(src, e.name).getPath,
-                  new File(dst, dstName).getPath)
-                srcStats.get(e.name).map(dstName -> _)
-              }
-          }.toMap
-          FileSkipping.writeStatsNow(conf, dst, reuse = reuse)
-          // NDV sidecars carry too: a month folded from several source
-          // dirs max-merges their registers (union of sketches IS the
-          // sketch of the union); any source dir without one -> skip,
-          // analyze backfills
-          val srcNdv = es.map { case (_, rel) =>
-            TableStats.readSidecar(io, new File(path, rel))
-          }
-          if (srcNdv.nonEmpty && srcNdv.forall(_.isDefined)) {
-            val cols = srcNdv.flatMap(_.get.keys).distinct
-            TableStats.writeSidecar(dest.io, dst, cols.map { c =>
-              c -> srcNdv.map(_.get.getOrElse(c, TableStats.zero))
-                .reduce(TableStats.merged)
-            }.toMap)
-          }
-          (m, dstRel)
-        }
-        dest.writeManifest(destV, entries)
-        schemaAt(v).foreach(sc =>
-          dest.io.writeString(dest.schemaFile(destV).getPath, sc.json))
-        // deletion vector: entries remap with the same (dir, prefix) the
-        // data files did; the parquet rewrites through Spark only when a
-        // file name actually changed (multi-commit month folding)
-        val sum = dvSummary(v)
-        if (sum.nonEmpty) {
-          val remapped = sum.map { case (d, f, c) =>
-            val (nd, pre) = dirMap(d); (nd, pre + f, c)
-          }
-          if (remapped.map(_._2) == sum.map(_._2)) {
-            io.list(dvDir(v).getPath).filter(!_.isDir).foreach(e =>
-              io.linkOrCopy(new File(dvDir(v), e.name).getPath,
-                new File(dest.dvDir(destV), e.name).getPath))
-          } else {
-            // rename keyed by (sub, file): a write task emits same-named
-            // files into several month dirs, so file name alone is not a
-            // join identity. The month-dir sub is IDENTICAL in the dest
-            // (months fold under the same __part_month= name).
-            val ren = sum.map { case (d, f, _) => (dvSubOf(d), f, dirMap(d)._2 + f) }
-            val sq = spark
-            import sq.implicits._
-            dvAt(v).get.join(ren.toDF("sub", "file", "nf"), Seq("sub", "file"))
-              .select(col("sub"), col("nf").as("file"), col("idx"))
-              .coalesce(1).write.parquet(dest.dvDir(destV).getPath)
-          }
-          dest.writeDvSummary(destV, remapped)
-        }
-      case None =>
-        val src = versionDir(v)
+    // a key spanning several source commit dirs folds into ONE dest key
+    // dir (the layout readParts expects); file names get a source-commit
+    // prefix only when needed for uniqueness, and the stats sidecar
+    // entries remap to the new names — still zero footer reads on the
+    // clone
+    // (src dir rel -> (dst dir rel, file-name prefix)) — the same
+    // mapping the stats remap uses, reused below for the deletion
+    // vector (its entries reference files by dir + name)
+    val dirMap = scala.collection.mutable.Map.empty[String, (String, String)]
+    val entries = manifest(v).groupBy(_._1).toSeq.sortBy(_._1).map { case (m, es) =>
+      val dstRel = dest.relDir(destV, m)
+      val dst = new File(dest.path, dstRel)
+      val multi = es.size > 1
+      val reuse = es.flatMap { case (_, rel) =>
+        val src = new File(path, rel)
+        val prefix = if (multi) rel.takeWhile(_ != '/') + "_" else ""
+        dirMap(rel) = (dstRel, prefix)
+        val srcStats = FileSkipping.statsForDir(conf, src)
         io.list(src.getPath)
           .filter(e => !e.isDir && !e.name.startsWith("_") && !e.name.startsWith("."))
-          .foreach(e => io.linkOrCopy(new File(src, e.name).getPath,
-            new File(dest.versionDir(destV), e.name).getPath))
-        FileSkipping.writeStatsNow(conf, dest.versionDir(destV),
-          reuse = FileSkipping.statsForDir(conf, src))
-        TableStats.readSidecar(io, src).foreach(
-          TableStats.writeSidecar(dest.io, dest.versionDir(destV), _))
-        if (io.exists(schemaFile(v).getPath))
-          io.copy(schemaFile(v).getPath, dest.schemaFile(destV).getPath)
-        // file names carry unchanged; only the dir component renames
-        if (hasDv(v)) {
-          io.list(dvDir(v).getPath).filter(!_.isDir).foreach(e =>
-            io.linkOrCopy(new File(dvDir(v), e.name).getPath,
-              new File(dest.dvDir(destV), e.name).getPath))
-          dest.writeDvSummary(destV,
-            dvSummary(v).map { case (_, f, c) => (f"v$destV%08d", f, c) })
-        }
+          .flatMap { e =>
+            val dstName = prefix + e.name
+            io.linkOrCopy(new File(src, e.name).getPath,
+              new File(dst, dstName).getPath)
+            srcStats.get(e.name).map(dstName -> _)
+          }
+      }.toMap
+      FileSkipping.writeStatsNow(conf, dst, reuse = reuse)
+      // NDV sidecars carry too: a key folded from several source dirs
+      // max-merges their registers (union of sketches IS the sketch of
+      // the union); any source dir without one -> skip, analyze
+      // backfills
+      val srcNdv = es.map { case (_, rel) =>
+        TableStats.readSidecar(io, new File(path, rel))
+      }
+      if (srcNdv.nonEmpty && srcNdv.forall(_.isDefined)) {
+        val cols = srcNdv.flatMap(_.get.keys).distinct
+        TableStats.writeSidecar(dest.io, dst, cols.map { c =>
+          c -> srcNdv.map(_.get.getOrElse(c, TableStats.zero))
+            .reduce(TableStats.merged)
+        }.toMap)
+      }
+      (m, dstRel)
+    }
+    dest.writeManifest(destV, entries)
+    schemaAt(v).foreach(sc =>
+      dest.io.writeString(dest.schemaFile(destV).getPath, sc.json))
+    // deletion vector: entries remap with the same (dir, prefix) the
+    // data files did. The parquet links verbatim while every file keeps
+    // its (sub, name) identity — a month dir keeps its name — and
+    // rewrites through Spark when one changes (multi-commit folding, or
+    // an unpartitioned key whose sub is the commit dir itself)
+    val sum = dvSummary(v)
+    if (sum.nonEmpty) {
+      val remapped = sum.map { case (d, f, c) =>
+        val (nd, pre) = dirMap(d); (nd, pre + f, c)
+      }
+      def ids(es: Seq[(String, String, Long)]) = es.map(e => (dvSubOf(e._1), e._2))
+      if (ids(remapped) == ids(sum)) {
+        io.list(dvDir(v).getPath).filter(!_.isDir).foreach(e =>
+          io.linkOrCopy(new File(dvDir(v), e.name).getPath,
+            new File(dest.dvDir(destV), e.name).getPath))
+      } else {
+        // rename keyed by (sub, file): a write task emits same-named
+        // files into several month dirs, so file name alone is not a
+        // join identity
+        val ren = ids(sum).zip(ids(remapped)).map { case ((s0, f0), (s1, f1)) => (s0, f0, s1, f1) }
+        val sq = spark
+        import sq.implicits._
+        dvAt(v).get.join(ren.toDF("sub", "file", "nsub", "nf"), Seq("sub", "file"))
+          .select(col("nsub").as("sub"), col("nf").as("file"), col("idx"))
+          .coalesce(1).write.parquet(dest.dvDir(destV).getPath)
+      }
+      dest.writeDvSummary(destV, remapped)
     }
   }
 
@@ -1258,9 +1213,11 @@ final class CdcTable(
         .map { case (n, p) => s"$n\t$p" }.mkString("\n"))
 
   /** Drop expired history: version directories at or below the pointer
-    * that fall outside the newest `retainVersions`, then — partitioned
-    * layout — any commit directory at or below the pointer that no
-    * retained manifest references. NEVER touches a version number above
+    * that fall outside the newest `retainVersions`, then any commit
+    * directory at or below the pointer that no retained manifest
+    * references. A legacy full-copy version dir is also a data dir: it
+    * stays, whole and readable, while a retained manifest names it.
+    * NEVER touches a version number above
     * the pointer: those are reservations of writers that are either
     * in-flight (deleting them would corrupt a concurrent commit) or
     * crashed (reclaimed by the takeover step of [[mergeWithRetry]] when
@@ -1273,112 +1230,77 @@ final class CdcTable(
     * during one in-flight merge).
     */
   def expire(): Unit = currentVersion.foreach { cur =>
-    val live = versions.filter(_ <= cur).takeRight(retainVersions).toSet + cur
-    versions.filter(v => v <= cur && !live.contains(v))
+    val all = versions
+    val live = all.filter(_ <= cur).takeRight(retainVersions).toSet + cur
+    // a concurrent writer's expire may have just removed a live version
+    val referencedDirs = live.flatMap { v =>
+      try manifest(v).map(_._2)
+      catch { case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => Nil }
+    }
+    all.filter(v => v <= cur && !live.contains(v) &&
+        !referencedDirs.contains(versionDir(v).getName))
       .foreach { v =>
         io.deleteRecursively(versionDir(v).getPath)
         if (io.exists(dvVersionDir(v).getPath))
           io.deleteRecursively(dvVersionDir(v).getPath)
       }
-    if (partitionSource.isDefined) {
-      // GC at MONTH-DIR granularity, not just whole commit dirs: a
-      // dropMonths retention cut unlists a month whose commit dir the
-      // kept months still reference — once no retained manifest names
-      // the month's rel path, its subdir frees even though its commit
-      // dir survives (retention that never frees storage isn't
-      // retention). A commit dir with no referenced months at all still
-      // goes wholesale.
-      val referencedDirs = live.filter(v => io.exists(manifestFile(v).getPath))
-        .flatMap(v => manifest(v).map(_._2))
-      val referencedCommits = referencedDirs.map(_.takeWhile(_ != '/'))
-      io.list(path)
-        .filter(e => e.isDir && e.name.matches("c\\d{8}"))
-        .filter(e => e.name.stripPrefix("c").toLong <= cur)
-        .foreach { e =>
-          if (!referencedCommits.contains(e.name))
-            io.deleteRecursively(new File(path, e.name).getPath)
-          else
-            io.list(new File(path, e.name).getPath)
-              .filter(s => s.isDir && s.name.startsWith(s"$PartCol="))
-              .filterNot(s => referencedDirs.contains(s"${e.name}/${s.name}"))
-              .foreach(s => io.deleteRecursively(
-                new File(new File(path, e.name), s.name).getPath))
-        }
-    }
+    // GC at MONTH-DIR granularity, not just whole commit dirs: a
+    // dropMonths retention cut unlists a month whose commit dir the
+    // kept months still reference — once no retained manifest names
+    // the month's rel path, its subdir frees even though its commit
+    // dir survives (retention that never frees storage isn't
+    // retention). A commit dir with no referenced keys at all still
+    // goes wholesale.
+    val referencedCommits = referencedDirs.map(_.takeWhile(_ != '/'))
+    io.list(path)
+      .filter(e => e.isDir && e.name.matches("c\\d{8}"))
+      .filter(e => e.name.stripPrefix("c").toLong <= cur)
+      .foreach { e =>
+        if (!referencedCommits.contains(e.name))
+          io.deleteRecursively(new File(path, e.name).getPath)
+        else if (!referencedDirs.contains(e.name))
+          io.list(new File(path, e.name).getPath)
+            .filter(s => s.isDir && s.name.startsWith(s"$PartCol="))
+            .filterNot(s => referencedDirs.contains(s"${e.name}/${s.name}"))
+            .foreach(s => io.deleteRecursively(
+              new File(new File(path, e.name), s.name).getPath))
+      }
   }
 
   /** Initialize (overwrite) the table with `df` as a new version. */
   def init(df: DataFrame): Unit = withOp("CREATE") {
-    val expected = currentVersion
-    partitionSource match {
-      case Some(_) =>
-        val wp = distributeByMonth(withPart(df))
-        commitPartitioned(wp, replaced = allMonths(expected), expected)
-      case None => commitFull(df, expected)
-    }
+    commit(distributeByMonth(withPart(df)), carried = Nil, currentVersion)
   }
 
-  private def allMonths(at: Option[Long]): Set[String] =
-    at.map(manifest(_).map(_._1).toSet).getOrElse(Set.empty)
-
-  /** Keyless append (reference K3/K4). Partitioned: a new commit dir per
-    * batch whose months ADD manifest entries (no month is replaced — a
-    * month can span many commit dirs until compaction folds them).
-    * Unpartitioned: a new version directory that hard-links the previous
-    * version's data files (metadata-only, no data copy) and appends the
-    * batch's part-files beside them — so the batch commits through the
-    * same atomic-pointer protocol, prior versions stay byte-immutable for
-    * time travel, and a crashed append leaves only a pointer-unreachable
-    * orphan that [[expire]] collects.
+  /** Keyless append (reference K3/K4): the batch lands in a new commit
+    * dir whose keys ADD manifest entries — no key is replaced, so a key
+    * can span many commit dirs until compaction folds them, and no
+    * prior data file is read, rewritten or copied. The batch commits
+    * through the same atomic-pointer protocol; a crashed append leaves
+    * only a pointer-unreachable orphan that [[expire]] collects.
     */
   def append(df0: DataFrame): Unit = withOp("APPEND") {
     val df = alignAppendTypes(df0)
-    partitionSource match {
-      case Some(_) =>
-        exists: Unit // legacy hive-at-root guard (throws); bootstrap on a truly-empty dir is fine
-        commitPartitioned(distributeByMonth(withPart(df)), replaced = Set.empty, currentVersion)
-      case None =>
-        if (!exists) init(df)
-        else {
-          enforceConstraints(df)
-          val cur = currentOrThrow
-          val next = cur + 1
-          reserveOrConflict(next)
-          val nd = versionDir(next)
-          io.list(versionDir(cur).getPath)
-            .filter(e => !e.isDir && !e.name.startsWith("_") && !e.name.startsWith("."))
-            .foreach(e => io.linkOrCopy(new File(versionDir(cur), e.name).getPath,
-              new File(nd, e.name).getPath))
-          withInt64Timestamps {
-            writer(df).mode(SaveMode.Append).parquet(nd.getPath)
-          }
-          // sidecar: carried (hard-linked, byte-identical, same names)
-          // files reuse the previous version's stats; only the appended
-          // batch's fresh files pay a footer read — at commit time
-          val conf = spark.sessionState.newHadoopConf()
-          FileSkipping.writeStatsNow(conf, nd,
-            reuse = FileSkipping.statsForDir(conf, versionDir(cur)))
-          // NDV sidecar at delta cost: prior registers ∪ the batch's
-          writeNdvSidecarAppended(cur, next, df)
-          // schema sidecar: carried columns ∪ the batch's (a batch can add
-          // columns; alignAppendTypes already rejected type changes)
-          val priorFields = schemaAt(cur).map(_.fields).getOrElse(Array.empty)
-          io.writeString(schemaFile(next).getPath,
-            org.apache.spark.sql.types.StructType(
-              priorFields ++ df.schema.fields.filterNot(f =>
-                priorFields.exists(_.name == f.name))).json)
-          // carried (hard-linked) files keep their deleted positions
-          carryDv(cur, next, keepDirs = Set(f"v$cur%08d"), renameDir = _ => f"v$next%08d")
-          commitPointer(next)
-        }
-    }
+    exists: Unit // legacy hive-at-root guard (throws); bootstrap on a truly-empty dir is fine
+    val cur = currentVersion
+    commit(distributeByMonth(withPart(df)), carried = cur.map(manifest).getOrElse(Nil), cur)
     maybeAutoCompact()
   }
 
+  /** `df` with its partition key minted as `__part_month`; an
+    * unpartitioned frame mints none (its one key is implicit).
+    */
   private def withPart(df: DataFrame): DataFrame = partitionSource match {
     case Some(src) => df.withColumn(PartCol, date_format(col(src), partPattern))
     case None      => df
   }
+
+  /** The key columns a commit frame carries ([[withPart]]): the commit
+    * writes one hive dir per value and the write shapes distribute by
+    * them; none on an unpartitioned table.
+    */
+  private def keyCols: Seq[String] =
+    if (partitionSource.isDefined) Seq(PartCol) else Nil
 
   /** Hash-distribute an UN-SHAPED commit batch by its month key before
     * the hive dynamic-partition write (the Iceberg
@@ -1397,7 +1319,8 @@ final class CdcTable(
     * would destroy), and a batch the CALLER explicitly repartitioned or
     * sorted keeps its shape — pre-clustering an init batch so file
     * min/max stats prune (the FileSkipping discipline) is a supported
-    * idiom this distribution must not silently undo.
+    * idiom this distribution must not silently undo. An unpartitioned
+    * frame writes unshuffled into its commit's one data dir.
     */
   private def distributeByMonth(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
@@ -1407,18 +1330,18 @@ final class CdcTable(
       case p: Project => userShaped(p.child) // withPart/projections keep partitioning
       case _ => false
     }
-    if (userShaped(df.queryExecution.logical)) df
+    if (keyCols.isEmpty || userShaped(df.queryExecution.logical)) df
     else df.hint("rebalance", col(PartCol))
   }
 
   /** Align an appended batch to the CURRENT stored column types: a
     * NARROWER batch column upcasts losslessly to the stored type; a
     * WIDER or incompatible batch column rejects loudly — append cannot
-    * evolve column types (the unpartitioned layout hard-links prior
-    * files beside the new ones, and parquet schema merging cannot
-    * reconcile e.g. int files with long files in one directory). Widen
-    * through [[merge]] (which rewrites at the union type) or an explicit
-    * migration.
+    * evolve column types: it rewrites no stored file, and the multi-dir
+    * file scans ([[readWhere]], [[readFiltered]], [[countWhere]]) read
+    * every live file in ONE mergeSchema relation, which cannot reconcile
+    * e.g. int files with long files. Widen through [[merge]] (which
+    * rewrites at the union type) or an explicit migration.
     */
   private def alignAppendTypes(df: DataFrame): DataFrame = currentVersion match {
     case None => df
@@ -1428,7 +1351,7 @@ final class CdcTable(
       // BASELINE.md "Write-path (CDC/DML) scaling slopes", r11 refresh);
       // the relation-based fallback covers pre-sidecar tables
       val curT = schemaAt(v).map(_.map(f => f.name -> f.dataType).toMap)
-        .getOrElse(readAt(v).schema.map(f => f.name -> f.dataType).toMap)
+        .getOrElse(readVersion(v).schema.map(f => f.name -> f.dataType).toMap)
       val bad = scala.collection.mutable.Buffer.empty[String]
       val out = df.schema.fields.foldLeft(df) { (d, f) =>
         curT.get(f.name) match {
@@ -1451,9 +1374,9 @@ final class CdcTable(
   // ----------------------------------------------------------------- merge
 
   /** MERGE a raw CDC batch: latest-wins dedup on (keys, tsCol), then
-    * join-based upsert/delete, rewriting only touched partitions (or
-    * committing one new full version). Idempotent: re-applying the same
-    * batch is a no-op.
+    * join-based upsert/delete, rewriting only touched partition keys (an
+    * unpartitioned table's one key: the whole table). Idempotent:
+    * re-applying the same batch is a no-op.
     *
     * An EMPTY batch (zero rows after dedup) is a COMPLETE no-op: no
     * version is burned, and — deliberate semantics change vs pre-r10
@@ -1492,7 +1415,7 @@ final class CdcTable(
     // otherwise be recomputed 3x), and it is delta-sized by assumption
     val deduped = dedupedIn.localCheckpoint()
     // an EMPTY batch is a complete no-op: without this, it would still
-    // burn a version — a full table rewrite on the unpartitioned layout —
+    // burn a version — a full table rewrite on an unpartitioned table —
     // for zero row changes (reachable from maintenance refreshes that net
     // nothing, idempotent replays, and quiet streaming windows). The
     // isEmpty probe reads the already-materialized checkpoint, not the
@@ -1502,12 +1425,13 @@ final class CdcTable(
     // concurrent commit between here and the reservation surfaces as a
     // CommitConflictException instead of a lost update
     val expected = currentOrThrow
-
-    partitionSource match {
+    val entries = manifest(expected)
+    // Partition-pruned copy-on-write: the keys the batch touches are
+    // read, merged, and re-manifested; everything else carries over. An
+    // unpartitioned table has one key, so it is touched whole.
+    val touched: Set[String] = partitionSource match {
+      case None => entries.map(_._1).toSet
       case Some(src) =>
-        // Partition-pruned copy-on-write: months present in the batch are
-        // read, merged, and re-manifested; everything else carries over.
-        val entries = manifest(expected)
         val batchMonths = deduped
           .select(date_format(col(src), partPattern).as(PartCol))
           .distinct().as[String](org.apache.spark.sql.Encoders.STRING).collect().toSeq
@@ -1523,18 +1447,14 @@ final class CdcTable(
           .join(broadcast(deduped.select(keys.map(col): _*).distinct()), keys, "left_semi")
           .select(col(PartCol))
           .distinct().as[String](org.apache.spark.sql.Encoders.STRING).collect().toSeq
-        val touched = (batchMonths ++ keyMonths).distinct.filter(_ != null).toSet
-        val existing =
-          if (entries.exists(e => touched.contains(e._1)))
-            readParts(entries, Some(touched), expected).drop(PartCol)
-          else deduped.drop(CdcMerge.OpColumn).filter(lit(false))
-        val merged = distributeByMonth(withPart(CdcMerge.merge(existing, deduped, keys)))
-        commitPartitioned(merged, replaced = touched, Some(expected))
-      case None =>
-        // versioned commit: the new version materializes fully before the
-        // pointer moves, so no read-our-input hazard and no crash window
-        commitFull(CdcMerge.merge(readAt(expected), deduped, keys), Some(expected))
+        (batchMonths ++ keyMonths).distinct.filter(_ != null).toSet
     }
+    val existing =
+      if (entries.exists(e => touched.contains(e._1)))
+        readParts(entries, Some(touched), expected).drop(PartCol)
+      else deduped.drop(CdcMerge.OpColumn).filter(lit(false))
+    val merged = distributeByMonth(withPart(CdcMerge.merge(existing, deduped, keys)))
+    commit(merged, carried = entries.filterNot(e => touched(e._1)), Some(expected))
     maybeAutoCompact()
   }
 
@@ -1662,30 +1582,31 @@ final class CdcTable(
   /** The deletion vector of version `v` as a DataFrame
     * `(sub, file, idx)`: row positions (parquet row index within the
     * named data file) that are DELETED as of `v`. None when the version
-    * has no vector.
+    * has no vector. A legacy full-copy version recorded an empty sub for
+    * its one dir; it reads as that dir's name.
     */
   private def dvAt(v: Long): Option[DataFrame] =
     if (!hasDv(v)) None
-    else Some(spark.read.parquet(dvDir(v).getPath))
+    else {
+      val dv = spark.read.parquet(dvDir(v).getPath)
+      Some(if (io.exists(manifestFile(v).getPath)) dv
+        else dv.withColumn("sub", lit(versionDir(v).getName)))
+    }
 
   /** The carry-stable sub-directory discriminator of a data file's
-    * identity. File NAMES are not table-unique on the partitioned
-    * layout: one write task emits a same-named part file into EVERY
-    * month dir its rows hit, so a (file, idx) match alone would delete
-    * row idx of the wrong month's twin. The month dir name
-    * (`__part_month=...`) disambiguates and survives every carry (a
-    * manifest re-point keeps the commit dir verbatim; across commits the
-    * writer UUID differs). Unpartitioned versions hold ONE dir whose
-    * files are name-unique, and the dir itself renames on hard-link
-    * carry — so the discriminator there is the empty string.
+    * identity: the name of the directory holding it. File NAMES are not
+    * table-unique: one write task emits a same-named part file into
+    * EVERY month dir its rows hit, so a (file, idx) match alone would
+    * delete row idx of the wrong month's twin. The month dir name
+    * (`__part_month=...`) — or, unpartitioned, the commit dir name —
+    * disambiguates and survives every manifest re-point (the data dir
+    * is kept verbatim; across commits the writer UUID differs).
     */
   private def dvSubOf(dirRel: String): String =
-    if (partitionSource.isDefined) dirRel.substring(dirRel.lastIndexOf('/') + 1) else ""
+    dirRel.substring(dirRel.lastIndexOf('/') + 1)
 
   private def dvSubExpr: org.apache.spark.sql.Column =
-    if (partitionSource.isDefined)
-      element_at(split(col("_metadata.file_path"), "/"), -2)
-    else lit("")
+    element_at(split(col("_metadata.file_path"), "/"), -2)
 
   /** Filter version `v`'s deletion vector out of a RAW file scan (the
     * `_metadata` struct must still be resolvable — call this before any
@@ -1716,19 +1637,17 @@ final class CdcTable(
   /** Carry version `from`'s deletion vector to reserved version `to`.
     * `keepDirs` = the data dirs `to` still references (entries for
     * replaced/dropped dirs fall away — their files were rewritten with
-    * the deletes applied); `renameDir` remaps surviving dir names (the
-    * unpartitioned layout re-links data files into the new version dir,
-    * so the dir component changes while file names stay). When every
-    * entry survives, the vector's parquet files LINK (metadata-only);
-    * a partial carry rewrites the (small) vector through Spark.
+    * the deletes applied). When every entry survives, the vector's
+    * parquet files LINK (metadata-only); a partial carry, or one from a
+    * legacy version (whose subs [[dvAt]] renames), rewrites the (small)
+    * vector through Spark.
     */
-  private def carryDv(from: Long, to: Long, keepDirs: Set[String],
-                      renameDir: String => String = identity): Unit = {
+  private def carryDv(from: Long, to: Long, keepDirs: Set[String]): Unit = {
     val sum = dvSummary(from)
     if (sum.isEmpty) return
     val kept = sum.filter(e => keepDirs.contains(e._1))
     if (kept.isEmpty) return
-    if (kept.size == sum.size) {
+    if (kept.size == sum.size && io.exists(manifestFile(from).getPath)) {
       io.list(dvDir(from).getPath).filter(!_.isDir).foreach(e =>
         io.linkOrCopy(new File(dvDir(from), e.name).getPath,
           new File(dvDir(to), e.name).getPath))
@@ -1738,13 +1657,29 @@ final class CdcTable(
         .filter(concat(col("sub"), lit("/"), col("file")).isin(keepKeys: _*))
         .coalesce(1).write.parquet(dvDir(to).getPath)
     }
-    writeDvSummary(to, kept.map { case (d, f, c) => (renameDir(d), f, c) })
+    writeDvSummary(to, kept)
   }
 
   /** The data directories of version `v` as (rel path, dir). */
-  private def dataDirsAt(v: Long): Seq[(String, File)] = partitionSource match {
-    case Some(_) => manifest(v).map(e => e._2 -> new File(path, e._2))
-    case None    => Seq(f"v$v%08d" -> versionDir(v))
+  private def dataDirsAt(v: Long): Seq[(String, File)] =
+    manifest(v).map(_._2).distinct.map(rel => rel -> new File(path, rel))
+
+  /** Per-row tag of a raw file scan's data dir: the file path's last two
+    * directory segments, matched driver-side against [[dirTagOf]].
+    */
+  private def dirTagExpr: org.apache.spark.sql.Column = {
+    val parts = split(col("_metadata.file_path"), "/")
+    concat_ws("/", element_at(parts, -3), element_at(parts, -2))
+  }
+
+  /** [[dirTagExpr]]'s value for a manifest data dir. Unique within a
+    * manifest: a month dir name recurs across commit dirs, so the tag
+    * keeps the commit dir too, and a one-segment dir pairs with the
+    * table dir's name.
+    */
+  private def dirTagOf(rel: String): String = {
+    val full = s"${new File(path).getName}/$rel"
+    full.substring(full.lastIndexOf('/', full.lastIndexOf('/') - 1) + 1)
   }
 
   /** Predicate DELETE, MERGE-ON-READ: instead of rewriting every file
@@ -1752,7 +1687,7 @@ final class CdcTable(
     * rows' (file, row position) in a deletion vector committed WITH the
     * new version; reads anti-join the vector out. Deleting 100 rows from
     * a 100 TB table writes kilobytes — data files carry forward
-    * untouched (hard links / manifest re-point), prior versions stay
+    * untouched (a manifest re-point), prior versions stay
     * byte-immutable for time travel, and [[compact]] (or any
     * copy-on-write rewrite touching the files) materializes the vector
     * away. The Delta deletion-vector / Iceberg v2 position-delete
@@ -1774,19 +1709,12 @@ final class CdcTable(
     val dirs = dataDirsAt(cur)
     if (dirs.isEmpty) return
     // ONE multi-path scan over every data dir, with the dir identity
-    // derived per row from `_metadata.file_path` (the dvSubExpr
-    // convention): the manifest rel is `commitDir/monthDir` on the
-    // partitioned layout and the bare version dir otherwise — i.e. the
-    // last two (resp. one) path segments before the file name. The
-    // previous shape unioned one relation PER MANIFEST ENTRY; a
-    // months x commits table paid a driver-side footer read and a scan
-    // node per entry (measured at sf0.1: 21.5 s of the k_analyze_ndv
-    // fixture build was this union's planning + per-relation listing).
-    val pathParts = split(col("_metadata.file_path"), "/")
-    val dirExpr =
-      if (partitionSource.isDefined)
-        concat_ws("/", element_at(pathParts, -3), element_at(pathParts, -2))
-      else element_at(pathParts, -2)
+    // derived per row from `_metadata.file_path` ([[dirTagExpr]], mapped
+    // back to the manifest rel driver-side). The previous shape unioned
+    // one relation PER MANIFEST ENTRY; a months x commits table paid a
+    // driver-side footer read and a scan node per entry (measured at
+    // sf0.1: 21.5 s of the k_analyze_ndv fixture build was this union's
+    // planning + per-relation listing).
     // Read schema: the sidecar UNION schema when the table has one (every
     // commit since the sidecars landed writes it), parquet mergeSchema
     // only as the legacy fallback. The one multi-path scan spans ALL
@@ -1806,7 +1734,7 @@ final class CdcTable(
     }
     val scans = reader
       .parquet(dirs.map(_._2.getPath): _*)
-      .withColumn(DvDirCol, dirExpr)
+      .withColumn(DvDirCol, dirTagExpr)
       .withColumn(DvSubCol, dvSubExpr)
       .withColumn(DvFileCol, col("_metadata.file_name"))
       .withColumn(DvIdxCol, col("_metadata.row_index"))
@@ -1821,40 +1749,20 @@ final class CdcTable(
     // driver-side but BOUNDED: one row per (dir, file) holding a deleted
     // position — at most the table's file count, the same scale as the
     // stats sidecars the driver already handles
+    val relByTag = dirs.map { case (rel, _) => dirTagOf(rel) -> rel }.toMap
     val perFile = matched.groupBy("dir", "file").count()
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+      .collect().map(r => (relByTag(r.getString(0)), r.getString(1), r.getLong(2))).toSeq
     if (perFile.isEmpty) return // no matches: no version burned
     val next = cur + 1
     reserveOrConflict(next)
-    // carry the DATA untouched: the whole point
-    partitionSource match {
-      case Some(_) =>
-        writeManifest(next, manifest(cur))
-        if (io.exists(schemaFile(cur).getPath))
-          io.copy(schemaFile(cur).getPath, schemaFile(next).getPath)
-      case None =>
-        io.list(versionDir(cur).getPath)
-          .filter(e => !e.isDir && !e.name.startsWith("_") && !e.name.startsWith("."))
-          .foreach(e => io.linkOrCopy(new File(versionDir(cur), e.name).getPath,
-            new File(versionDir(next), e.name).getPath))
-        val conf = spark.sessionState.newHadoopConf()
-        FileSkipping.writeStatsNow(conf, versionDir(next),
-          reuse = FileSkipping.statsForDir(conf, versionDir(cur)))
-        if (io.exists(schemaFile(cur).getPath))
-          io.copy(schemaFile(cur).getPath, schemaFile(next).getPath)
-    }
-    // vector = previous vector ∪ fresh positions; summary merges counts.
-    // The unpartitioned dir component renames with the version; file
-    // names (the join identity) are carry-stable.
-    val renamed: String => String = partitionSource match {
-      case Some(_) => identity
-      case None    => _ => f"v$next%08d"
-    }
+    // carry the DATA untouched — a manifest re-point: the whole point
+    writeManifest(next, manifest(cur))
+    copySchema(cur, next)
+    // vector = previous vector ∪ fresh positions; summary merges counts
     val fresh = matched.drop("dir")
     val newDv = dvAt(cur).fold(fresh)(_.unionByName(fresh))
     newDv.coalesce(1).write.parquet(dvDir(next).getPath)
-    val merged = (dvSummary(cur).map { case (d, f, c) => (renamed(d), f, c) } ++
-      perFile.map { case (d, f, c) => (renamed(d), f, c) })
+    val merged = (dvSummary(cur) ++ perFile)
       .groupBy(e => (e._1, e._2)).map { case ((d, f), es) => (d, f, es.map(_._3).sum) }
       .toSeq
     writeDvSummary(next, merged)
@@ -1882,8 +1790,7 @@ final class CdcTable(
     val next = cur + 1
     reserveOrConflict(next)
     writeManifest(next, kept)
-    if (io.exists(schemaFile(cur).getPath))
-      io.copy(schemaFile(cur).getPath, schemaFile(next).getPath)
+    copySchema(cur, next)
     carryDv(cur, next, keepDirs = kept.map(_._2).toSet)
     commitPointer(next)
   }
@@ -1906,51 +1813,21 @@ final class CdcTable(
     old
   }
 
-  /** Materialize the deletion vector NOW, rewriting ONLY the files that
-    * carry deleted positions: vectored files re-write without their
-    * deleted rows, every other data file carries forward untouched
-    * (hard link / manifest re-point — partitioned tables rewrite only
-    * the months holding vectored dirs). The targeted counterpart of a
-    * full [[compact]]: merge-on-read debt clears at cost proportional to
-    * the DEBT-CARRYING files, not the table. No vector → no-op, no
+  /** Materialize the deletion vector NOW, rewriting ONLY the data dirs
+    * that carry deleted positions: their rows re-write without the
+    * deleted ones into one new commit dir, and every other dir carries
+    * forward untouched by manifest re-point. The targeted counterpart of
+    * a full [[compact]]: merge-on-read debt clears at cost proportional
+    * to the DEBT-CARRYING dirs, not the table. No vector → no-op, no
     * version burned.
     */
   def materializeDeletes(): Unit = withOp("MATERIALIZE") {
     val cur = currentOrThrow
-    val sum = dvSummary(cur)
-    if (sum.isEmpty) return
-    partitionSource match {
-      case Some(_) =>
-        val vectoredDirs = sum.map(_._1).toSet
-        val entries = manifest(cur)
-        val months = entries.filter(e => vectoredDirs.contains(e._2)).map(_._1).toSet
-        val existing = readParts(entries, Some(months), cur).drop(PartCol)
-        commitPartitioned(withPart(existing), replaced = months, Some(cur))
-      case None =>
-        val vd = versionDir(cur)
-        val vectored = sum.map(_._2).toSet
-        val next = cur + 1
-        reserveOrConflict(next)
-        val nd = versionDir(next)
-        val carried = io.list(vd.getPath)
-          .filter(e => !e.isDir && !e.name.startsWith("_") && !e.name.startsWith(".") &&
-            !vectored.contains(e.name))
-        carried.foreach(e => io.linkOrCopy(new File(vd, e.name).getPath,
-          new File(nd, e.name).getPath))
-        val rewritten = applyDv(spark.read.option("mergeSchema", "true")
-          .parquet(vectored.toSeq.sorted.map(f => new File(vd, f).getPath): _*), cur)
-        withInt64Timestamps {
-          writer(rewritten).mode(SaveMode.Append).parquet(nd.getPath)
-        }
-        val conf = spark.sessionState.newHadoopConf()
-        FileSkipping.writeStatsNow(conf, nd,
-          reuse = FileSkipping.statsForDir(conf, vd).view
-            .filterKeys(!vectored.contains(_)).toMap)
-        if (io.exists(schemaFile(cur).getPath))
-          io.copy(schemaFile(cur).getPath, schemaFile(next).getPath)
-        // vectored files were rewritten: no vector carries
-        commitPointer(next)
-    }
+    val vectored = dvSummary(cur).map(_._1).toSet
+    if (vectored.isEmpty) return
+    val (rewritten, carried) = manifest(cur).partition(e => vectored(e._2))
+    val existing = readParts(rewritten, None, cur).drop(PartCol)
+    commit(withPart(existing), carried, Some(cur))
   }
 
   /** Debt-policy face of [[materializeDeletes]]: materialize when the
@@ -1973,71 +1850,32 @@ final class CdcTable(
 
   // ------------------------------------------------- column NDV statistics
 
-  /** Registers of `cols` over `df`'s rows, driver-collected (one job,
-    * ≤ cols × 256 bytes — see [[TableStats.regsByGroup]]).
+  /** NDV sidecars for exactly the data dirs commit `v` produced
+    * (carried dirs keep theirs — the dirs are immutable): ONE job over
+    * the read-back of the written dirs (columnar, tracked columns only,
+    * pages cache-hot — same timing argument as the footer-stats
+    * sidecars), grouped by month on a partitioned table and collected at
+    * keys × columns × 256 bytes. A tracked column the data lacks records
+    * zero registers (an absent column HAS zero distinct values), so
+    * analyze never rescans a dir that predates a schema evolution.
     */
-  private def ndvRegsOf(df: DataFrame, cols: Seq[String]): Map[String, Array[Byte]] =
-    if (cols.isEmpty) Map.empty
-    else TableStats.collectRegs(TableStats.regsByGroup(df, Nil, cols), Nil)
-      .getOrElse(Seq.empty, Map.empty)
-
-  /** Every tracked column's registers over `df`, zero registers for
-    * columns `df` does not carry (an all-null/absent column HAS zero
-    * distinct values — recording that keeps the sidecar complete, so
-    * analyze never rescans a dir that predates a schema evolution).
-    */
-  private def ndvRegsComplete(df: DataFrame): Map[String, Array[Byte]] = {
-    val present = ndvColumns.filter(df.columns.contains)
-    val got = ndvRegsOf(df, present)
-    ndvColumns.map(c => c -> got.getOrElse(c, TableStats.zero)).toMap
-  }
-
-  /** NDV sidecar for a freshly-committed unpartitioned version: a
-    * read-back of the just-written directory (columnar, tracked columns
-    * only, pages cache-hot — same timing argument as the footer-stats
-    * sidecar above it).
-    */
-  private def writeNdvSidecarFull(v: Long): Unit = if (ndvColumns.nonEmpty)
-    TableStats.writeSidecar(io, versionDir(v),
-      ndvRegsComplete(spark.read.parquet(versionDir(v).getPath)))
-
-  /** NDV sidecars for exactly the month directories commit `v` produced
-    * (carried months keep theirs — the dirs are immutable): ONE grouped
-    * job over the read-back of the written months, collected at
-    * months × columns × 256 bytes.
-    */
-  private def writeNdvSidecarsPartitioned(v: Long, outMonths: Seq[String]): Unit =
-    if (ndvColumns.nonEmpty && outMonths.nonEmpty) {
-      val base = commitDir(v)
-      val df = spark.read.option("basePath", base.getPath)
-        .parquet(outMonths.map(m => new File(base, s"$PartCol=$m").getPath): _*)
-        .withColumn(PartCol, col(PartCol).cast("string"))
+  private def writeNdvSidecars(v: Long, outKeys: Seq[String]): Unit =
+    if (ndvColumns.nonEmpty && outKeys.nonEmpty) {
+      val scan = spark.read.option("basePath", commitDir(v).getPath)
+        .parquet(outKeys.map(k => new File(path, relDir(v, k)).getPath): _*)
+      val groups = scan.columns.toSeq.filter(_ == PartCol)
+      val df = if (groups.isEmpty) scan else scan.withColumn(PartCol, col(PartCol).cast("string"))
       val present = ndvColumns.filter(df.columns.contains)
-      val byMonth =
+      val byKey =
         if (present.isEmpty) Map.empty[Seq[String], Map[String, Array[Byte]]]
-        else TableStats.collectRegs(
-          TableStats.regsByGroup(df, Seq(PartCol), present), Seq(PartCol))
-      outMonths.foreach { m =>
-        val got = byMonth.getOrElse(Seq(m), Map.empty[String, Array[Byte]])
-        TableStats.writeSidecar(io, new File(base, s"$PartCol=$m"),
+        else TableStats.collectRegs(TableStats.regsByGroup(df, groups, present), groups)
+      outKeys.foreach { k =>
+        val got = byKey.getOrElse(if (groups.isEmpty) Nil else Seq(k),
+          Map.empty[String, Array[Byte]])
+        TableStats.writeSidecar(io, new File(path, relDir(v, k)),
           ndvColumns.map(c => c -> got.getOrElse(c, TableStats.zero)).toMap)
       }
     }
-
-  /** Unpartitioned APPEND keeps delta cost: the next version's directory
-    * is the prior files (hard-linked, byte-identical) plus the batch, and
-    * registers max-merge — so the new sidecar is prior-sidecar ∪
-    * regs(batch) without touching carried data. No prior sidecar → skip;
-    * [[analyze]] backfills by scanning once.
-    */
-  private def writeNdvSidecarAppended(prev: Long, next: Long, batch: DataFrame): Unit =
-    if (ndvColumns.nonEmpty)
-      TableStats.readSidecar(io, versionDir(prev)).foreach { prior =>
-        val fresh = ndvRegsComplete(batch)
-        TableStats.writeSidecar(io, versionDir(next),
-          ndvColumns.map(c => c -> TableStats.merged(
-            prior.getOrElse(c, TableStats.zero), fresh(c))).toMap)
-      }
 
   private def colStatsFile(v: Long) = new File(versionDir(v), ColStatsName)
 
@@ -2086,31 +1924,20 @@ final class CdcTable(
     }
     if (needScan.nonEmpty) {
       // ONE multi-dir read (mergeSchema absorbs evolution across dirs;
-      // absent columns null out, and nulls never touch a register). The
-      // runtime dir tag is the file's last TWO path segments — commit
-      // dir + partition dir (`cNNNNNNNN/__part_month=M`) — because a
-      // month's PARTITION dir name alone recurs across commit dirs on
+      // absent columns null out, and nulls never touch a register),
+      // grouped by the runtime dir tag ([[dirTagExpr]]): a month's
+      // PARTITION dir name alone recurs across commit dirs on
       // append-only partitioned tables (each append() lands the month
       // under its own commit; the manifest then lists several dirs for
-      // one month). The two-segment tag is unique by construction: the
-      // manifest never lists one (commit, partition) dir twice, and the
-      // unpartitioned layout holds one dir per version (its tag pairs
-      // the table dir name with the version dir — constant prefix,
-      // unique suffix).
-      def tagOf(rel: String) =
-        if (rel.contains('/')) rel.substring(rel.lastIndexOf('/', rel.lastIndexOf('/') - 1) + 1)
-        else s"${new File(path).getName}/$rel"
-      val relByTag = needScan.map { case (rel, _, _) => tagOf(rel) -> rel }.toMap
+      // one month), so the tag keeps the commit dir too.
+      val relByTag = needScan.map { case (rel, _, _) => dirTagOf(rel) -> rel }.toMap
       require(relByTag.size == needScan.size,
         s"duplicate data-dir tags within version $cur of $path — cannot tag the batched scan")
       val raw = spark.read.option("mergeSchema", "true")
         .parquet(needScan.map(_._2.getPath).toSeq: _*)
       val present = ndvColumns.filter(raw.columns.contains)
-      val dirTag = concat_ws("/",
-        element_at(split(col("_metadata.file_path"), "/"), -3),
-        element_at(split(col("_metadata.file_path"), "/"), -2))
       val tagged = raw.select(
-        dirTag.as("__dir") +:
+        dirTagExpr.as("__dir") +:
           dvSubExpr.as(DvSubCol) +:
           col("_metadata.file_name").as(DvFileCol) +:
           col("_metadata.row_index").as(DvIdxCol) +:
@@ -2126,7 +1953,7 @@ final class CdcTable(
         else TableStats.collectRegs(
           TableStats.regsByGroup(live, Seq("__dir"), present), Seq("__dir"))
       needScan.foreach { case (rel, dir, dirty) =>
-        val got = byDir.getOrElse(Seq(tagOf(rel)), Map.empty[String, Array[Byte]])
+        val got = byDir.getOrElse(Seq(dirTagOf(rel)), Map.empty[String, Array[Byte]])
         val full = ndvColumns.map(c => c -> got.getOrElse(c, TableStats.zero)).toMap
         // backfill only clean dirs: a vector-applied read is not the
         // dir's true registers (HLL cannot subtract)
@@ -2202,7 +2029,7 @@ final class CdcTable(
   def delete(condition: org.apache.spark.sql.Column): Unit =
     withOp("DELETE")(rewrite(condition)(_.filter(!coalesce(condition, lit(false)))))
 
-  /** Shared COW core: find the partitions `condition` touches, apply
+  /** Shared COW core: find the partition keys `condition` touches, apply
     * `transform` to just their rows, commit. `transform` must preserve
     * non-matching rows (update keeps them as-is, delete keeps exactly
     * them).
@@ -2210,20 +2037,19 @@ final class CdcTable(
   private def rewrite(condition: org.apache.spark.sql.Column)
                      (transform: DataFrame => DataFrame): Unit = {
     val expected = currentOrThrow
-    partitionSource match {
+    val entries = manifest(expected)
+    val touched: Set[String] = partitionSource match {
       case Some(_) =>
-        val entries = manifest(expected)
-        val touched = readParts(entries, None, expected)
+        readParts(entries, None, expected)
           .filter(condition).select(col(PartCol))
           .distinct().as[String](org.apache.spark.sql.Encoders.STRING).collect().toSet
-        if (touched.nonEmpty) {
-          val existing = readParts(entries, Some(touched), expected).drop(PartCol)
-          commitPartitioned(withPart(transform(existing)), replaced = touched, Some(expected))
-        }
       case None =>
-        val df = readAt(expected)
-        if (!df.filter(condition).isEmpty)
-          commitFull(transform(df), Some(expected))
+        if (readVersion(expected).filter(condition).isEmpty) Set.empty
+        else entries.map(_._1).toSet
+    }
+    if (touched.nonEmpty) {
+      val existing = readParts(entries, Some(touched), expected).drop(PartCol)
+      commit(withPart(transform(existing)), entries.filterNot(e => touched(e._1)), Some(expected))
     }
   }
 
@@ -2236,11 +2062,11 @@ final class CdcTable(
     * evolution between the versions is handled by null-padding the
     * missing columns.
     *
-    * On a partitioned table both sides read ONLY the months whose
-    * manifest data-dir sets differ between the versions: an untouched
-    * month points at the very same committed directories in both
-    * manifests, so its rows are physically identical on both sides and
-    * can contribute no feed entry; a row that moved months rewrites both
+    * Both sides read ONLY the partition keys whose manifest data-dir
+    * sets differ between the versions: an untouched key points at the
+    * very same committed directories in both manifests, so its rows are
+    * physically identical on both sides and can contribute no feed
+    * entry; a row that moved months rewrites both
     * the origin and destination month, keeping the pruned diff exact.
     * At 100 TB this is what makes per-merge CDF (and the MV refresh
     * built on it) scale with the CHANGED months, not the table — the
@@ -2249,30 +2075,28 @@ final class CdcTable(
   def changesBetween(fromV: Long, toV: Long): DataFrame = {
     require(keys.nonEmpty,
       "change data feed needs merge keys: a keyless (append-only) table has no row identity to diff")
-    val (oldDf, newDf) = partitionSource match {
-      case Some(_) =>
-        val om = manifest(fromV).groupMap(_._1)(_._2)
-        val nm = manifest(toV).groupMap(_._1)(_._2)
-        // a month whose dir set is identical can still differ through its
-        // DELETION VECTOR (a vectored delete re-points the manifest
-        // unchanged). Per surviving dir the vector only GROWS (entries
-        // drop only when the dir itself is replaced — a manifest change),
-        // so comparing per-dir summary counts detects every difference.
-        def dvByDir(v: Long): Map[String, Long] =
-          dvSummary(v).groupBy(_._1).map { case (d, es) => d -> es.map(_._3).sum }
-        val odv = dvByDir(fromV)
-        val ndv = dvByDir(toV)
-        def monthOf(dir: String) = dir.substring(dir.indexOf('=') + 1)
-        val dvChanged = (odv.keySet ++ ndv.keySet)
-          .filter(d => odv.getOrElse(d, 0L) != ndv.getOrElse(d, 0L))
-          .map(monthOf)
-        val changed = (om.keySet ++ nm.keySet)
-          .filter(m => dvChanged.contains(m) ||
-            om.get(m).map(_.toSet) != nm.get(m).map(_.toSet))
-        (readParts(manifest(fromV).filter(e => changed(e._1)), None, fromV).drop(PartCol),
-          readParts(manifest(toV).filter(e => changed(e._1)), None, toV).drop(PartCol))
-      case None => (readAt(fromV), readAt(toV))
-    }
+    val oldEntries = manifest(fromV)
+    val newEntries = manifest(toV)
+    val om = oldEntries.groupMap(_._1)(_._2)
+    val nm = newEntries.groupMap(_._1)(_._2)
+    // a key whose dir set is identical can still differ through its
+    // DELETION VECTOR (a vectored delete re-points the manifest
+    // unchanged). Per surviving dir the vector only GROWS (entries
+    // drop only when the dir itself is replaced — a manifest change),
+    // so comparing per-dir summary counts detects every difference.
+    def dvByDir(v: Long): Map[String, Long] =
+      dvSummary(v).groupBy(_._1).map { case (d, es) => d -> es.map(_._3).sum }
+    val odv = dvByDir(fromV)
+    val ndv = dvByDir(toV)
+    val keyOfDir = (oldEntries ++ newEntries).map(_.swap).toMap
+    val dvChanged = (odv.keySet ++ ndv.keySet)
+      .filter(d => odv.getOrElse(d, 0L) != ndv.getOrElse(d, 0L))
+      .map(keyOfDir)
+    val changedKeys = (om.keySet ++ nm.keySet)
+      .filter(m => dvChanged.contains(m) ||
+        om.get(m).map(_.toSet) != nm.get(m).map(_.toSet))
+    val oldDf = readParts(oldEntries.filter(e => changedKeys(e._1)), None, fromV).drop(PartCol)
+    val newDf = readParts(newEntries.filter(e => changedKeys(e._1)), None, toV).drop(PartCol)
     // null-pad to the union of the read columns AND the versions' recorded
     // schemas: month pruning may drop the only files carrying an evolved
     // column, and the feed's schema must not depend on which months changed
@@ -2328,9 +2152,9 @@ final class CdcTable(
   /** RESTORE: make a retained historical version's content current again
     * by committing it as a NEW version (Delta-style rollback — history
     * moves forward, nothing is rewritten in place, and the bad versions
-    * between remain inspectable until they expire). The restored data
-    * re-materializes through the normal commit path, so the usual
-    * crash-safety and conflict rules apply.
+    * between remain inspectable until they expire). The new version
+    * commits through the normal protocol, so the usual crash-safety and
+    * conflict rules apply.
     */
   def restore(v: Long): Unit = restore(v, ifHeadIs = None)
 
@@ -2349,43 +2173,19 @@ final class CdcTable(
             s"validated v$want — a concurrent commit would be lost; re-validate")
     }
     if (v == expected) return
+    // metadata-only rollback: data dirs are immutable and expire() keeps
+    // every commit dir a retained manifest references, so the new version
+    // simply re-points at version v's directories — no data is read,
+    // rewritten or copied (Delta-style RESTORE)
+    val entries = manifest(v)
     val next = expected + 1
-    partitionSource match {
-      case Some(_) =>
-        // metadata-only rollback: data dirs are immutable and expire()
-        // keeps every commit dir a retained manifest references, so the
-        // new version simply re-points at version v's directories — no
-        // data is read or rewritten (Delta-style RESTORE)
-        val entries = manifest(v)
-        reserveOrConflict(next)
-        writeManifest(next, entries)
-        if (io.exists(schemaFile(v).getPath))
-          io.copy(schemaFile(v).getPath, schemaFile(next).getPath)
-        // a restored version resurrects WITH its deletion vector — the
-        // restored content is version v's VISIBLE rows
-        carryDv(v, next, keepDirs = entries.map(_._2).toSet)
-        commitPointer(next)
-      case None =>
-        // hard-link the restored version's files (same metadata-only
-        // trick as append's carry-over) — no data copy
-        val src = versionDir(v)
-        if (!io.exists(src.getPath))
-          throw new ExpiredVersionException(s"version $v of $path is expired or never existed")
-        reserveOrConflict(next)
-        io.list(src.getPath)
-          .filter(e => !e.isDir && !e.name.startsWith("_") && !e.name.startsWith("."))
-          .foreach(e => io.linkOrCopy(new File(src, e.name).getPath,
-            new File(versionDir(next), e.name).getPath))
-        // every restored file is a hard link of the source version under
-        // the same name — its sidecar carries over stat-for-stat
-        val conf = spark.sessionState.newHadoopConf()
-        FileSkipping.writeStatsNow(conf, versionDir(next),
-          reuse = FileSkipping.statsForDir(conf, src))
-        if (io.exists(schemaFile(v).getPath))
-          io.copy(schemaFile(v).getPath, schemaFile(next).getPath)
-        carryDv(v, next, keepDirs = Set(f"v$v%08d"), renameDir = _ => f"v$next%08d")
-        commitPointer(next)
-    }
+    reserveOrConflict(next)
+    writeManifest(next, entries)
+    copySchema(v, next)
+    // a restored version resurrects WITH its deletion vector — the
+    // restored content is version v's VISIBLE rows
+    carryDv(v, next, keepDirs = entries.map(_._2).toSet)
+    commitPointer(next)
   }
 
   /** Compaction (reference K10): rewrite to `target` files per partition,
@@ -2409,23 +2209,13 @@ final class CdcTable(
     require(clusterBy.isEmpty || zorderBy.isEmpty,
       "pick linear clusterBy OR multi-dim zorderBy, not both")
     val expected = currentOrThrow
-    partitionSource match {
-      case Some(_) =>
-        val months = allMonths(Some(expected))
-        val all = readParts(manifest(expected), None, expected)
-        val shaped =
-          if (zorderBy.nonEmpty) zorderShape(all, months.size, target, zorderBy, Some(PartCol))
-          else compactShape(all, months.size, target, clusterBy)
-        commitPartitioned(shaped, replaced = months, Some(expected))
-      case None =>
-        val base = readAt(expected)
-        val shaped =
-          if (zorderBy.nonEmpty) zorderShape(base, 1, target, zorderBy, None)
-          else if (clusterBy.isEmpty) base.repartition(target)
-          else base.repartitionByRange(math.max(1, target), clusterBy.map(col): _*)
-            .sortWithinPartitions(clusterBy.map(col): _*)
-        commitFull(shaped, Some(expected))
-    }
+    val entries = manifest(expected)
+    val nKeys = entries.map(_._1).distinct.size
+    val all = readParts(entries, None, expected)
+    val shaped =
+      if (zorderBy.nonEmpty) zorderShape(all, nKeys, target, zorderBy)
+      else compactShape(all, nKeys, target, clusterBy)
+    commit(shaped, carried = Nil, Some(expected))
   }
 
   /** PARTITION-SCOPED compaction: fold (and optionally cluster/z-order)
@@ -2445,24 +2235,26 @@ final class CdcTable(
       "pick linear clusterBy OR multi-dim zorderBy, not both")
     require(months.nonEmpty, "no months named")
     val expected = currentOrThrow
-    val missing = months -- allMonths(Some(expected))
+    val entries = manifest(expected)
+    val missing = months -- entries.map(_._1)
     require(missing.isEmpty,
       s"months not in the table: ${missing.toSeq.sorted.mkString(", ")}")
-    val rows = readParts(manifest(expected).filter(e => months(e._1)), None, expected)
+    val (folded, carried) = entries.partition(e => months(e._1))
+    val rows = readParts(folded, None, expected)
     val shaped =
-      if (zorderBy.nonEmpty) zorderShape(rows, months.size, target, zorderBy, Some(PartCol))
+      if (zorderBy.nonEmpty) zorderShape(rows, months.size, target, zorderBy)
       else compactShape(rows, months.size, target, clusterBy)
-    commitPartitioned(shaped, replaced = months, Some(expected))
+    commit(shaped, carried, Some(expected))
   }
 
   /** Z-order compaction shape: bucketize each dimension into
     * `[0, 2^bits)` from its observed min/max, interleave into one Morton
-    * key, range-partition (+ month first on the partitioned layout) and
+    * key, range-partition (+ month first on a partitioned table) and
     * locally sort by it. A constant or all-null dimension degenerates to
     * bucket 0 and simply stops discriminating — never an error.
     */
   private def zorderShape(df: DataFrame, months: Int, target: Int,
-                          zorderBy: Seq[String], part: Option[String]): DataFrame = {
+                          zorderBy: Seq[String]): DataFrame = {
     val bits = math.min(16, 62 / zorderBy.size)
     val aggs = zorderBy.flatMap(c => Seq(
       min(col(c).cast("double")), max(col(c).cast("double"))))
@@ -2474,12 +2266,8 @@ final class CdcTable(
         row.getDouble(2 * i), row.getDouble(2 * i + 1), 1 << bits)
     }
     val key = ZOrder.interleave(bits, bucketized: _*)
-    val n = math.max(1, months * target)
-    part match {
-      case Some(p) =>
-        df.repartitionByRange(n, col(p), key).sortWithinPartitions(col(p), key)
-      case None => df.repartitionByRange(n, key).sortWithinPartitions(key)
-    }
+    val cols = keyCols.map(col) :+ key
+    df.repartitionByRange(math.max(1, months * target), cols: _*).sortWithinPartitions(cols: _*)
   }
 
   /** Compaction write shape: distribute BY MONTH over `months * target`
@@ -2493,35 +2281,30 @@ final class CdcTable(
     * `clusterBy`, range partitioning on (month, cluster cols) + a local
     * sort replaces the salt — same parallelism, but each file covers a
     * tight cluster-column range (stats-prunable) instead of a random
-    * slice.
+    * slice. An unpartitioned frame round-robins into exactly `target`
+    * files.
     */
   private def compactShape(df: DataFrame, months: Int, target: Int,
                            clusterBy: Seq[String] = Nil): DataFrame =
     if (clusterBy.nonEmpty) {
-      val keys = (PartCol +: clusterBy).map(col)
-      df.repartitionByRange(math.max(1, months * target), keys: _*)
-        .sortWithinPartitions(keys: _*)
-    } else {
+      val cols = (keyCols ++ clusterBy).map(col)
+      df.repartitionByRange(math.max(1, months * target), cols: _*)
+        .sortWithinPartitions(cols: _*)
+    } else if (keyCols.isEmpty) df.repartition(math.max(1, target))
+    else {
       val dataCols = df.columns.filterNot(_ == PartCol).map(col).toIndexedSeq
       val salt = if (target <= 1) lit(0) else pmod(hash(dataCols: _*), lit(target))
       df.repartition(math.max(1, months * target), col(PartCol), salt)
     }
 
-  /** Live parquet file count per month (partitioned) or for the whole
-    * table (unpartitioned, single "" key) — the quantity the
-    * auto-compaction policy thresholds on. Metadata-only: directory
-    * listings of the manifest's dirs, no data read.
+  /** Live parquet file count per partition key (an unpartitioned
+    * table's single key is "") — the quantity the auto-compaction policy
+    * thresholds on. Metadata-only: directory listings of the manifest's
+    * dirs, no data read.
     */
-  def liveFileCounts: Map[String, Int] = {
-    def parquetFiles(dir: File): Int =
-      io.list(dir.getPath).count(e => !e.isDir && e.name.endsWith(".parquet"))
-    partitionSource match {
-      case Some(_) =>
-        manifest(currentOrThrow).groupBy(_._1).view
-          .mapValues(_.map(e => parquetFiles(new File(path, e._2))).sum).toMap
-      case None => Map("" -> parquetFiles(versionDir(currentOrThrow)))
-    }
-  }
+  def liveFileCounts: Map[String, Int] =
+    manifest(currentOrThrow).groupBy(_._1).view
+      .mapValues(_.map(e => dataFileCount(new File(path, e._2)).toInt).sum).toMap
 
   /** Auto-compaction policy (the table-services side of the reference's
     * 512 MB-target-file intent, incremental_kafka_s3_cdc.py:405-423):
@@ -2537,19 +2320,12 @@ final class CdcTable(
     */
   def compactIfNeeded(maxFiles: Int = 16, target: Int = 1): Boolean = {
     val cur = currentOrThrow
-    partitionSource match {
-      case Some(_) =>
-        val hot = liveFileCounts.filter(_._2 > maxFiles).keySet
-        if (hot.isEmpty) false
-        else {
-          val rows = readParts(manifest(cur).filter(e => hot(e._1)), None, cur)
-          commitPartitioned(compactShape(rows, hot.size, target),
-            replaced = hot, Some(cur))
-          true
-        }
-      case None =>
-        if (liveFileCounts("") <= maxFiles) false
-        else { commitFull(readAt(cur).repartition(target), Some(cur)); true }
+    val hot = liveFileCounts.filter(_._2 > maxFiles).keySet
+    if (hot.isEmpty) false
+    else {
+      val (folded, carried) = manifest(cur).partition(e => hot(e._1))
+      commit(compactShape(readParts(folded, None, cur), hot.size, target), carried, Some(cur))
+      true
     }
   }
 
@@ -2696,11 +2472,11 @@ object CdcTable {
   /** Pointer file naming the live version. */
   val CurrentPointer = "_current"
 
-  /** Per-version month -> data-directory map (partitioned layout). */
+  /** Per-version partition key -> data-directory map. */
   val ManifestName = "manifest.tsv"
 
-  /** Per-version schema sidecar (partitioned layout) — the read schema
-    * of a version whose manifest holds no live months.
+  /** Per-version schema sidecar — the table's union schema, and the
+    * read schema of a version whose manifest holds no live keys.
     */
   val SchemaName = "_schema.json"
 

@@ -32,8 +32,8 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * operation, exactly what Iceberg does when it builds manifests) and
   * are cached in a `_filestats.tsv` sidecar per data directory.
   * [[CdcTable]] commits emit the sidecar AS PART OF THE COMMIT
-  * ([[writeStatsNow]] — footers just written, cache-hot; hard-linked
-  * carry-over files reuse the prior version's entries), so a fresh
+  * ([[writeStatsNow]] — footers just written, cache-hot; files a clone
+  * links reuse the source dir's entries), so a fresh
   * table's first pruned scan opens zero footers; the lazy
   * compute-on-first-read path remains as the fallback for pre-stats
   * tables. Data directories are immutable once committed, so a sidecar
@@ -191,9 +191,9 @@ object FileSkipping {
     * A table that calls this as part of its commit (the files were just
     * produced and their footers are OS-cache-hot) never pays the lazy
     * first-read footer pass, which at 100 TB is a metadata storm over
-    * every fresh data file of a big commit. Entries in `reuse` (from the
-    * previous version's sidecar — e.g. hard-linked carry-over files that
-    * are byte-identical under the same names) skip their footer read.
+    * every fresh data file of a big commit. Entries in `reuse` (from a
+    * source dir's sidecar — e.g. files a clone hard-links, byte-identical
+    * under the names the entries give) skip their footer read.
     * Best-effort by contract: the data commit already stands, and a
     * missing sidecar only means the first read recomputes it — so
     * failures log and never fail the commit.

@@ -24,11 +24,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *     reference's setup, where the Iceberg CATALOG owns the pointer.
   *   - `createDirExclusive` (version reservation) -> If-None-Match PUT
   *     of a `vNNNNNNNN/_reserved` marker object.
-  *   - `linkOrCopy` (carry-over of unchanged files) -> server-side COPY
-  *     (S3 CopyObject is metadata-only within a bucket), or — better at
-  *     scale — a manifest-level carry that never touches the objects;
-  *     the partitioned layout already does the latter (untouched months
-  *     are manifest POINTER copies, no file operation at all).
+  *   - `linkOrCopy` (clone/branch/publish carry of a whole table state)
+  *     -> server-side COPY (S3 CopyObject is metadata-only within a
+  *     bucket). Commits never call it: unchanged data carries forward as
+  *     manifest POINTER copies, with no file operation at all.
   *   - `list`/`exists`/`readString` -> LIST/HEAD/GET; `lastModified` ->
   *     the object's Last-Modified header.
   *   - `deleteRecursively` -> prefix delete (versioned-bucket lifecycle

@@ -358,7 +358,7 @@ class CdcTableSpec extends SparkSpec {
     t.append(Seq((11L, "more-jan", ts("2024-01-03 00:00:00"))).toDF("id", "v", "created_at"))
     assert(t.manifest(t.currentVersion.get).filter(_._1 == "2024-02") == febEntry)
 
-    // unpartitioned policy: hard-linked append versions accumulate files,
+    // unpartitioned policy: append commit dirs accumulate files,
     // compactIfNeeded folds them when over the threshold
     val up = new CdcTable(spark, tmpDir("autocompact") + "/u", Seq("id"),
       retainVersions = 8, autoCompactMaxFiles = Some(4))
@@ -570,17 +570,99 @@ class CdcTableSpec extends SparkSpec {
     t.init(Seq((1L, "a", 1L)).toDF("id", "v", "ts"))
     val v1 = t.currentVersion.get
     val snapshotBefore = t.readVersion(v1).orderBy("id").collect().toSeq
+    def files = t.filesInfo.select("data_dir", "file").as[(String, String)].collect().toSet
+    val f1 = files
     t.append(Seq((2L, "b", 2L)).toDF("id", "v", "ts"))
+    val f2 = files
     // the append is a NEW version; v1 (and any reader holding it) is untouched
     assert(t.currentVersion.contains(v1 + 1))
     assert(t.readVersion(v1).orderBy("id").collect().toSeq == snapshotBefore)
     assert(t.read.orderBy("id").select("id").as[Long].collect().toSeq == Seq(1L, 2L))
-    // hard links, not copies: the carried-over data file is the same inode
-    val f1 = new java.io.File(path, "v%08d".format(v1)).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    val f2 = new java.io.File(path, "v%08d".format(v1 + 1)).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    assert(f1.subsetOf(f2) && f2.size > f1.size)
+    // the prior files carry by manifest entry (same dir, same name, never
+    // rewritten); the append only adds the batch's files
+    assert(f1.subsetOf(f2) && f2.size > f1.size, s"before=$f1 after=$f2")
+  }
+
+  /** A table as the earlier full-copy unpartitioned layout left it:
+    * `_current` -> v00000001, the `_table_meta` sidecar, and the data
+    * directly under `v00000001/` with no manifest.
+    */
+  private def legacyTable(path: String, rows: Seq[(Long, String, Long)]): String = {
+    rows.toDF("id", "v", "ts").coalesce(1).write.parquet(s"$path/v00000001")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(path, CdcTable.CurrentPointer), "v00000001")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path, CdcTable.TableMetaName),
+      Seq("keys\tid", "partitionSource\t", "partitionGranularity\tmonth",
+        "bloomColumns\t", "ndvColumns\t").mkString("\n"))
+    new java.io.File(s"$path/v00000001").list().filter(_.endsWith(".parquet")).head
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, Long)] =
+    df.select("id", "v", "ts").as[(Long, String, Long)].collect().toSeq.sorted
+
+  test("legacy full-copy version: open, read, merge, append, restore and expire") {
+    val path = tmpDir("cdclegacyv") + "/t"
+    val v1Rows = Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L))
+    legacyTable(path, v1Rows)
+    val t = CdcTable.open(spark, path, retainVersions = 3)
+    assert(t.keys == Seq("id") && t.partitionSource.isEmpty)
+    assert(rowsOf(t.read) == v1Rows)
+    assert(rowsOf(t.readVersion(1L)) == v1Rows)
+
+    t.merge(Seq((2L, "b2", 2L, "u"), (4L, "d", 2L, "c")).toDF("id", "v", "ts", "__op"), "ts")
+    val merged = Seq((1L, "a", 1L), (2L, "b2", 2L), (3L, "c", 1L), (4L, "d", 2L))
+    assert(rowsOf(t.read) == merged)
+    t.append(Seq((5L, "e", 3L)).toDF("id", "v", "ts"))
+    assert(rowsOf(t.read) == merged :+ ((5L, "e", 3L)))
+    assert(rowsOf(t.readVersion(1L)) == v1Rows)
+
+    t.restore(1L)
+    assert(rowsOf(t.read) == v1Rows)
+    // v5 puts v1 and v2 past retention: v2 expires, but v1's dir is the
+    // data the retained restore (v4) names, so it stays readable
+    t.merge(Seq((1L, "a2", 4L, "u")).toDF("id", "v", "ts", "__op"), "ts")
+    t.expire()
+    assert(!t.versions.contains(2L), s"versions: ${t.versions}")
+    assert(rowsOf(t.readVersion(4L)) == v1Rows)
+    assert(rowsOf(t.readVersion(1L)) == v1Rows)
+    val afterMerge = Seq((1L, "a2", 4L), (2L, "b", 1L), (3L, "c", 1L))
+    assert(rowsOf(t.read) == afterMerge)
+    assert(rowsOf(CdcTable.open(spark, path).read) == afterMerge)
+
+    // once no retained manifest names it, the legacy dir is collected too
+    t.merge(Seq((6L, "f", 5L, "c")).toDF("id", "v", "ts", "__op"), "ts")
+    assert(new java.io.File(path, "v00000001").exists())
+    t.merge(Seq((7L, "g", 6L, "c")).toDF("id", "v", "ts", "__op"), "ts")
+    assert(!new java.io.File(path, "v00000001").exists())
+    assert(rowsOf(t.read) == afterMerge ++ Seq((6L, "f", 5L), (7L, "g", 6L)))
+  }
+
+  test("legacy full-copy version with a deletion vector keeps its deletes across carries") {
+    val path = tmpDir("cdclegacydv") + "/t"
+    val file = legacyTable(path, Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)))
+    // the earlier layout's vector: an empty sub for its one dir; row 0 is id 1
+    Seq(("", file, 0L)).toDF("sub", "file", "idx")
+      .write.parquet(s"$path/dv/v00000001/${CdcTable.DeletesName}")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$path/dv/v00000001", CdcTable.DeletesSummaryName),
+      s"v00000001\t$file\t1")
+    val t = CdcTable.open(spark, path)
+    val live = Seq((2L, "b", 1L), (3L, "c", 1L))
+    assert(rowsOf(t.read) == live)
+    assert(t.countWhere() == 2L)
+
+    t.append(Seq((4L, "d", 2L)).toDF("id", "v", "ts"))
+    assert(rowsOf(t.read) == live :+ ((4L, "d", 2L)))
+    t.deleteVectored(col("id") === 3L)
+    val afterDelete = Seq((2L, "b", 1L), (4L, "d", 2L))
+    assert(rowsOf(t.read) == afterDelete)
+    assert(t.countWhere() == 2L)
+    assert(rowsOf(t.cloneTo(tmpDir("cdclegacydv") + "/c").read) == afterDelete)
+    t.restore(1L)
+    assert(rowsOf(t.read) == live)
+    t.materializeDeletes()
+    assert(t.dvSummary(t.currentVersion.get).isEmpty)
+    assert(rowsOf(t.read) == live)
   }
 
   test("pre-versioning hive-at-root layout fails loudly instead of bootstrapping beside it") {
@@ -600,8 +682,7 @@ class CdcTableSpec extends SparkSpec {
     t.init(spark.range(1000).select($"id", ($"id" % 7).as("v")).repartition(8))
     val before = t.read.orderBy("id").collect().toSeq
     t.compact(1)
-    val cur = new java.io.File(path, "v%08d".format(t.currentVersion.get))
-    assert(cur.listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    assert(t.filesInfo.count() == 1)
     assert(t.read.orderBy("id").collect().toSeq == before)
   }
 

@@ -18,10 +18,13 @@ class DeletionVectorSpec extends SparkSpec {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  private def dataFiles(dir: String): Seq[(String, Long)] =
-    new File(dir).listFiles().toSeq
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.length())).sortBy(_._1)
+  /** The current version's data files as (data dir/file, bytes), found
+    * through the table's own file inventory.
+    */
+  private def dataFiles(t: CdcTable): Seq[(String, Long)] =
+    t.filesInfo.select("data_dir", "file").as[(String, String)].collect().toSeq
+      .map { case (d, f) => (s"$d/$f", new File(new File(t.path, d), f).length()) }
+      .sorted
 
   test("vectored delete: visible rows equal CoW delete, data files untouched") {
     val root = tmpDir("dv")
@@ -35,18 +38,18 @@ class DeletionVectorSpec extends SparkSpec {
     val mor = mk("mor")
     val cow = mk("cow")
     val pred = col("id").between(100L, 300L) || col("id") % 10 === 7L
+    val filesBefore = dataFiles(mor)
     mor.deleteVectored(pred)
     cow.delete(pred)
     val got = mor.read.orderBy("id").as[(Long, String)].collect().toSeq
     val want = cow.read.orderBy("id").as[(Long, String)].collect().toSeq
     assert(got == want && got.nonEmpty)
 
-    // the new version's data files are the SAME files (names and sizes),
-    // not rewrites — that is the whole point of merge-on-read
-    val v1 = new File(s"$root/mor/v00000001")
-    val v2 = new File(s"$root/mor/v00000002")
-    assert(dataFiles(v1.getPath) == dataFiles(v2.getPath),
+    // the new version's data files are the SAME files (dirs, names and
+    // sizes), not rewrites — that is the whole point of merge-on-read
+    assert(filesBefore.nonEmpty && dataFiles(mor) == filesBefore,
       "vectored delete must not rewrite data files")
+    assert(mor.manifest(2L) == mor.manifest(1L), "vectored delete only re-points the manifest")
     assert(new File(s"$root/mor/dv/v00000002", CdcTable.DeletesName).isDirectory)
     assert(mor.dvSummary(2L).nonEmpty)
 
@@ -78,14 +81,14 @@ class DeletionVectorSpec extends SparkSpec {
     assert(mor.minMaxFromStats("id").isDefined)
   }
 
-  test("vector carries across append (hard-linked files) and restore; merge rewrite drops it") {
+  test("vector carries across append (carried files) and restore; merge rewrite drops it") {
     val root = tmpDir("dvcarry")
     val t = new CdcTable(spark, s"$root/t", Seq("id"))
     t.init(Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)).toDF("id", "v", "ts"))
     t.deleteVectored(col("id") === 2L)
     assert(t.read.count() == 2L)
 
-    // append hard-links the carried files: the deleted row must not resurrect
+    // append carries the vectored files untouched: the deleted row must not resurrect
     t.append(Seq((10L, "j", 2L)).toDF("id", "v", "ts"))
     assert(t.read.orderBy("id").select("id").as[Long].collect().toSeq == Seq(1L, 3L, 10L))
 
@@ -224,21 +227,25 @@ class DeletionVectorSpec extends SparkSpec {
   test("targeted materialization rewrites only vectored files; debt policy triggers it") {
     val root = tmpDir("dvmat")
     val t = new CdcTable(spark, s"$root/t", Seq("id"))
-    t.init(spark.range(1, 1001).toDF("id")
-      .withColumn("v", concat(lit("w"), col("id")))
-      .repartitionByRange(4, col("id")))
-    // all deletes land in ONE file's range (250 ids per file)
+    // four files of 250 ids, one per batch: the manifest names data dirs,
+    // so each batch's commit dir is one unit a rewrite can target
+    def batch(lo: Long) = spark.range(lo, lo + 250).toDF("id")
+      .withColumn("v", concat(lit("w"), col("id"))).coalesce(1)
+    t.init(batch(1L))
+    Seq(251L, 501L, 751L).foreach(lo => t.append(batch(lo)))
+    // all deletes land in ONE file's range
     t.deleteVectored(col("id").between(300L, 360L))
-    val before = dataFiles(s"$root/t/v00000002")
+    val before = dataFiles(t)
+    assert(before.size == 4, s"test setup: $before")
 
     // below the debt threshold: policy declines
     assert(!t.materializeDeletesIfNeeded(maxRatio = 0.5))
     // above it: runs
     assert(t.materializeDeletesIfNeeded(maxRatio = 0.01))
     val cur = t.currentVersion.get
-    val after = dataFiles(s"$root/t/v" + f"$cur%08d")
-    // 3 of 4 files carried by name+size; the vectored one rewrote
-    assert(before.map(_._1).toSet.intersect(after.map(_._1).toSet).size == 3,
+    val after = dataFiles(t)
+    // 3 of 4 files carried by dir+name+size; the vectored one rewrote
+    assert(before.toSet.intersect(after.toSet).size == 3,
       s"untouched files must carry: before=$before after=$after")
     assert(t.dvSummary(cur).isEmpty && t.read.count() == 939L)
     assert(t.minMaxFromStats("id").contains((1L, 1000L)))

@@ -475,9 +475,9 @@ class FileSkippingSpec extends SparkSpec {
     t.scanProfile(preds): Unit
     assert(FileSkipping.statFooterReads.get == afterMerge,
       "post-merge pruned scan must still be footer-free")
-    // unpartitioned append: carried hard-linked files reuse the previous
-    // sidecar's entries — only the appended batch pays footer reads, and
-    // those at COMMIT time, never at read time
+    // unpartitioned append: carried files keep their dirs' sidecars — only
+    // the appended batch pays footer reads, and those at COMMIT time,
+    // never at read time
     val u = new CdcTable(spark, s"$root/u", Seq("id"), retainVersions = 5)
     u.init((0 until 100).map(i => (i.toLong, i * 2L)).toDF("id", "v")
       .repartitionByRange(4, col("id")))
@@ -487,7 +487,7 @@ class FileSkippingSpec extends SparkSpec {
     assert(keptU < totalU)
     assert(FileSkipping.statFooterReads.get == afterAppend,
       "append commit must leave a complete sidecar: read pays no footers")
-    // restore re-links the old version: its sidecar carries over entry-for-entry
+    // restore re-points at the old version's dirs: their sidecars serve as-is
     u.append((120 until 130).map(i => (i.toLong, i * 2L)).toDF("id", "v"))
     val preRestoreReads = FileSkipping.statFooterReads.get
     u.restore(u.versions.head)

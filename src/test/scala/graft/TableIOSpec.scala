@@ -13,22 +13,30 @@ class TableIOSpec extends SparkSpec {
   import spark.implicits._
   private def ts(n: Int) = java.sql.Timestamp.valueOf(f"2000-01-$n%02d 00:00:00")
 
-  /** Delegates to the local impl, counting every call per primitive. */
-  final class CountingIO extends TableIO {
+  /** Delegates to `inner`, counting every call per primitive and
+    * recording each data-file carry (a parquet file outside the
+    * deletion-vector dir handed to `linkOrCopy` or `copy`).
+    */
+  final class CountingIO(inner: TableIO = LocalTableIO) extends TableIO {
     val calls = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val dataCarries = scala.collection.mutable.Buffer.empty[String]
     private def tick[A](op: String)(a: => A): A = { calls(op) += 1; a }
-    def exists(p: String) = tick("exists")(LocalTableIO.exists(p))
-    def readString(p: String) = tick("readString")(LocalTableIO.readString(p))
-    def readLines(p: String) = tick("readLines")(LocalTableIO.readLines(p))
-    def writeString(p: String, c: String) = tick("writeString")(LocalTableIO.writeString(p, c))
-    def writeAtomic(p: String, c: String) = tick("writeAtomic")(LocalTableIO.writeAtomic(p, c))
-    def mkdirs(p: String) = tick("mkdirs")(LocalTableIO.mkdirs(p))
-    def createDirExclusive(p: String) = tick("createDirExclusive")(LocalTableIO.createDirExclusive(p))
-    def list(p: String) = tick("list")(LocalTableIO.list(p))
-    def lastModified(p: String) = tick("lastModified")(LocalTableIO.lastModified(p))
-    def linkOrCopy(s: String, d: String) = tick("linkOrCopy")(LocalTableIO.linkOrCopy(s, d))
-    def copy(s: String, d: String) = tick("copy")(LocalTableIO.copy(s, d))
-    def deleteRecursively(p: String) = tick("deleteRecursively")(LocalTableIO.deleteRecursively(p))
+    private def carry[A](op: String, src: String)(a: => A): A = {
+      if (src.endsWith(".parquet") && !src.contains("/dv/")) dataCarries += src
+      tick(op)(a)
+    }
+    def exists(p: String) = tick("exists")(inner.exists(p))
+    def readString(p: String) = tick("readString")(inner.readString(p))
+    def readLines(p: String) = tick("readLines")(inner.readLines(p))
+    def writeString(p: String, c: String) = tick("writeString")(inner.writeString(p, c))
+    def writeAtomic(p: String, c: String) = tick("writeAtomic")(inner.writeAtomic(p, c))
+    def mkdirs(p: String) = tick("mkdirs")(inner.mkdirs(p))
+    def createDirExclusive(p: String) = tick("createDirExclusive")(inner.createDirExclusive(p))
+    def list(p: String) = tick("list")(inner.list(p))
+    def lastModified(p: String) = tick("lastModified")(inner.lastModified(p))
+    def linkOrCopy(s: String, d: String) = carry("linkOrCopy", s)(inner.linkOrCopy(s, d))
+    def copy(s: String, d: String) = carry("copy", s)(inner.copy(s, d))
+    def deleteRecursively(p: String) = tick("deleteRecursively")(inner.deleteRecursively(p))
   }
 
   test("unpartitioned lifecycle runs the whole commit protocol through the seam") {
@@ -49,7 +57,9 @@ class TableIOSpec extends SparkSpec {
     // the protocol's primitives all routed through the seam
     assert(io.calls("writeAtomic") >= 4, s"pointer publishes: ${io.calls}")
     assert(io.calls("createDirExclusive") >= 4, s"reservations: ${io.calls}")
-    assert(io.calls("linkOrCopy") >= 1, s"carry-over links: ${io.calls}")
+    // every version re-points the manifest at immutable commit dirs: no
+    // data file is linked or copied anywhere in the lifecycle
+    assert(io.calls("linkOrCopy") == 0, s"carry-over links: ${io.calls}")
     assert(io.calls("deleteRecursively") >= 1, s"expiry GC: ${io.calls}")
     assert(io.calls("readString") >= 4, s"pointer reads: ${io.calls}")
   }
@@ -84,7 +94,7 @@ class TableIOSpec extends SparkSpec {
       .toDF("id", "v", "ts", "__op"), "ts")
     t.append(Seq((9L, "z", ts(3)): (Long, String, java.sql.Timestamp))
       .toDF("id", "v", "ts"))
-    // time travel works over COPY-carried (not hard-linked) versions
+    // time travel works without rename or links
     val beforeAppend = t.currentVersion.get - 1
     assert(t.readVersion(beforeAppend).count() == 3)
     t.restore(beforeAppend)
@@ -97,6 +107,27 @@ class TableIOSpec extends SparkSpec {
       .filter(_._1.endsWith("_current")).map(_._2.stripPrefix("v").toLong)
     assert(pointerPuts.sameElements(pointerPuts.sorted), s"pointer history: ${pointerPuts.toSeq}")
     assert(pointerPuts.distinct.length == pointerPuts.length, s"duplicate publish: ${pointerPuts.toSeq}")
+  }
+
+  test("object store: unpartitioned append, restore and deleteVectored copy no data file") {
+    // a store has no hard links: any per-version carry of a data file is
+    // a full server-side COPY, so carrying the table per commit would
+    // make each of these O(table) instead of O(change)
+    val io = new CountingIO(new ObjectStoreSimTableIO)
+    val t = new CdcTable(spark, tmpDir("osscarry") + "/t", Seq("id"),
+      retainVersions = 8, io = io)
+    t.init(spark.range(1, 401).toDF("id").withColumn("v", col("id") * 2).repartition(4))
+    val base = t.currentVersion.get
+    def carried(body: => Unit): Seq[String] = { io.dataCarries.clear(); body; io.dataCarries.toList }
+    assert(carried(t.append(spark.range(401, 411).toDF("id").withColumn("v", col("id") * 2)))
+      .isEmpty, "append copied data files")
+    assert(t.read.count() == 410L)
+    assert(carried(t.restore(base)).isEmpty, "restore copied data files")
+    assert(t.read.count() == 400L)
+    assert(carried(t.deleteVectored(col("id") <= 10L)).isEmpty, "deleteVectored copied data files")
+    assert(t.read.count() == 390L)
+    assert(t.read.agg(min("id"), max("id"), sum("v")).head().toSeq ==
+      Seq(11L, 400L, (11L to 400L).map(_ * 2).sum))
   }
 
   test("object-store primitives: partitioned lifecycle with schema evolution, compaction and GC") {

@@ -85,15 +85,16 @@ class TableStatsSpec extends SparkSpec {
     assertMatchesScan(t)
   }
 
-  test("unpartitioned append merges sidecars at delta cost") {
+  test("unpartitioned append writes its batch's sidecar at delta cost") {
     val t = new CdcTable(spark, tmpDir("ndv_app") + "/t", keys = Seq("id"),
       ndvColumns = Seq("id", "actor"))
     t.init(rows(100))
     t.append(rows(100, idOffset = 100))
     t.append(rows(100, idOffset = 150)) // half overlap
-    val vDir = new File(t.path, f"v${t.currentVersion.get}%08d")
-    assert(new File(vDir, TableStats.SidecarName).exists(),
-      "append must write the merged sidecar")
+    val dirs = t.filesInfo.select("data_dir").distinct().as[String].collect()
+    assert(dirs.length == 3, s"each batch lands in its own commit dir: ${dirs.toSeq}")
+    dirs.foreach(d => assert(new File(new File(t.path, d), TableStats.SidecarName).exists(),
+      s"every commit must write its dir's sidecar: $d"))
     assertMatchesScan(t)
   }
 
@@ -135,8 +136,9 @@ class TableStatsSpec extends SparkSpec {
     val t = new CdcTable(spark, tmpDir("ndv_torn") + "/t", keys = Seq("id"),
       ndvColumns = Seq("id"))
     t.init(rows(50))
-    val side = new File(new File(t.path, f"v${t.currentVersion.get}%08d"),
+    val side = new File(new File(t.path, t.filesInfo.select("data_dir").as[String].head()),
       TableStats.SidecarName)
+    assert(side.exists(), s"test setup: $side")
     java.nio.file.Files.writeString(side.toPath, "ndv-v1\nid\tnot-base64!!")
     assertMatchesScan(t)
     // a column that no file carries: zero registers -> ndv reported, no crash
