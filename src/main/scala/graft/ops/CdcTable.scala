@@ -278,9 +278,9 @@ final class CdcTable(
 
   /** Version manifest: `(partition key, table-relative data dir)` lines.
     * A key may map to several directories (appends add one per batch);
-    * an unpartitioned table's only key is `""`. A version dir without a
-    * manifest is a legacy full-copy version and reads as one entry
-    * naming itself.
+    * an unpartitioned table's only key is `""`. A [[legacy]] version
+    * reads as one entry naming its own dir; any other version without a
+    * manifest is expired (or a half-deleted leftover of an expiry).
     */
   def manifest(v: Long): Seq[(String, String)] = {
     val f = manifestFile(v)
@@ -289,9 +289,19 @@ final class CdcTable(
         val i = l.indexOf('\t')
         (l.substring(0, i), l.substring(i + 1))
       }
-    else if (io.exists(versionDir(v).getPath)) Seq("" -> versionDir(v).getName)
+    else if (legacy(v)) Seq("" -> versionDir(v).getName)
     else throw new ExpiredVersionException(s"version $v of $path is expired or never existed")
   }
+
+  /** Whether version `v` was written by the earlier full-copy
+    * unpartitioned layout: parquet directly in the version dir (no other
+    * layout ever put data there) and no manifest. The one place that
+    * decides it, for [[manifest]]'s fallback and the deletion-vector
+    * sites that rename its subs.
+    */
+  private def legacy(v: Long): Boolean =
+    !io.exists(manifestFile(v).getPath) &&
+      io.list(versionDir(v).getPath).exists(e => !e.isDir && e.name.endsWith(".parquet"))
 
   private def writeManifest(v: Long, entries: Seq[(String, String)]): Unit = {
     io.mkdirs(versionDir(v).getPath)
@@ -340,13 +350,18 @@ final class CdcTable(
     // sf0.1, not the data volume). Union-by-name across commit dirs keeps
     // additive schema evolution working; manifest-level month pruning is
     // preserved because only the picked month directories are listed.
+    // The unpartitioned key's dirs (one per append) are ONE scan: there
+    // is no hive column to re-attach, and its dirs share one schema
+    // (merge, compact and rewrite replace the key whole; append aligns
+    // its batch's types).
     // deletion vector: the per-row (file, idx) identity must project at
     // SCAN level (before the union strips `_metadata`); one anti-join
     // applies after the union
     val dv = dvAt(at)
-    val unioned = picked.groupBy(_._2.takeWhile(_ != '/')).toSeq.sortBy(_._1).map { case (cdir, es) =>
-      val scan = spark.read.option("mergeSchema", "true")
-        .option("basePath", new File(path, cdir).getPath)
+    val groups = picked.groupBy(e => if (e._1.isEmpty) "" else e._2.takeWhile(_ != '/'))
+    val unioned = groups.toSeq.sortBy(_._1).map { case (cdir, es) =>
+      val reader = spark.read.option("mergeSchema", "true")
+      val scan = (if (cdir.isEmpty) reader else reader.option("basePath", new File(path, cdir).getPath))
         .parquet(es.map(e => new File(path, e._2).getPath): _*)
       val base =
         if (scan.columns.contains(PartCol)) scan.withColumn(PartCol, col(PartCol).cast("string"))
@@ -858,10 +873,12 @@ final class CdcTable(
     * version `df` and `carried` were DERIVED FROM: if another writer
     * committed after the caller read it, `expected + 1` is already
     * reserved and this throws instead of silently losing that writer's
-    * update.
+    * update. `linked` are `(key, data file)` pairs carried byte-for-byte
+    * into the key's new dir beside `df`'s rows ([[materializeDeletes]]).
     */
   private def commit(
-      df: DataFrame, carried: Seq[(String, String)], expected: Option[Long]): Unit = {
+      df: DataFrame, carried: Seq[(String, String)], expected: Option[Long],
+      linked: Seq[(String, File)] = Nil): Unit = {
     enforceConstraints(df)
     val next = expected.getOrElse(0L) + 1
     // claim the version BEFORE materializing data: the reservation owns
@@ -873,6 +890,9 @@ final class CdcTable(
     withInt64Timestamps {
       writer(df).mode(SaveMode.Overwrite).partitionBy(keyCols: _*)
         .parquet(commitDir(next).getPath)
+    }
+    linked.foreach { case (k, f) =>
+      io.linkOrCopy(f.getPath, new File(new File(path, relDir(next, k)), f.getName).getPath)
     }
     // the keys actually written, from the listing — no second evaluation
     // of df's plan: each hive dir names a month, and parquet directly in
@@ -886,17 +906,20 @@ final class CdcTable(
     // produced (carried dirs keep theirs — the dirs are immutable)
     locally {
       val conf = spark.sessionState.newHadoopConf()
+      // linked files keep their source dir's stats: same bytes, same name
+      val reuse = linked.map(_._2.getParentFile).distinct
+        .flatMap(FileSkipping.statsForDir(conf, _)).toMap
       // key dirs are independent: bound-parallel like the per-file
       // footer reads inside writeStatsNow (a hot commit writes dozens of
       // months; serial sidecar emission was visible commit wall time)
-      if (outDirs.size <= 1) outDirs.foreach(FileSkipping.writeStatsNow(conf, _))
+      if (outDirs.size <= 1) outDirs.foreach(FileSkipping.writeStatsNow(conf, _, reuse))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(8, outDirs.size))
         try {
           import scala.jdk.CollectionConverters._
           pool.invokeAll(outDirs.map { d =>
-            (() => FileSkipping.writeStatsNow(conf, d)): java.util.concurrent.Callable[Unit]
+            (() => FileSkipping.writeStatsNow(conf, d, reuse)): java.util.concurrent.Callable[Unit]
           }.asJava).asScala.foreach(_.get())
         } finally pool.shutdown()
       }
@@ -1589,8 +1612,7 @@ final class CdcTable(
     if (!hasDv(v)) None
     else {
       val dv = spark.read.parquet(dvDir(v).getPath)
-      Some(if (io.exists(manifestFile(v).getPath)) dv
-        else dv.withColumn("sub", lit(versionDir(v).getName)))
+      Some(if (legacy(v)) dv.withColumn("sub", lit(versionDir(v).getName)) else dv)
     }
 
   /** The carry-stable sub-directory discriminator of a data file's
@@ -1647,7 +1669,7 @@ final class CdcTable(
     if (sum.isEmpty) return
     val kept = sum.filter(e => keepDirs.contains(e._1))
     if (kept.isEmpty) return
-    if (kept.size == sum.size && io.exists(manifestFile(from).getPath)) {
+    if (kept.size == sum.size && !legacy(from)) {
       io.list(dvDir(from).getPath).filter(!_.isDir).foreach(e =>
         io.linkOrCopy(new File(dvDir(from), e.name).getPath,
           new File(dvDir(to), e.name).getPath))
@@ -1813,21 +1835,42 @@ final class CdcTable(
     old
   }
 
-  /** Materialize the deletion vector NOW, rewriting ONLY the data dirs
-    * that carry deleted positions: their rows re-write without the
-    * deleted ones into one new commit dir, and every other dir carries
-    * forward untouched by manifest re-point. The targeted counterpart of
-    * a full [[compact]]: merge-on-read debt clears at cost proportional
-    * to the DEBT-CARRYING dirs, not the table. No vector → no-op, no
-    * version burned.
+  /** Materialize the deletion vector NOW, rewriting ONLY the data files
+    * that carry deleted positions: their visible rows re-write into one
+    * new commit dir, the other files of their dirs join them there by
+    * [[TableIO.linkOrCopy]] (a manifest names dirs, not files), and every
+    * dir without deletes carries forward by manifest re-point. The
+    * targeted counterpart of a full [[compact]]: merge-on-read debt
+    * clears at cost proportional to the DEBT-CARRYING files, not the
+    * table. No vector → no-op, no version burned.
+    *
+    * One dir's files always agree on column types, but two vectored dirs
+    * may not (a partitioned merge widens only the months it touches).
+    * When the files of the vectored dirs do not merge into one parquet
+    * schema, those dirs fold whole at their union types instead, so a
+    * written dir never mixes types.
     */
   def materializeDeletes(): Unit = withOp("MATERIALIZE") {
     val cur = currentOrThrow
-    val vectored = dvSummary(cur).map(_._1).toSet
+    val vectored = dvSummary(cur).groupBy(_._1).map { case (d, es) => d -> es.map(_._2).toSet }
     if (vectored.isEmpty) return
-    val (rewritten, carried) = manifest(cur).partition(e => vectored(e._2))
-    val existing = readParts(rewritten, None, cur).drop(PartCol)
-    commit(withPart(existing), carried, Some(cur))
+    val (touched, carried) = manifest(cur).partition(e => vectored.contains(e._2))
+    val files = touched.flatMap { case (k, rel) =>
+      val dir = new File(path, rel)
+      io.list(dir.getPath)
+        .filter(e => !e.isDir && e.name.endsWith(".parquet") && !e.name.startsWith("."))
+        .map(e => (vectored(rel)(e.name), k -> new File(dir, e.name)))
+    }
+    scala.util.Try(spark.read.option("mergeSchema", "true")
+        .parquet(files.map(_._2._2.getPath): _*).schema).toOption match {
+      case Some(schema) =>
+        val (rewritten, kept) = files.partition(_._1)
+        val existing = applyDv(
+          spark.read.schema(schema).parquet(rewritten.map(_._2._2.getPath): _*), cur)
+        commit(withPart(existing), carried, Some(cur), linked = kept.map(_._2))
+      case None =>
+        commit(withPart(readParts(touched, None, cur).drop(PartCol)), carried, Some(cur))
+    }
   }
 
   /** Debt-policy face of [[materializeDeletes]]: materialize when the

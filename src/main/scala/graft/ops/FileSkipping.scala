@@ -33,7 +33,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * are cached in a `_filestats.tsv` sidecar per data directory.
   * [[CdcTable]] commits emit the sidecar AS PART OF THE COMMIT
   * ([[writeStatsNow]] — footers just written, cache-hot; files a clone
-  * links reuse the source dir's entries), so a fresh
+  * or a materialization links reuse the source dir's entries), so a fresh
   * table's first pruned scan opens zero footers; the lazy
   * compute-on-first-read path remains as the fallback for pre-stats
   * tables. Data directories are immutable once committed, so a sidecar
@@ -192,7 +192,7 @@ object FileSkipping {
     * produced and their footers are OS-cache-hot) never pays the lazy
     * first-read footer pass, which at 100 TB is a metadata storm over
     * every fresh data file of a big commit. Entries in `reuse` (from a
-    * source dir's sidecar — e.g. files a clone hard-links, byte-identical
+    * source dir's sidecar — e.g. files a clone or a materialization links, byte-identical
     * under the names the entries give) skip their footer read.
     * Best-effort by contract: the data commit already stands, and a
     * missing sidecar only means the first read recomputes it — so

@@ -24,10 +24,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *     reference's setup, where the Iceberg CATALOG owns the pointer.
   *   - `createDirExclusive` (version reservation) -> If-None-Match PUT
   *     of a `vNNNNNNNN/_reserved` marker object.
-  *   - `linkOrCopy` (clone/branch/publish carry of a whole table state)
+  *   - `linkOrCopy` (clone/branch/publish carry of a whole table state,
+  *     and the untouched files of a dir `materializeDeletes` rewrites)
   *     -> server-side COPY (S3 CopyObject is metadata-only within a
-  *     bucket). Commits never call it: unchanged data carries forward as
-  *     manifest POINTER copies, with no file operation at all.
+  *     bucket). Other commits never call it: unchanged data carries
+  *     forward as manifest POINTER copies, with no file operation at all.
   *   - `list`/`exists`/`readString` -> LIST/HEAD/GET; `lastModified` ->
   *     the object's Last-Modified header.
   *   - `deleteRecursively` -> prefix delete (versioned-bucket lifecycle

@@ -665,6 +665,21 @@ class CdcTableSpec extends SparkSpec {
     assert(rowsOf(t.read) == live)
   }
 
+  test("a retained version dir that lost its manifest reads as expired, not as legacy data") {
+    val root = tmpDir("cdcnomanifest")
+    Seq(None, Some("created")).foreach { ps =>
+      val t = new CdcTable(spark, s"$root/${ps.isDefined}", Seq("id"), partitionSource = ps)
+      t.init(Seq((1L, ts("2001-01-05 00:00:00"))).toDF("id", "created"))
+      t.append(Seq((2L, ts("2001-02-05 00:00:00"))).toDF("id", "created"))
+      // a half-done expiry: the version dir survives, its manifest does not
+      assert(new java.io.File(s"${t.path}/v00000001", CdcTable.ManifestName).delete())
+      assert(t.versions.contains(1L))
+      intercept[CdcTable.ExpiredVersionException](t.readVersion(1L))
+      intercept[CdcTable.ExpiredVersionException](t.changesBetween(1L, 2L))
+      assert(t.read.count() == 2L)
+    }
+  }
+
   test("pre-versioning hive-at-root layout fails loudly instead of bootstrapping beside it") {
     val path = tmpDir("cdclegacy") + "/t"
     // a legacy table: bare parquet at the root, no _current pointer

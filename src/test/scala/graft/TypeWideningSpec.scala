@@ -106,6 +106,47 @@ class TypeWideningSpec extends SparkSpec {
     assert(t.read.select("id").as[Long].collect().toSet == Set(3L))
   }
 
+  test("materializeDeletes after a widening merge keeps every written dir one type") {
+    val root = tmpDir("widen_mat")
+    def mk(name: String): CdcTable = {
+      val t = new CdcTable(spark, s"$root/$name", Seq("id"),
+        partitionSource = Some("created"), retainVersions = 10)
+      // round-robin into two tasks: each month lands in two files
+      t.init((1 to 8).map(i => (i.toLong, i * 10, java.sql.Timestamp.valueOf(
+          if (i <= 4) "2000-01-05 00:00:00" else "2000-02-05 00:00:00")))
+        .toDF("id", "qty", "created").repartition(2))
+      // widening merge touches ONLY February: January stays int32 on disk
+      t.merge(Seq(
+        (5L, 3000000000L, java.sql.Timestamp.valueOf("2000-02-05 00:00:00"), ts(2), "u"))
+        .toDF("id", "qty", "created", "ts", "__op"), "ts")
+      t
+    }
+    def janFiles(t: CdcTable) = t.filesInfo.filter(col("data_dir").endsWith("=2000-01"))
+      .select("file").as[String].collect().toSet
+    def qtys(t: CdcTable) = t.read.select("id", "qty").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = (1 to 8).map(i => i.toLong -> (if (i == 5) 3000000000L else i * 10L)).toMap
+
+    // vectored rows in the narrow AND the widened month
+    val both = mk("both")
+    both.deleteVectored(col("id") === 1L || col("id") === 6L)
+    both.materializeDeletes()
+    assert(both.dvSummary(both.currentVersion.get).isEmpty)
+    assert(both.read.schema("qty").dataType == LongType)
+    assert(qtys(both) == want - 1L - 6L)
+
+    // vectored rows in the narrow month only: its untouched file carries
+    val jan = mk("jan")
+    val before = janFiles(jan)
+    assert(before.size == 2, s"test setup: $before")
+    jan.deleteVectored(col("id") === 1L)
+    jan.materializeDeletes()
+    assert(jan.dvSummary(jan.currentVersion.get).isEmpty)
+    assert(before.intersect(janFiles(jan)).size == 1, s"before=$before after=${janFiles(jan)}")
+    assert(qtys(jan) == want - 1L)
+    assert(qtys(CdcTable.open(spark, jan.path)) == want - 1L)
+  }
+
   test("incompatible type change rejects loudly — never source-wins") {
     val root = tmpDir("widen3")
     val t = new CdcTable(spark, s"$root/t", Seq("id"))
