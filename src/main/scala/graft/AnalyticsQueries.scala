@@ -100,7 +100,7 @@ object AnalyticsQueries extends QueryPack {
   // ------------------------------------------------------------------
   // Join-view auto-rewrite fixture (plans/JoinRewrite): orders as the
   // fact, customer as the dimension, the maintained denormalized view
-  // bootstrapped and marker'd exactly as the streaming pipeline would —
+  // bootstrapped and recorded exactly as the streaming pipeline would —
   // memoized per (session, sf).
   // ------------------------------------------------------------------
   private val joinRewriteViews =
@@ -117,12 +117,11 @@ object AnalyticsQueries extends QueryPack {
         val dim = new graft.ops.CdcTable(s, s"$root/customer", Seq("c_custkey"), retainVersions = 5)
         dim.init(Tables(s, dir, "customer").select("c_custkey", "c_mktsegment"))
         val view = new graft.ops.CdcTable(s, s"$root/jview", Seq("o_orderkey"), retainVersions = 5)
-        view.init(graft.ops.JoinView.compute(fact.read, dim.read, on)
-          .withColumn(graft.ops.JoinView.TsCol,
-            lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(view.path, graft.cdc.CdcPipeline.ReflectedMarker),
-          s"orders:${fact.currentVersion.get}\ncustomer:${dim.currentVersion.get}"): Unit
+        view.reflecting(Seq("orders" -> fact.currentVersion.get, "customer" -> dim.currentVersion.get)) {
+          view.init(graft.ops.JoinView.compute(fact.read, dim.read, on)
+            .withColumn(graft.ops.JoinView.TsCol,
+              lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))))
+        }
         graft.plans.JoinRewrite.register("orders", fact, "customer", dim, on, view)
         (fact, dim)
       })

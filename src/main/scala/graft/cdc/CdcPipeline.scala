@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.envelope.EnvelopeCodec
-import graft.ops.CdcTable
+import graft.ops.{CdcTable, LocalTableIO}
 
 /** The streaming CDC engine: Structured Streaming over an envelope source,
   * `foreachBatch` into per-table merges, exactly-once via checkpointing +
@@ -186,16 +186,9 @@ final class CdcPipeline(
     * Legacy `_table_keys` markers from pre-meta builds still read.
     */
   private def recordedKeys(tablePath: String): Option[Seq[String]] = {
-    val meta = new java.io.File(tablePath, graft.ops.CdcTable.TableMetaName)
-    val legacy = new java.io.File(tablePath, CdcPipeline.KeysMarker)
-    if (meta.exists())
-      java.nio.file.Files.readString(meta.toPath).linesIterator
-        .find(_.startsWith("keys\t"))
-        .map(_.stripPrefix("keys\t").split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-    else if (legacy.exists())
-      Some(java.nio.file.Files.readString(legacy.toPath)
-        .linesIterator.filter(_.nonEmpty).toSeq)
-    else None
+    val legacy = new java.io.File(tablePath, CdcPipeline.KeysMarker).getPath
+    CdcTable.readTableMeta(tablePath).map(CdcTable.metaList(_, "keys")).orElse(
+      if (LocalTableIO.exists(legacy)) Some(LocalTableIO.readLines(legacy)) else None)
   }
 
   /** Fail fast when a view spec's key columns disagree with the keys the
@@ -219,14 +212,12 @@ final class CdcPipeline(
     }
 
   /** Refresh every registered join view one of whose sides the batch
-    * touched. The `_reflected` marker beside the view records the
-    * (fact, dim) versions the view matches; it is (re)written only AFTER
-    * the view's merge commits, so a crash between the two re-applies the
-    * same window on the next batch — idempotent, the refresh batch is a
-    * restricted recompute at the window end, and the view's keyed merge
-    * absorbs the replay. A reflected version that already expired from
-    * the table's retained history falls back to a full re-init at the
-    * current versions (same idempotence argument).
+    * touched. The view's table records the (fact, dim...) versions it
+    * matches in the refresh's own commit ([[CdcTable.reflecting]]), so a
+    * crash leaves view rows and record together at the previous refresh
+    * and the next batch re-runs that window. A reflected version that
+    * already expired from the table's retained history falls back to a
+    * full re-init at the current versions.
     */
   private def maintainJoinViews(touched: Set[String]): Unit =
     joinViews
@@ -242,6 +233,7 @@ final class CdcPipeline(
           val fv = fact.currentVersion.get
           val dvs = dims.map(_._2.currentVersion.get)
           val names = j.factTable +: j.dims.map(_.table)
+          val at = names.zip(fv +: dvs)
           val view = new CdcTable(spark, j.viewPath, j.factKeys)
           val ts = new java.sql.Timestamp(System.currentTimeMillis())
           // default payload: every dimension column that is neither a
@@ -258,26 +250,24 @@ final class CdcPipeline(
                     .map(org.apache.spark.sql.functions.col): _*)
                 JoinView.compute(acc, proj, d.on, j.outer)
             }
-            view.init(joined.withColumn(JoinView.TsCol, lit(ts)))
-            writeReflected(j.viewPath, names.zip(fv +: dvs))
+            view.reflecting(at)(view.init(joined.withColumn(JoinView.TsCol, lit(ts))))
           }
-          // the marker records (table, version) PAIRS and refresh demands
+          // the record holds (table, version) PAIRS and refresh demands
           // the names line up with the spec: a view whose dimension list
           // was edited (same arity, different table) must re-bootstrap,
           // not replay the new table's feed against state built from the
           // old one
-          readReflected(j.viewPath) match {
-            case Some(vs) if vs == names.zip(fv +: dvs) => () // already current
+          view.reflected.map(_.sources) match {
+            case Some(vs) if vs == at => () // already current
             case Some(vs) if vs.map(_._1) == names =>
-              try {
+              try view.reflecting(at) {
                 JoinView.refreshStar(view, fact, vs.head._2, fv,
                   dims.zip(dvs).zip(vs.tail).map { case (((d, t), dv), (_, d0)) =>
                     JoinView.StarDim(t, d0, dv, d.on, Some(payloadOf(d, t)))
                   }, ts, j.outer)
-                writeReflected(j.viewPath, names.zip(fv +: dvs))
               } catch {
                 case e: Throwable
-                    if isExpiredBase(e, (fact +: dims.map(_._2)).map(_.path)) =>
+                    if CdcTable.isExpiredBase(e, (fact +: dims.map(_._2)).map(_.path)) =>
                   CdcPipeline.log.warn(
                     s"join view ${j.viewPath}: reflected window expired from " +
                       "retained history, falling back to full re-bootstrap", e)
@@ -289,10 +279,9 @@ final class CdcPipeline(
       }
 
   /** Catch up every registered ANN index whose vector table the batch
-    * touched. The index keeps its own `_indexed_version` marker (written
-    * post-commit by IvfIndex itself), so the discipline matches the view
-    * markers: replays are idempotent no-ops, a crash between merge and
-    * marker re-runs one delta-sized refresh, and an expired window
+    * touched. The lists table records the source version it reflects in
+    * each refresh commit, like the views: replays are no-ops, a crashed
+    * refresh re-runs one delta-sized window, and an expired window
     * degrades to a snapshot re-assign under the SAME frozen codebook —
     * assignments stay comparable across the fallback.
     */
@@ -305,7 +294,7 @@ final class CdcPipeline(
         if (!idx.exists) idx.build(source)
         else try idx.refresh(source)
         catch {
-          case e: Throwable if isExpiredBase(e, Seq(source.path)) =>
+          case e: Throwable if CdcTable.isExpiredBase(e, Seq(source.path)) =>
             CdcPipeline.log.warn(
               s"ann index ${a.indexPath}: reflected version expired from " +
                 "retained history, re-assigning the snapshot under the frozen codebook", e)
@@ -315,10 +304,9 @@ final class CdcPipeline(
     }
 
   /** Catch up every registered sketch view whose source table the batch
-    * touched. [[graft.ops.SketchView.refresh]] keeps its own post-commit
-    * `_sketch_reflected` marker, so replays are idempotent register-max
-    * merges; an expired window degrades to a snapshot re-bootstrap (same
-    * registers), logged.
+    * touched ([[graft.ops.SketchView.refresh]] records the reflected
+    * version in its own commit); an expired window degrades to a
+    * snapshot re-bootstrap (same registers), logged.
     */
   private def maintainSketchViews(touched: Set[String]): Unit =
     sketchViews.filter(sv => touched(sv.table)).foreach { sv =>
@@ -329,20 +317,19 @@ final class CdcPipeline(
           sv.groupCols, sv.hashExpr)
         try view.refresh()
         catch {
-          case e: Throwable if isExpiredBase(e, Seq(source.path)) =>
+          case e: Throwable if CdcTable.isExpiredBase(e, Seq(source.path)) =>
             CdcPipeline.log.warn(
               s"sketch view ${sv.viewPath}: reflected window expired from " +
                 "retained history, re-sketching the snapshot", e)
-            new java.io.File(sv.viewPath, graft.ops.SketchView.ReflectedMarker)
-              .delete(): Unit
-            view.refresh()
+            view.bootstrap()
         }
       }
     }
 
   /** Refresh every registered derived view whose source table the batch
-    * touched — same marker discipline as [[maintainJoinViews]] (written
-    * post-commit, replays idempotent, expired windows re-bootstrap).
+    * touched — same record discipline as [[maintainJoinViews]] (the
+    * reflected version rides the refresh commit, expired windows
+    * re-bootstrap).
     */
   private def maintainDerivedViews(touched: Set[String]): Unit =
     derivedViews.filter(d => touched(d.table)).foreach { d =>
@@ -352,19 +339,17 @@ final class CdcPipeline(
       source.currentVersion.foreach { sv =>
         val view = new CdcTable(spark, d.viewPath, d.viewKeys)
         val ts = new java.sql.Timestamp(System.currentTimeMillis())
-        def bootstrap(): Unit = {
+        val at = Seq(d.table -> sv)
+        def bootstrap(): Unit = view.reflecting(at) {
           view.init(DerivedView.compute(source.readVersion(sv), d.transform)
             .withColumn(DerivedView.TsCol, lit(ts)))
-          writeReflected(d.viewPath, Seq(d.table -> sv))
         }
-        readReflected(d.viewPath) match {
-          case Some(Seq((n, v0))) if n == d.table && v0 == sv => ()
-          case Some(Seq((n, v0))) if n == d.table =>
-            try {
-              DerivedView.refresh(view, source, v0, sv, d.transform, ts)
-              writeReflected(d.viewPath, Seq(d.table -> sv))
-            } catch {
-              case e: Throwable if isExpiredBase(e, Seq(source.path)) =>
+        view.reflected.flatMap(_.of(d.table)) match {
+          case Some(v0) if v0 == sv => ()
+          case Some(v0) =>
+            try view.reflecting(at)(DerivedView.refresh(view, source, v0, sv, d.transform, ts))
+            catch {
+              case e: Throwable if CdcTable.isExpiredBase(e, Seq(source.path)) =>
                 CdcPipeline.log.warn(
                   s"derived view ${d.viewPath}: reflected version expired from " +
                     "retained history, falling back to full re-bootstrap", e)
@@ -374,65 +359,6 @@ final class CdcPipeline(
         }
       }
     }
-
-  /** True only when the failure traces to EXPIRED RETAINED HISTORY of one
-    * of the view's SOURCE tables: either the dedicated
-    * [[CdcTable.ExpiredVersionException]] (thrown eagerly by
-    * manifest/readVersion/changesBetween when the version is gone), or —
-    * for the lazy-plan race where a concurrent expire() deletes version
-    * files between plan build and write action, which Spark surfaces as
-    * its own wrapped FileNotFoundException — an FNF whose message names
-    * one of the source tables' paths. A transient FNF from an unrelated
-    * cause (lost shuffle/temp file, the view's own files) propagates
-    * instead of silently degrading every refresh to a full re-bootstrap.
-    */
-  private def isExpiredBase(e: Throwable, sourcePaths: Seq[String]): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).exists {
-      case _: CdcTable.ExpiredVersionException => true
-      case f: java.io.FileNotFoundException =>
-        sourcePaths.exists(p => Option(f.getMessage).exists(_.contains(p)))
-      case _ => false
-    }
-
-  private def reflectedFile(viewPath: String) =
-    new java.io.File(viewPath, CdcPipeline.ReflectedMarker)
-
-  /** Marker entries are `table:version` LINES — one per line, so a table
-    * name may contain spaces (or colons: the version is split off the
-    * LAST colon); only line separators are unrepresentable and rejected
-    * at write time. Any parse anomaly (the pre-r11 space-separated
-    * format with 2+ entries, a torn write) reads as None or as a
-    * non-matching name list and the view re-bootstraps ONCE — idempotent,
-    * never wrong, and never a silent per-batch re-bootstrap loop.
-    */
-  private[graft] def readReflected(viewPath: String): Option[Seq[(String, Long)]] = {
-    val f = reflectedFile(viewPath)
-    if (!f.exists()) None
-    else scala.util.Try {
-      val entries = java.nio.file.Files.readString(f.toPath)
-        .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq.map { tok =>
-          val i = tok.lastIndexOf(':')
-          require(i > 0)
-          (tok.substring(0, i), tok.substring(i + 1).toLong)
-        }
-      require(entries.nonEmpty)
-      entries
-    }.toOption
-  }
-
-  private[graft] def writeReflected(viewPath: String, entries: Seq[(String, Long)]): Unit = {
-    entries.foreach { case (n, _) =>
-      require(!n.exists(c => c == '\n' || c == '\r'),
-        s"table name ${n.replace("\n", "\\n").replace("\r", "\\r")} contains a " +
-          s"line separator — unrepresentable in the ${CdcPipeline.ReflectedMarker} marker")
-    }
-    val f = reflectedFile(viewPath)
-    val tmp = java.nio.file.Paths.get(viewPath, CdcPipeline.ReflectedMarker + ".tmp")
-    java.nio.file.Files.writeString(tmp, entries.map { case (n, v) => s"$n:$v" }.mkString("\n"))
-    java.nio.file.Files.move(tmp, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
 
   /** Run one incremental pass over all currently-available envelope files,
     * then stop (trigger-once semantics). Safe to call repeatedly; each call
@@ -512,11 +438,6 @@ object CdcPipeline {
     */
   final case class AnnIndexSpec(table: String, tableKeys: Seq[String],
                                 indexPath: String, k: Int = 16)
-
-  /** Marker file beside a maintained view recording the source-table
-    * versions it reflects — written only after the view's merge commits.
-    */
-  val ReflectedMarker = "_reflected"
 
   /** LEGACY marker from pre-`_table_meta` builds (one key per line;
     * empty file = keyless) — still read, no longer written: the table's

@@ -10,10 +10,10 @@ import graft.ops.CdcTable
 /** A durable cursor over a [[CdcTable]]'s change feed for DOWNSTREAM
   * consumers — the subscription face of [[CdcTable.changesBetween]]
   * (Delta `readChangeFeed` + `startingVersion` shape, on the engine's
-  * own versioned layout). The view-maintenance paths keep their own
-  * `_reflected` markers inside [[CdcPipeline]]; this generalizes the
-  * same discipline to arbitrary consumers: search indexers, replication
-  * targets, audit sinks, feature stores.
+  * own versioned layout). The maintained views record the source
+  * versions they reflect in their own commits ([[CdcTable.reflecting]]);
+  * this cursor serves consumers whose sink is not a [[CdcTable]]: search
+  * indexers, replication targets, audit sinks, feature stores.
   *
   * Delivery contract: `poll(f)` hands `f` the tagged change feed
   * between the cursor and the table's current version and advances the

@@ -42,18 +42,20 @@ import org.apache.spark.sql.functions._
   */
 final class IvfIndex(
     spark: SparkSession,
-    /** Index root: the lists table plus codebook/version sidecars. */
+    /** Index root: the lists table plus the codebook sidecar. */
     val path: String,
     val k: Int = 16,
     val io: TableIO = LocalTableIO) {
 
   import spark.implicits._
 
-  /** The inverted lists as a versioned table: (vec_id, cid, qe). */
+  /** The inverted lists as a versioned table: (vec_id, cid, qe); every
+    * commit records the source version it reflects
+    * ([[CdcTable.reflecting]]).
+    */
   val lists = new CdcTable(spark, new File(path, "lists").getPath, Seq("vec_id"), io = io)
 
   private def centroidsFile = new File(path, "_centroids").getPath
-  private def markerFile = new File(path, "_indexed_version").getPath
 
   /** The frozen codebook, cid-ascending: (cid, quantized centroid). */
   def centroids: Seq[(Long, Array[Long])] =
@@ -62,8 +64,8 @@ final class IvfIndex(
       (parts.head.toLong, parts.tail.map(_.toLong))
     }
 
-  /** Source-table version the lists currently reflect. */
-  def indexedVersion: Long = io.readString(markerFile).trim.toLong
+  /** Source-table version the lists of `source` currently reflect. */
+  def indexedVersion(source: CdcTable): Option[Long] = lists.reflected.flatMap(_.of(source.path))
 
   /** Whether [[build]] has run (the codebook sidecar exists). */
   def exists: Boolean = io.exists(centroidsFile)
@@ -83,13 +85,13 @@ final class IvfIndex(
   }
 
   /** Train the codebook on the source snapshot and bootstrap the lists
-    * as assign(snapshot); records the reflected source version.
+    * as assign(snapshot), recording the source version it reflects.
     */
   def build(source: CdcTable): Unit = {
     val v = source.currentVersion.getOrElse(
       throw new IllegalStateException(s"cannot index an empty table"))
     graft.functions.VectorFunctions.register(spark)
-    quantized(source.read).select("vec_id", "qe").createOrReplaceTempView("ivf_train_src")
+    quantized(source.readVersion(v)).select("vec_id", "qe").createOrReplaceTempView("ivf_train_src")
     val cents = spark.sql(
       s"""WITH ${graft.IndexQueries.sparkKmeansFor("ivf_", "ivf_train_src", k)}
          |SELECT cid, ce FROM ivf_c2""".stripMargin)
@@ -97,8 +99,7 @@ final class IvfIndex(
       .sortBy(_._1)
     io.writeAtomic(centroidsFile,
       cents.map { case (cid, ce) => s"$cid,${ce.mkString(",")}" }.mkString("\n"))
-    lists.init(assign(source.read))
-    io.writeAtomic(markerFile, v.toString)
+    lists.reflecting(Seq(source.path -> v))(lists.init(assign(source.readVersion(v))))
   }
 
   /** Nearest-frozen-centroid assignment of `src` rows — the row-local
@@ -121,15 +122,19 @@ final class IvfIndex(
   /** Catch the lists up to the source's current version: one
     * [[DerivedView]] refresh over the change feed — assign(delta), with
     * deletes/shrinks handled by the view's keyed merge. Idempotent; a
-    * no-op when already current.
+    * no-op when already current. Lists with no record of `source` (an
+    * index built before the record existed) re-assign the snapshot once
+    * ([[rebootstrap]]).
     */
-  def refresh(source: CdcTable): Unit = {
-    val from = indexedVersion
-    val to = source.currentVersion.getOrElse(from)
-    if (to > from) {
-      DerivedView.refresh(lists, source, from, to, assign,
-        new java.sql.Timestamp(0L))
-      io.writeAtomic(markerFile, to.toString)
+  def refresh(source: CdcTable): Unit = source.currentVersion.foreach { to =>
+    indexedVersion(source) match {
+      case Some(from) if from == to => ()
+      case Some(from) if from < to =>
+        lists.reflecting(Seq(source.path -> to)) {
+          DerivedView.refresh(lists, source, from, to, assign,
+            new java.sql.Timestamp(0L))
+        }
+      case _ => rebootstrap(source)
     }
   }
 
@@ -141,9 +146,8 @@ final class IvfIndex(
     * assign(snapshot) pass merged through the lists table: stale keys
     * delete, everything else upserts.
     */
-  def rebootstrap(source: CdcTable): Unit = {
-    val v = source.currentVersion.getOrElse(return)
-    val cur = assign(source.read).localCheckpoint()
+  def rebootstrap(source: CdcTable): Unit = source.currentVersion.foreach { v =>
+    val cur = assign(source.readVersion(v)).localCheckpoint()
     val stale = lists.read.select("vec_id")
       .join(cur.select("vec_id"), Seq("vec_id"), "left_anti")
     val batch = cur.withColumn(DerivedView.OpCol, lit("u"))
@@ -152,8 +156,7 @@ final class IvfIndex(
       .withColumn(DerivedView.TsCol, lit(new java.sql.Timestamp(0L)))
     // one assignment row per vec_id + disjoint anti-joined deletes: the
     // batch is already uniquely keyed, skip the latest-wins shuffle
-    lists.mergePreDeduped(batch)
-    io.writeAtomic(markerFile, v.toString)
+    lists.reflecting(Seq(source.path -> v))(lists.mergePreDeduped(batch))
   }
 
   /** Cluster the list files by cid so each probe's equality filter

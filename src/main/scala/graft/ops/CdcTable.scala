@@ -198,11 +198,7 @@ final class CdcTable(
     * [[enforceConstraints]]) plus as a pointer-flip backstop.
     */
   private def enforceLayout(): Unit =
-    if (io.exists(tableMetaFile.getPath)) {
-      val stored = io.readLines(tableMetaFile.getPath).map { l =>
-        val i = l.indexOf('\t')
-        (l.substring(0, i), if (i + 1 < l.length) l.substring(i + 1) else "")
-      }.toMap
+    readTableMeta(path, io).foreach { stored =>
       val storedPs = stored.getOrElse("partitionSource", "")
       val storedGran = stored.getOrElse("partitionGranularity", "month")
       require(storedPs == partitionSource.getOrElse("") &&
@@ -419,19 +415,9 @@ final class CdcTable(
     * opening only the files the delta's key/partition predicates can
     * touch.
     */
-  def readWhereAt(v: Long, preds: Seq[FileSkipping.Pred]): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val kept = scanDirs(v, preds).flatMap(FileSkipping.prunedFiles(conf, _, preds))
-    val residual = preds.map(FileSkipping.residualOf)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    if (kept.isEmpty) readVersion(v).filter(lit(false))
-    else {
-      val df = applyDv(
-        spark.read.option("mergeSchema", "true").parquet(kept.map(_.getPath): _*), v)
-        .filter(residual)
-      if (df.columns.contains(PartCol)) df.drop(PartCol) else df
-    }
-  }
+  def readWhereAt(v: Long, preds: Seq[FileSkipping.Pred]): DataFrame =
+    prunedScan(v, preds,
+      preds.map(FileSkipping.residualOf).reduceOption(_ && _).getOrElse(lit(true)))
 
   /** [[readWhere]] with a plain Catalyst predicate: the skippable
     * conjuncts are extracted ([[FileSkipping.predsOf]]) for pruning and
@@ -440,16 +426,21 @@ final class CdcTable(
     * `read.filter(pred)`; only the pruning power varies with how much of
     * the predicate is range/null-check shaped.
     */
-  def readFiltered(pred: Column): DataFrame = {
-    val cur = currentOrThrow
+  def readFiltered(pred: Column): DataFrame =
+    prunedScan(currentOrThrow, FileSkipping.predsOf(pred), pred)
+
+  /** The files of version `v` that `preds` cannot rule out, read with the
+    * version's deletion vector applied and `filter` on top — the body of
+    * [[readWhereAt]] and [[readFiltered]].
+    */
+  private def prunedScan(v: Long, preds: Seq[FileSkipping.Pred], filter: Column): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
-    val ranges = FileSkipping.predsOf(pred)
-    val kept = scanDirs(cur, ranges).flatMap(FileSkipping.prunedFiles(conf, _, ranges))
-    if (kept.isEmpty) readVersion(cur).filter(lit(false))
+    val kept = scanDirs(v, preds).flatMap(FileSkipping.prunedFiles(conf, _, preds))
+    if (kept.isEmpty) readVersion(v).filter(lit(false))
     else {
       val df = applyDv(
-        spark.read.option("mergeSchema", "true").parquet(kept.map(_.getPath): _*), cur)
-        .filter(pred)
+        spark.read.option("mergeSchema", "true").parquet(kept.map(_.getPath): _*), v)
+        .filter(filter)
       if (df.columns.contains(PartCol)) df.drop(PartCol) else df
     }
   }
@@ -686,8 +677,7 @@ final class CdcTable(
     io.writeString(new File(versionDir(next), CommitInfoName).getPath,
       s"$pendingOp\t${System.currentTimeMillis()}")
     if (pendingTags.nonEmpty)
-      io.writeString(new File(versionDir(next), CommitTagsName).getPath,
-        pendingTags.toSeq.sorted.map { case (k, v) => s"$k\t$v" }.mkString("\n"))
+      io.writeString(new File(versionDir(next), CommitTagsName).getPath, renderTags(pendingTags))
     io.writeAtomic(pointer.getPath, f"v$next%08d")
     expire()
   }
@@ -711,14 +701,80 @@ final class CdcTable(
   }
 
   /** Tags recorded with retained version `v` (empty when none). */
-  def commitTags(v: Long): Map[String, String] = {
-    val f = new File(versionDir(v), CommitTagsName)
+  def commitTags(v: Long): Map[String, String] = readTags(new File(versionDir(v), CommitTagsName))
+
+  private def readTags(f: File): Map[String, String] =
     if (!io.exists(f.getPath)) Map.empty
-    else io.readString(f.getPath).linesIterator.flatMap(_.split('\t') match {
+    else io.readLines(f.getPath).flatMap(_.split('\t') match {
       case Array(k, value) => Some(k -> value)
       case _ => None
     }).toMap
+
+  private def renderTags(tags: Map[String, String]): String =
+    tags.toSeq.sorted.map { case (k, v) => s"$k\t$v" }.mkString("\n")
+
+  // ------------------------------------------------------ reflected record
+
+  private def fastForwardFile = new File(path, ReflectedSidecarName)
+
+  /** Run `body` — a maintained view's refresh of THIS table — recording
+    * that the result reflects `sources`, the ordered `(source, version)`
+    * list it was derived from. The record rides every commit `body`
+    * publishes as commit tags, so the view's rows and the versions they
+    * reflect become visible together: a crash at any step leaves both at
+    * the previous refresh. When `body` commits nothing (an empty window),
+    * the record goes to one fast-forward sidecar instead, stamped with
+    * the head it was verified against; it counts only while that version
+    * is still the head, so any later commit — a RESTORE included —
+    * retires it. Source names may hold spaces and colons, not tabs or
+    * line separators.
+    */
+  def reflecting[A](sources: Seq[(String, Long)])(body: => A): A = {
+    require(sources.nonEmpty, "a reflected record names at least one source")
+    sources.foreach { case (n, _) =>
+      require(n.nonEmpty && !n.exists(c => c == '\t' || c == '\n' || c == '\r'),
+        s"source name '${n.replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")}' " +
+          "is empty or holds a tab or line separator — unrepresentable in the reflected record")
+    }
+    val tags = reflectedTags(sources)
+    val before = currentVersion
+    val out = withCommitTags(tags)(body)
+    currentVersion.filter(head => before.contains(head)).foreach { head =>
+      io.writeAtomic(fastForwardFile.getPath, renderTags(tags + (ReflectedHeadTag -> head.toString)))
+    }
+    out
   }
+
+  /** The record [[reflecting]] left at the head version: its fast-forward
+    * sidecar when that was written against the head, else the head's
+    * commit tags. None when the head carries none — never refreshed, a
+    * view written before the record existed, or a commit that replaced
+    * the rows (RESTORE, DML); a view reads that as "re-bootstrap".
+    */
+  def reflected: Option[Reflected] = currentVersion.flatMap { head =>
+    val ahead = Some(readTags(fastForwardFile)).filter(_.get(ReflectedHeadTag).contains(head.toString))
+    val tags = ahead.getOrElse(commitTags(head))
+    val entries = Iterator.from(0).map(i => tags.get(s"$ReflectedTag$i"))
+      .takeWhile(_.isDefined).flatten.toSeq
+    if (entries.isEmpty) None
+    else scala.util.Try(entries.map { e =>
+      val i = e.lastIndexOf(':')
+      require(i > 0)
+      (e.substring(0, i), e.substring(i + 1).toLong)
+    }).toOption.map(Reflected(head, _))
+  }
+
+  private def reflectedTags(sources: Seq[(String, Long)]): Map[String, String] =
+    sources.zipWithIndex.map { case ((n, v), i) => s"$ReflectedTag$i" -> s"$n:$v" }.toMap
+
+  /** Run a rewrite that keeps every row and changes only files
+    * (compaction, delete materialization) so its commit carries the
+    * head's reflected record: compacting a view's table does not make
+    * its next refresh a re-bootstrap.
+    */
+  private def keepingReflected[A](body: => A): A =
+    if (pendingTags.keys.exists(_.startsWith(ReflectedTag))) body
+    else reflected.fold(body)(r => withCommitTags(reflectedTags(r.sources))(body))
 
   // The operation name the NEXT commit records (DESCRIBE HISTORY
   // provenance). Instance-local like the rest of a table handle's
@@ -1861,7 +1917,7 @@ final class CdcTable(
         .filter(e => !e.isDir && e.name.endsWith(".parquet") && !e.name.startsWith("."))
         .map(e => (vectored(rel)(e.name), k -> new File(dir, e.name)))
     }
-    scala.util.Try(spark.read.option("mergeSchema", "true")
+    keepingReflected(scala.util.Try(spark.read.option("mergeSchema", "true")
         .parquet(files.map(_._2._2.getPath): _*).schema).toOption match {
       case Some(schema) =>
         val (rewritten, kept) = files.partition(_._1)
@@ -1870,7 +1926,7 @@ final class CdcTable(
         commit(withPart(existing), carried, Some(cur), linked = kept.map(_._2))
       case None =>
         commit(withPart(readParts(touched, None, cur).drop(PartCol)), carried, Some(cur))
-    }
+    })
   }
 
   /** Debt-policy face of [[materializeDeletes]]: materialize when the
@@ -2258,7 +2314,7 @@ final class CdcTable(
     val shaped =
       if (zorderBy.nonEmpty) zorderShape(all, nKeys, target, zorderBy)
       else compactShape(all, nKeys, target, clusterBy)
-    commit(shaped, carried = Nil, Some(expected))
+    keepingReflected(commit(shaped, carried = Nil, Some(expected)))
   }
 
   /** PARTITION-SCOPED compaction: fold (and optionally cluster/z-order)
@@ -2287,7 +2343,7 @@ final class CdcTable(
     val shaped =
       if (zorderBy.nonEmpty) zorderShape(rows, months.size, target, zorderBy)
       else compactShape(rows, months.size, target, clusterBy)
-    commit(shaped, carried, Some(expected))
+    keepingReflected(commit(shaped, carried, Some(expected)))
   }
 
   /** Z-order compaction shape: bucketize each dimension into
@@ -2367,7 +2423,8 @@ final class CdcTable(
     if (hot.isEmpty) false
     else {
       val (folded, carried) = manifest(cur).partition(e => hot(e._1))
-      commit(compactShape(readParts(folded, None, cur), hot.size, target), carried, Some(cur))
+      keepingReflected(
+        commit(compactShape(readParts(folded, None, cur), hot.size, target), carried, Some(cur)))
       true
     }
   }
@@ -2427,6 +2484,23 @@ object CdcTable {
     */
   val TableMetaName = "_table_meta"
 
+  /** The `key -> value` map of `path`'s [[TableMetaName]] sidecar, read
+    * through `io`; None when the table has never committed (or predates
+    * the sidecar). The one reader of the format.
+    */
+  def readTableMeta(path: String, io: TableIO = LocalTableIO): Option[Map[String, String]] = {
+    val f = new File(path, TableMetaName).getPath
+    if (!io.exists(f)) None
+    else Some(io.readLines(f).map { l =>
+      val i = l.indexOf('\t')
+      (l.substring(0, i), l.substring(i + 1))
+    }.toMap)
+  }
+
+  /** A comma-list value of a [[readTableMeta]] map (empty when absent). */
+  def metaList(meta: Map[String, String], key: String): Seq[String] =
+    meta.getOrElse(key, "").split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+
   /** Open a committed table from its path alone, reconstructing merge
     * keys / partition source / bloom columns from the `_table_meta`
     * sidecar every commit maintains. Fails loudly on a table that has
@@ -2435,17 +2509,11 @@ object CdcTable {
     */
   def open(spark: SparkSession, path: String, io: TableIO = LocalTableIO,
            retainVersions: Int = 3): CdcTable = {
-    val f = new File(path, TableMetaName)
-    require(io.exists(f.getPath),
+    val kv = readTableMeta(path, io).getOrElse(throw new IllegalArgumentException(
       s"$path has no $TableMetaName sidecar — not a committed table of this " +
         "engine (or written by a pre-metadata build: commit once through a " +
-        "handle constructed with explicit keys to upgrade it)")
-    val kv = io.readLines(f.getPath).map { l =>
-      val i = l.indexOf('\t')
-      (l.substring(0, i), if (i + 1 < l.length) l.substring(i + 1) else "")
-    }.toMap
-    def list(k: String): Seq[String] =
-      kv.getOrElse(k, "").split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+        "handle constructed with explicit keys to upgrade it)"))
+    def list(k: String): Seq[String] = metaList(kv, k)
     new CdcTable(spark, path, list("keys"),
       kv.get("partitionSource").filter(_.nonEmpty),
       retainVersions = retainVersions,
@@ -2509,6 +2577,51 @@ object CdcTable {
   final class ExpiredVersionException(msg: String)
     extends java.io.FileNotFoundException(msg)
 
+  /** True only when `e` traces to EXPIRED RETAINED HISTORY of one of a
+    * view's SOURCE tables: either [[ExpiredVersionException]] (thrown
+    * eagerly by manifest/readVersion/changesBetween when the version is
+    * gone), or — for the lazy-plan race where a concurrent expire()
+    * deletes version files between plan build and write action, which
+    * Spark surfaces as its own wrapped FileNotFoundException — an FNF
+    * whose message names one of `sourcePaths`. A transient FNF from an
+    * unrelated cause (lost shuffle/temp file, the view's own files)
+    * propagates instead of silently degrading every refresh to a full
+    * re-bootstrap.
+    */
+  def isExpiredBase(e: Throwable, sourcePaths: Seq[String]): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).exists {
+      case _: ExpiredVersionException => true
+      case f: java.io.FileNotFoundException =>
+        sourcePaths.exists(p => Option(f.getMessage).exists(_.contains(p)))
+      case _ => false
+    }
+
+  /** What a maintained view's table reflects ([[CdcTable.reflected]]):
+    * the ordered `(source, version)` list recorded at view version
+    * `version`, the head it was read from — a reader pins that version
+    * to get exactly the rows the list describes.
+    */
+  final case class Reflected(version: Long, sources: Seq[(String, Long)]) {
+    /** The version of `source` when the record names that one source. */
+    def of(source: String): Option[Long] = sources match {
+      case Seq((`source`, v)) => Some(v)
+      case _ => None
+    }
+  }
+
+  /** Commit-tag key prefix of the reflected record: entry `i` of the list
+    * is tag `reflected.i` = `source:version` (split at the last colon).
+    */
+  val ReflectedTag = "reflected."
+
+  /** Sidecar tag naming the head a fast-forward record was verified at. */
+  val ReflectedHeadTag = "reflected.head"
+
+  /** Table-root fast-forward sidecar of the reflected record, written
+    * when a refresh's window was empty and so committed nothing.
+    */
+  val ReflectedSidecarName = "_reflected_ff"
+
   /** Derived hive partition column (month bucket of the source ts col). */
   val PartCol = "__part_month"
 
@@ -2531,8 +2644,9 @@ object CdcTable {
     * BEFORE the pointer flips, so tags publish atomically with the
     * version — a crashed commit's tags die with its orphan dir. The
     * maintained-view ops use this to record the reflected source
-    * version IN the refresh commit itself (a post-commit sidecar marker
-    * would double-apply a signed delta on crash replay).
+    * version IN the refresh commit itself ([[CdcTable.reflecting]]; a
+    * post-commit marker would double-apply a signed delta on crash
+    * replay).
     */
   val CommitTagsName = "_commit_tags"
 

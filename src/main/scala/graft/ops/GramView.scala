@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,12 +24,11 @@ import org.apache.spark.sql.functions._
   * refresh (atomic pointer, time travel). Because the delta is a SIGNED
   * SUM — additive, not idempotent like [[SketchView]]'s register
   * max-merge — the reflected source version must move atomically WITH
-  * the matrix: it rides the refresh commit as a [[CdcTable]] commit tag
-  * (visible exactly iff the commit is), never a post-commit sidecar,
-  * so a crash replay can only re-run a window whose delta was never
-  * published. The `_gram_reflected` sidecar survives ONLY as the
-  * empty-window fast-forward (nothing to apply → nothing a replay
-  * could double-apply → no view version burned).
+  * the matrix: it rides the refresh commit ([[CdcTable.reflecting]]),
+  * visible exactly iff the commit is, so a crash replay can only re-run
+  * a window whose delta was never published. An empty window commits
+  * nothing and fast-forwards the record instead (nothing applied →
+  * nothing a replay could double-apply → no view version burned).
   *
   * At 100 TB: the delta pass is one scan of the CDF window (never the
   * table), each task pre-aggregates to ≤ d(d+1)/2 cells, and the merge
@@ -49,22 +46,8 @@ final class GramView(
   /** The persisted view: `(i, j, s)` for i ≤ j, s exact int64. */
   val table = new CdcTable(spark, path, Seq("i", "j"), io = io)
 
-  private def marker = new File(path, ReflectedMarker).getPath
-
-  /** Source version the persisted matrix reflects, if any: the commit
-    * tag of the view's CURRENT version (atomic with the matrix it
-    * describes), fast-forwarded by the empty-window sidecar when that
-    * is ahead — the sidecar only ever skips windows verified empty, so
-    * trusting the later of the two can never replay a published delta
-    * nor skip an unpublished one.
-    */
-  def reflectedVersion: Option[Long] = {
-    val committed = table.currentVersion
-      .flatMap(v => table.commitTags(v).get(ReflectedTag)).map(_.toLong)
-    val fastForward =
-      if (!io.exists(marker)) None else Some(io.readString(marker).trim.toLong)
-    (committed.toSeq ++ fastForward.toSeq).maxOption
-  }
+  /** Source version the persisted matrix reflects, if any. */
+  def reflectedVersion: Option[Long] = table.reflected.flatMap(_.of(source.path))
 
   /** Bring the matrix current with the source's head: bootstrap on
     * first call, CDF-windowed signed delta afterwards; a no-op when
@@ -72,71 +55,33 @@ final class GramView(
     */
   def refresh(): Unit = source.currentVersion.foreach { cur =>
     reflectedVersion match {
-      case Some(v) if v >= cur => ()
-      case Some(v) =>
-        applyWindow(v, cur)
-      case None =>
-        table.withCommitTags(Map(ReflectedTag -> cur.toString)) {
+      case Some(v) if v == cur => ()
+      case Some(v) if v < cur =>
+        table.reflecting(Seq(source.path -> cur))(applyWindow(v, cur))
+      case _ =>
+        table.reflecting(Seq(source.path -> cur)) {
           table.init(gramOf(source.readVersion(cur), vecCol))
         }
-        clearSidecarUpTo(cur)
     }
   }
-
-  /** Drop the empty-window fast-forward sidecar once a TAGGED refresh
-    * commit reaches (or passes) its value: the sidecar's information is
-    * now carried by the commit tag, and leaving it behind is a trap —
-    * RESTORE commits carry no tags, so after a restore of the view's
-    * backing table `reflectedVersion` would promote the stale sidecar
-    * and skip windows against a rolled-back matrix. (restore() on a
-    * maintained view's table is still only supported in lockstep with
-    * restoring its SOURCE — the signed deltas are relative — but with
-    * the sidecar cleared the view re-syncs instead of silently
-    * skipping.)
-    */
-  private def clearSidecarUpTo(committedTo: Long): Unit =
-    if (io.exists(marker) && io.readString(marker).trim.toLong <= committedTo)
-      io.deleteRecursively(marker)
 
   private def applyWindow(from: Long, to: Long): Unit = {
     val feed = source.changesBetween(from, to)
       .select(col(vecCol).as("__vec"),
         when(col(CdcTable.ChangeTypeCol).isin("insert", "update_postimage"), 1L)
           .otherwise(-1L).as("__sign"))
-    if (feed.isEmpty) {
-      // Empty window: nothing to apply, so a replay cannot double-apply
-      // — fast-forward via the sidecar instead of burning a view version.
-      io.writeAtomic(marker, to.toString)
-      return
-    }
+    // empty window: nothing to apply, so no view version is burned
+    if (feed.isEmpty) return
     val delta = signedGramOf(feed, "__vec", "__sign")
     val merged = table.read.select("i", "j", "s").alias("a")
       .join(delta.alias("d"), Seq("i", "j"), "full_outer")
       .select(col("i"), col("j"),
         (coalesce(col("a.s"), lit(0L)) + coalesce(col("d.s"), lit(0L))).as("s"))
-    // The reflected version rides THIS commit: a crash before the
-    // pointer flip leaves both the matrix and the reflected version at
-    // `from` (replay re-derives the same delta); after it, both at `to`.
-    table.withCommitTags(Map(ReflectedTag -> to.toString)) {
-      table.init(merged)
-    }
-    clearSidecarUpTo(to)
+    table.init(merged)
   }
 }
 
 object GramView {
-
-  /** Commit-tag key carrying the reflected source version INSIDE each
-    * refresh commit (atomic with the matrix — the signed delta is not
-    * replay-idempotent, so a post-commit marker would double-apply).
-    */
-  val ReflectedTag = "gram.reflected_source_version"
-
-  /** Empty-window fast-forward sidecar beside the view: advances the
-    * reflected version WITHOUT burning a view version when a CDF window
-    * carries no rows (safe — an empty window has nothing to replay).
-    */
-  val ReflectedMarker = "_gram_reflected"
 
   /** Upper-triangle Gram matrix of `df`'s vectors — the one-shot form,
     * identical cell-for-cell to the `x_gram_matrix` oracle rule.

@@ -1,14 +1,10 @@
 package graft.ops
 
-import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A PERSISTED, streaming-maintained materialized view of one
   * [[CdcTable]]: the [[IncrementalView]] count/sum/avg/min/max aggregate
-  * kept current by the table's own change data feed, committed through the
-  * same atomic-pointer discipline as the table itself. This is the
+  * kept current by the table's own change data feed. This is the
   * end-to-end face of incremental view maintenance: the CDC pipeline
   * calls [[refresh]] after each micro-batch merge, so the flow is
   * merge -> changesBetween -> signed-delta refresh, with no table
@@ -16,15 +12,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * group cardinality — at 100 TB the difference between re-aggregating
   * the table per micro-batch and touching only what changed).
   *
-  * Layout: `path/vNNNNNNNN` holds the aggregate AS OF source-table
-  * version N — the directory NAME is the freshness marker, so data and
-  * marker commit atomically. (A sidecar marker written after the data
-  * would open a double-apply crash window: re-APPLYING a delta to an
-  * already-refreshed aggregate is wrong, while re-DERIVING the same
-  * target version, which is what the name-as-marker scheme retries
-  * after a crash, is idempotent.) `_current` repoints with one atomic
-  * rename; a crash mid-refresh leaves the old pointer live and the next
-  * refresh overwrites the orphan directory.
+  * Layout: the aggregate is its own [[CdcTable]] at `path`, keyed by
+  * `groupCols`, one version per refresh. The source version it reflects
+  * rides that version's commit ([[CdcTable.reflecting]]), so data and
+  * freshness record commit atomically: a crash mid-refresh leaves both at
+  * the previous refresh, and the retried refresh re-derives the same
+  * target from there — never re-APPLIES a delta to an already-refreshed
+  * aggregate. A view persisted before the record existed reads as never
+  * refreshed and recomputes once.
   */
 final class MaterializedView(
     spark: SparkSession,
@@ -35,27 +30,17 @@ final class MaterializedView(
     val extCols: Seq[String] = Nil,
     retainVersions: Int = 3) {
 
-  private def pointer = new File(path, CdcTable.CurrentPointer)
-  private def dir(v: Long) = new File(path, f"v$v%08d")
+  /** The persisted aggregate, one version per refresh. */
+  val viewTable = new CdcTable(spark, path, groupCols, retainVersions = retainVersions)
 
   /** Source-table version the view currently reflects, if bootstrapped. */
-  def reflectedVersion: Option[Long] =
-    if (!pointer.exists()) None
-    else Some(Files.readString(pointer.toPath).trim.stripPrefix("v").toLong)
+  def reflectedVersion: Option[Long] = viewTable.reflected.flatMap(_.of(table.path))
 
   /** Current view content: one row per group with `n_rows` and the sums. */
-  def read: DataFrame = reflectedVersion match {
-    case Some(v) => readAt(v)
-    case None =>
+  def read: DataFrame =
+    if (viewTable.currentVersion.isEmpty)
       throw new java.io.FileNotFoundException(s"no materialized view at $path — refresh() first")
-  }
-
-  /** The view AS OF source-table version `v` (the caller checked the
-    * directory exists — e.g. a version captured from [[reflectedVersion]]).
-    * Lets a reader pin the exact refresh it validated against instead of
-    * racing a concurrent [[refresh]]'s pointer move.
-    */
-  def readAt(v: Long): DataFrame = spark.read.parquet(dir(v).getPath)
+    else viewTable.read
 
   /** Bring the view to the table's CURRENT version: full compute on
     * bootstrap, CDF signed-delta afterwards (provably equal to the
@@ -66,85 +51,48 @@ final class MaterializedView(
     * Idempotent — safe to call after every micro-batch.
     */
   def refresh(): Unit = table.currentVersion.foreach { target =>
+    // readVersion(target), NOT table.read: read re-resolves the current
+    // pointer at action time, so a concurrent commit past `target` would
+    // mix a NEWER snapshot into a view recorded as `target` — the next
+    // refresh would then re-apply that delta on top (double count)
+    def recompute(): Unit =
+      viewTable.init(IncrementalView.compute(table.readVersion(target), groupCols, sumCols, extCols))
     reflectedVersion match {
       case Some(r) if r == target => ()
-      // a view persisted by an older build may lack columns the current
-      // IncrementalView maintains (e.g. __nn_/avg_/min_/max_); the
+      // a view persisted under other sum/extrema columns lacks columns the
+      // current IncrementalView maintains (e.g. __nn_/avg_/min_/max_); the
       // incremental plan would then fail on every refresh, so detect the
       // schema gap up front and recompute once — the rewrite migrates it
       case Some(r) if r < target && table.keys.nonEmpty && hasCurrentSchema =>
-        // the try covers commit() too: the incremental plan is lazy, so a
-        // concurrent expire() of base version r can surface the missing
-        // files either at plan-build time (changesBetween throws the
-        // dedicated ExpiredVersionException directly) or only when the
-        // write action executes inside commit() — Spark then wraps its
-        // own FileNotFoundException, so walk the cause chain, but accept
-        // a generic FNF only when it names the SOURCE table's path: an
-        // unrelated transient FNF must propagate, not silently degrade
-        // every refresh to a full recompute.
-        def isExpiredBase(e: Throwable): Boolean =
-          Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).exists {
-            case _: CdcTable.ExpiredVersionException => true
-            case f: java.io.FileNotFoundException =>
-              Option(f.getMessage).exists(_.contains(table.path))
-            case _ => false
+        viewTable.reflecting(Seq(table.path -> target)) {
+          // the plan is lazy, so a concurrent expire() of base version r
+          // surfaces either here (changesBetween throws the dedicated
+          // ExpiredVersionException) or when the aggregate materializes;
+          // localCheckpoint materializes it (group-cardinality-sized)
+          // BEFORE init reserves a view version, so the fallback's commit
+          // never meets a half-finished one. The dirty-group recompute
+          // scans the target through the stats-pruned version-pinned face.
+          try viewTable.init(
+            IncrementalView.refresh(read, table.changesBetween(r, target),
+              groupCols, sumCols, extCols,
+              (preds: Seq[FileSkipping.Pred]) => table.readWhereAt(target, preds))
+              .localCheckpoint())
+          catch {
+            case e: Throwable if CdcTable.isExpiredBase(e, Seq(table.path)) => recompute()
           }
-        // readVersion(target), NOT table.read: read re-resolves the
-        // current pointer at action time, so a concurrent commit past
-        // `target` would recompute dirty groups from a NEWER snapshot
-        // while the view commits as `target` — the next refresh would
-        // then re-apply that delta on top (double count). Pinning the
-        // version keeps refresh exactly version-consistent.
-        // the pruned face: the dirty-group recompute (extrema invalidated
-        // by deletes) scans the target version through the table's
-        // stats-pruned version-pinned reads — on a group-clustered table
-        // it opens only the dirty groups' files, and a refresh with no
-        // dirty group never calls this at all
-        try commit(
-          IncrementalView.refresh(read, table.changesBetween(r, target),
-            groupCols, sumCols, extCols,
-            (preds: Seq[FileSkipping.Pred]) => table.readWhereAt(target, preds)),
-          target)
-        catch {
-          case e: Throwable if isExpiredBase(e) =>
-            // pointer has not moved (commit repoints only after the data
-            // materializes), so overwriting the orphan target dir with
-            // the full recompute is safe and idempotent
-            commit(IncrementalView.compute(table.readVersion(target), groupCols, sumCols, extCols), target)
         }
-      case _ =>
-        commit(IncrementalView.compute(table.readVersion(target), groupCols, sumCols, extCols), target)
+      case _ => viewTable.reflecting(Seq(table.path -> target))(recompute())
     }
   }
 
   // the columns the CURRENT IncrementalView.compute emits; a persisted
-  // view missing any of them predates this build and must bootstrap again
+  // view missing any of them was built for other columns and must
+  // bootstrap again
   private def hasCurrentSchema: Boolean = {
     val have = read.columns.toSet
     val want = Seq(IncrementalView.CountCol) ++ sumCols ++
       sumCols.flatMap(c => Seq(s"__nn_$c", s"avg_$c")) ++
       extCols.flatMap(e => Seq(s"min_$e", s"max_$e"))
     want.forall(have)
-  }
-
-  private def commit(df: DataFrame, target: Long): Unit = {
-    // materialize fully BEFORE the pointer moves (Overwrite clears only a
-    // crashed refresh's orphan of this same target version)
-    df.write.mode(SaveMode.Overwrite).parquet(dir(target).getPath)
-    val tmp = Paths.get(path, CdcTable.CurrentPointer + ".tmp")
-    Files.writeString(tmp, f"v$target%08d")
-    Files.move(tmp, pointer.toPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    // GC view history beyond the retention window (never above the pointer)
-    val live = Option(new File(path).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d{8}"))
-      .map(_.getName.stripPrefix("v").toLong).sorted
-    live.filter(_ <= target).dropRight(retainVersions).foreach { v =>
-      def rm(f: File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir(v))
-    }
   }
 }

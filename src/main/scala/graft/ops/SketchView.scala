@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.io.File
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,11 +31,10 @@ import org.apache.spark.sql.functions._
   * All register math is built-in higher-order functions over
   * `ARRAY<INT>` (`transform` / `zip_with` / `aggregate`) — codegen'd,
   * no UDF. The view table is group-cardinality-sized (never
-  * corpus-sized), commits as one new version of its own [[CdcTable]]
-  * per refresh (atomic pointer, time travel), and the
-  * `_sketch_reflected` marker — written only after the commit — makes
-  * crash replays idempotent: re-running a window merges register maxes
-  * that are already present.
+  * corpus-sized) and commits as one new version of its own [[CdcTable]]
+  * per refresh (atomic pointer, time travel), with the reflected source
+  * version riding that commit ([[CdcTable.reflecting]]): a crashed
+  * refresh leaves registers and record both at the previous refresh.
   */
 final class SketchView(
     spark: SparkSession,
@@ -55,29 +52,28 @@ final class SketchView(
   /** The persisted view: `groupCols ++ (hll_regs, hll_sum, hll_zeros)`. */
   val table = new CdcTable(spark, path, groupCols, io = io)
 
-  private def marker = new File(path, ReflectedMarker).getPath
-
   /** Source version the persisted view reflects, if any. */
-  def reflectedVersion: Option[Long] =
-    if (!io.exists(marker)) None else Some(io.readString(marker).trim.toLong)
+  def reflectedVersion: Option[Long] = table.reflected.flatMap(_.of(source.path))
 
   /** Bring the view current with the source's head: bootstrap on first
     * call, CDF-windowed refresh afterwards; a no-op when already
     * current. An expired window (reflected version fell out of retained
-    * history) rebootstraps from the snapshot — same registers, logged
-    * by the thrown-and-caught [[CdcTable.ExpiredVersionException]] path
-    * the caller chooses; here it propagates (only the caller knows if a
-    * full re-read is acceptable).
+    * history) throws [[CdcTable.ExpiredVersionException]]: only the
+    * caller knows if the full re-read of [[bootstrap]] is acceptable.
     */
   def refresh(): Unit = source.currentVersion.foreach { cur =>
     reflectedVersion match {
-      case Some(v) if v >= cur => ()
-      case Some(v) =>
-        applyWindow(v, cur)
-        io.writeAtomic(marker, cur.toString)
-      case None =>
-        table.init(summarized(regsOf(source.readVersion(cur), groupCols, hashExpr)))
-        io.writeAtomic(marker, cur.toString)
+      case Some(v) if v == cur => ()
+      case Some(v) if v < cur =>
+        table.reflecting(Seq(source.path -> cur))(applyWindow(v, cur))
+      case _ => bootstrap()
+    }
+  }
+
+  /** Re-sketch the source's current snapshot, whatever the view holds. */
+  def bootstrap(): Unit = source.currentVersion.foreach { cur =>
+    table.reflecting(Seq(source.path -> cur)) {
+      table.init(summarized(regsOf(source.readVersion(cur), groupCols, hashExpr)))
     }
   }
 
@@ -138,11 +134,6 @@ object SketchView {
   val RegsCol = "hll_regs"
   val SumCol = "hll_sum"
   val ZerosCol = "hll_zeros"
-
-  /** Marker beside the view recording the reflected source version
-    * (written post-commit; replays idempotent).
-    */
-  val ReflectedMarker = "_sketch_reflected"
 
   /** Per-group HLL register arrays of `df`'s rows — the pure-SQL face of
     * the register rule (two combine-friendly groupBys: (group, bucket)

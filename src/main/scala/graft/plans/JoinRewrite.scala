@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 
-import graft.cdc.CdcPipeline
 import graft.ops.CdcTable
 
 /** Automatic JOIN-view substitution: the star-schema sibling of
@@ -26,9 +25,10 @@ import graft.ops.CdcTable
   * against the remaining dimensions could have dropped rows.
   *
   * Guards, spec-pinned in `JoinRewriteSpec`:
-  *   - FRESHNESS: the view's `_reflected` marker must name both tables
-  *     at their CURRENT versions (the same post-commit marker the
-  *     streaming pipeline maintains) — a stale side falls back.
+  *   - FRESHNESS: the view table's reflected record
+  *     ([[CdcTable.reflected]], the one the streaming pipeline commits
+  *     with each refresh) must name every table at its CURRENT version —
+  *     a stale side falls back.
   *   - SNAPSHOT IDENTITY: each join side's scanned file set must equal
   *     its table's current-version file set (time travel, pruned or
   *     deletion-vectored reads never match).
@@ -41,13 +41,13 @@ import graft.ops.CdcTable
   */
 object JoinRewrite extends Rule[LogicalPlan] {
 
-  /** One dimension of a registered star: name (as in the `_reflected`
-    * marker), table, and the `(factCol, dimKey)` join mapping.
+  /** One dimension of a registered star: name (as in the view's
+    * reflected record), table, and the `(factCol, dimKey)` join mapping.
     */
   final case class DimReg(name: String, table: CdcTable, on: Seq[(String, String)])
 
   /** One VALIDATED, mutually-consistent observation: the view version
-    * whose `_reflected` marker named every source table at its current
+    * whose reflected record named every source table at its current
     * version, together with the file sets of exactly those versions.
     * Matching against this bundle (never against freshly re-resolved
     * state) is what makes memoization safe: a plan over NEWER snapshots
@@ -76,10 +76,9 @@ object JoinRewrite extends Rule[LogicalPlan] {
         val s = (for {
           fv <- fact.currentVersion
           dvs <- Some(dims.map(_.table.currentVersion)) if dvs.forall(_.isDefined)
-          m <- JoinRewrite.readReflected(view.path)
-          if m == (factName -> fv) +: dims.zip(dvs).map { case (d, dv) => d.name -> dv.get }
-          vv <- view.currentVersion
-        } yield Snap(vv,
+          m <- view.reflected
+          if m.sources == (factName -> fv) +: dims.zip(dvs).map { case (d, dv) => d.name -> dv.get }
+        } yield Snap(m.version,
           filesAt(fact, fv),
           dims.zip(dvs).map { case (d, dv) => filesAt(d.table, dv.get) }))
         memo = (now, s)
@@ -95,24 +94,6 @@ object JoinRewrite extends Rule[LogicalPlan] {
   }
 
   private val regs = TrieMap.empty[String, Reg]
-
-  /** Read the `_reflected` marker beside a maintained join view (the
-    * `name:version` lines [[graft.cdc.CdcPipeline]] writes post-commit).
-    */
-  private[plans] def readReflected(viewPath: String): Option[Seq[(String, Long)]] = {
-    val f = new java.io.File(viewPath, CdcPipeline.ReflectedMarker)
-    if (!f.exists()) None
-    else scala.util.Try {
-      val entries = java.nio.file.Files.readString(f.toPath)
-        .linesIterator.map(_.trim).filter(_.nonEmpty).toSeq.map { tok =>
-          val i = tok.lastIndexOf(':')
-          require(i > 0)
-          (tok.substring(0, i), tok.substring(i + 1).toLong)
-        }
-      require(entries.nonEmpty)
-      entries
-    }.toOption
-  }
 
   /** Register a maintained single-dimension join view for substitution.
     * `on` maps fact foreign-key columns to the dimension's merge keys,

@@ -67,13 +67,15 @@ object MvRewrite extends Rule[LogicalPlan] {
         files
       }
     }
-    /** The reflected version, iff it matches the table's current
-      * version — returned so the caller can PIN its read to exactly the
-      * refresh it validated (a concurrent refresh's pointer move between
-      * this check and the read must not swap in newer content).
+    /** The view version whose reflected record names the table's
+      * current version — returned so the caller can PIN its read to
+      * exactly the refresh it validated (a concurrent refresh's commit
+      * between this check and the read must not swap in newer content).
       */
     def freshVersion: Option[Long] =
-      view.reflectedVersion.filter(v => view.table.currentVersion.contains(v))
+      view.viewTable.reflected
+        .filter(r => r.of(view.table.path).exists(view.table.currentVersion.contains))
+        .map(_.version)
   }
 
   private val regs = TrieMap.empty[String, Reg]
@@ -207,7 +209,7 @@ object MvRewrite extends Rule[LogicalPlan] {
     if (cols.exists(_.isEmpty)) return None
     val outCols = cols.flatten
 
-    var vdf: DataFrame = v.readAt(pinnedVersion)
+    var vdf: DataFrame = v.viewTable.readVersion(pinnedVersion)
     filters.foreach(f => vdf = vdf.filter(f.sql))
     val aggCols = aggExprs.zip(outCols).collect {
       case (ne, c) if !ne.isInstanceOf[AttributeReference] => c

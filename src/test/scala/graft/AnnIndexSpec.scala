@@ -44,7 +44,7 @@ class AnnIndexSpec extends SparkSpec {
     idx.refresh(src)
     // maintained == rebuilt from the current snapshot, row for row
     assert(listRows(idx.lists.read) == listRows(idx.assign(src.read)))
-    assert(idx.indexedVersion == src.currentVersion.get)
+    assert(idx.indexedVersion(src) == src.currentVersion)
     // refresh is idempotent / no-op when current
     idx.refresh(src)
     assert(listRows(idx.lists.read) == listRows(idx.assign(src.read)))
@@ -69,7 +69,7 @@ class AnnIndexSpec extends SparkSpec {
       idx.refresh(src)
       assert(listRows(idx.lists.read) == listRows(idx.assign(src.read)),
         s"maintained != rebuilt after window $w")
-      assert(idx.indexedVersion == src.currentVersion.get)
+      assert(idx.indexedVersion(src) == src.currentVersion)
     }
   }
 

@@ -141,11 +141,12 @@ class GramViewSpec extends SparkSpec {
     val view = new GramView(spark, src, s"$root/gram", "embedding")
     view.refresh()
     val bootSrcV = src.currentVersion.get
+    val bootViewV = view.table.currentVersion.get
 
     // the reflected version is a COMMIT TAG of the view's own version —
     // atomic with the matrix, not a post-commit sidecar
-    assert(view.table.commitTags(view.table.currentVersion.get)
-      .get(GramView.ReflectedTag).map(_.toLong) === Some(bootSrcV))
+    assert(view.table.commitTags(bootViewV).get(s"${CdcTable.ReflectedTag}0") ===
+      Some(s"${src.path}:$bootSrcV"))
 
     def batch(rows: (Long, Array[Float], String)*) =
       rows.toSeq.toDF("vec_id", "embedding", "__op").withColumn("__ts_ms", lit(10L))
@@ -154,13 +155,12 @@ class GramViewSpec extends SparkSpec {
     val expect = cells(GramView.gramOf(src.read, "embedding"))
     assert(cells(view.table.read) === expect)
 
-    // Simulate the r13-advice crash state under the OLD post-commit-marker
-    // scheme: matrix already reflects the window, sidecar still points at
-    // the pre-window source version. The commit tag is newer and wins, so
-    // a re-refresh must NOT re-apply the window's signed delta.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/gram", GramView.ReflectedMarker),
-      bootSrcV.toString)
+    // the crash state a post-commit marker would leave: the matrix
+    // already reflects the window, a sidecar still names the pre-window
+    // source version. That sidecar was written against an older view
+    // head, so the newer commit tag wins and a re-refresh must NOT
+    // re-apply the window's signed delta.
+    writeSidecar(s"$root/gram", bootViewV, s"${src.path}:$bootSrcV")
     assert(view.reflectedVersion === src.currentVersion)
     val vAfter = view.table.currentVersion.get
     view.refresh()
@@ -168,30 +168,43 @@ class GramViewSpec extends SparkSpec {
     assert(cells(view.table.read) === expect, "signed delta not double-applied")
   }
 
-  test("a tagged refresh commit at/past the sidecar value clears the sidecar") {
-    // r14-advice trap: a stale fast-forward sidecar left behind after a
-    // tagged refresh would be PROMOTED if the view's table were ever
-    // restored (RESTORE commits carry no tags) — refreshes would then
-    // skip windows against a rolled-back matrix. The fix: a tagged
-    // refresh commit that reaches the sidecar's value deletes it.
+  test("a later commit retires the fast-forward sidecar; a RESTORE cannot promote it") {
     val root = tmpDir("gramsidecar")
     val src = new CdcTable(spark, s"$root/vecs", Seq("vec_id"))
     src.init(vecs(1L -> axis(0, 1.0f)))
     val view = new GramView(spark, src, s"$root/gram", "embedding")
     view.refresh()
-    val marker = java.nio.file.Paths.get(s"$root/gram", GramView.ReflectedMarker)
-    // simulate an empty-window fast-forward: sidecar at the current head
-    java.nio.file.Files.writeString(marker, src.currentVersion.get.toString)
+    val bootViewV = view.table.currentVersion.get
+    // an empty window (the source's compaction keeps its rows) fast-
+    // forwards the record through the sidecar and burns no view version
+    src.compact()
+    view.refresh()
+    assert(view.table.currentVersion.get === bootViewV)
+    assert(view.reflectedVersion === src.currentVersion)
+    val sidecar = java.nio.file.Paths.get(s"$root/gram", CdcTable.ReflectedSidecarName)
+    assert(java.nio.file.Files.exists(sidecar))
+
     def batch(rows: (Long, Array[Float], String)*) =
       rows.toSeq.toDF("vec_id", "embedding", "__op").withColumn("__ts_ms", lit(10L))
     src.merge(batch((2L, axis(1, 2.0f), "c")), "__ts_ms")
-    view.refresh() // tagged commit lands PAST the sidecar value
-    assert(!java.nio.file.Files.exists(marker), "stale sidecar not cleared")
-    // reflected version now derives from the commit tag ALONE, so a
-    // restore of the view's table can no longer promote stale state
+    view.refresh() // tagged commit lands past the sidecar's head
+    assert(view.reflectedVersion === src.currentVersion)
+    assert(cells(view.table.read) === cells(GramView.gramOf(src.read, "embedding")))
+    // restoring the view's table to the bootstrap version brings back
+    // the bootstrap matrix under a new, untagged head: the sidecar names
+    // an older head, so the view reads as unreflected — it re-syncs
+    // instead of skipping windows against a rolled-back matrix
+    view.table.restore(bootViewV)
+    assert(view.reflectedVersion === None)
+    view.refresh()
     assert(view.reflectedVersion === src.currentVersion)
     assert(cells(view.table.read) === cells(GramView.gramOf(src.read, "embedding")))
   }
+
+  private def writeSidecar(viewPath: String, head: Long, entry: String): Unit =
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(viewPath, CdcTable.ReflectedSidecarName),
+      s"${CdcTable.ReflectedTag}0\t$entry\n${CdcTable.ReflectedHeadTag}\t$head"): Unit
 
   test("refresh is idempotent and an up-to-date view burns no version") {
     val root = tmpDir("gramview2")

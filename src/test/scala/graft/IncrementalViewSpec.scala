@@ -228,19 +228,33 @@ class IncrementalViewSpec extends SparkSpec {
     mv.refresh()
     val reflected = mv.reflectedVersion.get
 
-    // table advances; a refresh CRASHES after materializing the new view
-    // dir but before the pointer rename — simulated by writing garbage to
-    // the dir the next refresh will target
+    // table advances; a refresh CRASHES after materializing its commit
+    // and writing the version's metadata — record included — but before
+    // the pointer rename: simulated by writing garbage data and a
+    // manifest + tags naming the new source version into the view
+    // version the next refresh reserves
     t.merge(Seq((3L, Some("a"), Some(5L), 1L, "c")).toDF("id", "grp", "amt", "ts", "__op"), "ts")
     val target = t.currentVersion.get
+    val orphan = mv.viewTable.currentVersion.get + 1
     Seq(("junk", 999L, 999L)).toDF("grp", IncrementalView.CountCol, "amt")
-      .write.parquet(f"$root/view/v$target%08d")
-    // the pointer never moved: reads still serve the old consistent view
+      .write.parquet(f"$root/view/c$orphan%08d")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(f"$root/view/v$orphan%08d"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(f"$root/view/v$orphan%08d/${CdcTable.ManifestName}"), f"\tc$orphan%08d")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(f"$root/view/v$orphan%08d/${CdcTable.CommitTagsName}"),
+      s"${CdcTable.ReflectedTag}0\t${t.path}:$target")
+    // the pointer never moved: reads still serve the old consistent view,
+    // and the orphan's record is invisible with it
     assert(mv.reflectedVersion.contains(reflected))
     assert(!sorted(mv.read).exists(_._1 == "junk"))
 
-    // the retried refresh overwrites the orphan (idempotent re-derivation,
-    // NOT a delta double-apply) and lands exactly at the recompute
+    // the crashed writer's reservation is reclaimed (the takeover step of
+    // mergeWithRetry); the retried refresh re-derives the target from the
+    // old record — NOT a delta double-apply — and lands exactly at the
+    // recompute
+    java.nio.file.Files.walk(java.nio.file.Paths.get(f"$root/view/v$orphan%08d"))
+      .sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
     mv.refresh()
     assert(mv.reflectedVersion.contains(target))
     assert(sorted(mv.read) == sorted(IncrementalView.compute(t.read, Seq("grp"), Seq("amt"))))
@@ -252,18 +266,23 @@ class IncrementalViewSpec extends SparkSpec {
     val t = new CdcTable(spark, s"$root/t", Seq("id"), retainVersions = 10)
     t.init(Seq((1L, Some("a"), Some(10L)), (2L, Some("b"), Some(20L))).toDF("id", "grp", "amt"))
     val v1 = t.currentVersion.get
-    // a view dir written by the build BEFORE avg/min/max maintenance:
-    // only (groupCols, n_rows, sums) — no __nn_/avg_ columns
+    // a view written by the build BEFORE avg/min/max maintenance and
+    // before the reflected record: its own `_current` -> `vNNNNNNNN`
+    // layout named by source version, holding only (groupCols, n_rows,
+    // sums) — no __nn_/avg_ columns, no record
     Seq(("a", 1L, 10L), ("b", 1L, 20L)).toDF("grp", IncrementalView.CountCol, "amt")
       .write.parquet(f"$root/view/v$v1%08d")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/view", CdcTable.CurrentPointer), f"v$v1%08d")
     val mv = new MaterializedView(spark, t, s"$root/view", Seq("grp"), Seq("amt"))
+    assert(mv.reflectedVersion.isEmpty, "an old view carries no record")
 
     // table advances; the incremental path would reference __nn_amt and
-    // fail permanently — the schema gate must route to a full recompute
+    // fail permanently — the view must migrate by ONE full recompute
     t.merge(Seq((3L, Some("a"), Some(5L), 1L, "c")).toDF("id", "grp", "amt", "ts", "__op"), "ts")
+    val before = mv.viewTable.currentVersion.get
     mv.refresh()
+    assert(mv.viewTable.currentVersion.contains(before + 1), "one recompute commit")
     assert(mv.reflectedVersion.contains(t.currentVersion.get))
     assert(sorted(mv.read) == sorted(IncrementalView.compute(t.read, Seq("grp"), Seq("amt"))))
     // and the migrated view resumes INCREMENTAL maintenance afterwards

@@ -25,8 +25,8 @@ class JoinRewriteSpec extends SparkSpec {
     leaves.nonEmpty && leaves.forall(_.contains(pathPart))
   }
 
-  /** Fact + dim CdcTables, the maintained view (bootstrap compute), and
-    * the post-commit `_reflected` marker the pipeline would write.
+  /** Fact + dim CdcTables and the maintained view (bootstrap compute),
+    * committed with the reflected record the pipeline would write.
     */
   private def fixture(name: String): (CdcTable, CdcTable, CdcTable, String) = {
     val root = tmpDir(name)
@@ -39,17 +39,16 @@ class JoinRewriteSpec extends SparkSpec {
       .toDF("c_id", "segment"))
     val on = Seq("cust_fk" -> "c_id")
     val view = new CdcTable(spark, s"$root/jv", Seq("o_id"), retainVersions = 10)
-    view.init(JoinView.compute(fact.read, dim.read, on)
-      .withColumn(JoinView.TsCol, lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))))
-    writeMarker(view.path, fact, dim)
+    reflectingBoth(view, fact, dim) {
+      view.init(JoinView.compute(fact.read, dim.read, on)
+        .withColumn(JoinView.TsCol, lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))))
+    }
     JoinRewrite.register("orders_t", fact, "cust_t", dim, on, view)
     (fact, dim, view, root)
   }
 
-  private def writeMarker(viewPath: String, fact: CdcTable, dim: CdcTable): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(viewPath, graft.cdc.CdcPipeline.ReflectedMarker),
-      s"orders_t:${fact.currentVersion.get}\ncust_t:${dim.currentVersion.get}"): Unit
+  private def reflectingBoth(view: CdcTable, fact: CdcTable, dim: CdcTable)(body: => Unit): Unit =
+    view.reflecting(Seq("orders_t" -> fact.currentVersion.get, "cust_t" -> dim.currentVersion.get))(body)
 
   test("fact-join-dim is served from the maintained view, dim key maps to the fk") {
     val (fact, dim, view, _) = fixture("jrw1")
@@ -91,6 +90,7 @@ class JoinRewriteSpec extends SparkSpec {
   }
 
   test("staleness: a merged side without a refreshed marker falls back to the real join") {
+    // (the "marker" is the view's reflected record)
     val (fact, dim, view, _) = fixture("jrw4")
     try {
       fact.merge(Seq((5L, 20L, 500L, 1L, "c")).toDF("o_id", "cust_fk", "amount", "ts", "__op"), "ts")
@@ -99,11 +99,13 @@ class JoinRewriteSpec extends SparkSpec {
         .select("o_id", "segment")
       assert(!scansOnly(q, "/jv"), "stale view must not serve the join")
       assert(q.collect().length == 5, "fallback must see the merged row")
-      // refresh the view content + marker (what the pipeline does) -> re-arms
-      JoinView.refresh(view, fact, fact.currentVersion.get - 1, fact.currentVersion.get,
-        dim, dim.currentVersion.get, dim.currentVersion.get,
-        Seq("cust_fk" -> "c_id"), new java.sql.Timestamp(2L))
-      writeMarker(view.path, fact, dim)
+      // refresh the view content under a new record (what the pipeline
+      // does) -> re-arms
+      reflectingBoth(view, fact, dim) {
+        JoinView.refresh(view, fact, fact.currentVersion.get - 1, fact.currentVersion.get,
+          dim, dim.currentVersion.get, dim.currentVersion.get,
+          Seq("cust_fk" -> "c_id"), new java.sql.Timestamp(2L))
+      }
       val f2 = fact.read; val d2 = dim.read
       val q2 = f2.join(d2, f2("cust_fk") === d2("c_id"))
         .select("o_id", "segment")
@@ -123,13 +125,12 @@ class JoinRewriteSpec extends SparkSpec {
     val clerk = new CdcTable(spark, s"$root/clerk_t", Seq("k_id"), retainVersions = 10)
     clerk.init(Seq((7L, "emea"), (8L, "apac")).toDF("k_id", "region"))
     val view = new CdcTable(spark, s"$root/jv", Seq("o_id"), retainVersions = 10)
-    view.init(JoinView.computeStar(fact.read,
-      Seq(cust.read -> Seq("cust_fk" -> "c_id"), clerk.read -> Seq("clerk_fk" -> "k_id")))
-      .withColumn(JoinView.TsCol, lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(view.path, graft.cdc.CdcPipeline.ReflectedMarker),
-      s"orders_t:${fact.currentVersion.get}\ncust_t:${cust.currentVersion.get}\n" +
-        s"clerk_t:${clerk.currentVersion.get}")
+    view.reflecting(Seq("orders_t" -> fact.currentVersion.get,
+        "cust_t" -> cust.currentVersion.get, "clerk_t" -> clerk.currentVersion.get)) {
+      view.init(JoinView.computeStar(fact.read,
+        Seq(cust.read -> Seq("cust_fk" -> "c_id"), clerk.read -> Seq("clerk_fk" -> "k_id")))
+        .withColumn(JoinView.TsCol, lit(java.sql.Timestamp.valueOf("2001-01-01 00:00:00"))))
+    }
     JoinRewrite.registerStar("orders_t", fact, Seq(
       JoinRewrite.DimReg("cust_t", cust, Seq("cust_fk" -> "c_id")),
       JoinRewrite.DimReg("clerk_t", clerk, Seq("clerk_fk" -> "k_id"))), view)

@@ -58,9 +58,10 @@ class SketchViewSpec extends SparkSpec {
     view.refresh()
     assert(rows(view.table.read) == recompute(source))
 
-    // replay the same window (crash between commit and marker): no change
+    // replay the same window: rewind the record to the window's start
+    // without touching the registers, then refresh again — no change
     val vBefore = view.table.currentVersion
-    LocalIo.writeMarker(s"$root/view", source.currentVersion.get - 1)
+    rewindRecord(view, source, source.currentVersion.get - 1)
     view.refresh()
     assert(rows(view.table.read) == recompute(source))
 
@@ -107,9 +108,9 @@ class SketchViewSpec extends SparkSpec {
     assert(view.table.currentVersion == v0, "no-op window must not commit")
   }
 
-  private object LocalIo {
-    def writeMarker(viewPath: String, v: Long): Unit =
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(viewPath, SketchView.ReflectedMarker), v.toString): Unit
-  }
+  /** Commit the view's current registers again, recorded as reflecting
+    * source version `v`.
+    */
+  private def rewindRecord(view: SketchView, source: CdcTable, v: Long): Unit =
+    view.table.reflecting(Seq(source.path -> v))(view.table.init(view.table.read))
 }

@@ -209,34 +209,43 @@ class StreamingSpec extends SparkSpec {
     assert(new CdcTable(spark, s"$root/jview", Seq("id")).read
       .filter(col("id") === 3L).select("name").as[String].head() == "z")
 
-    // crash window: the reflected-versions marker is lost after the view
-    // committed (crash between merge and marker write) — the next batch
-    // re-bootstraps idempotently and the view still equals the recompute
-    assert(new java.io.File(s"$root/jview", CdcPipeline.ReflectedMarker).delete())
+    // a view committed without a reflected record (as one persisted
+    // before the record existed) reads as never reflected: the next batch
+    // re-bootstraps once and the view still equals the recompute
+    val jview = new CdcTable(spark, s"$root/jview", Seq("id"))
+    jview.init(jview.read)
+    assert(jview.reflected.isEmpty)
     dimEnv(Seq((99L, "z2", 4000L, "u"))).write.mode("append").parquet(envDir)
     run()
-    assertViewCurrent("marker-crash recovery")
+    assertViewCurrent("record-less view recovery")
     assert(new CdcTable(spark, s"$root/jview", Seq("id")).read
       .filter(col("id") === 3L).select("name").as[String].head() == "z2")
+    assert(jview.reflected.exists(_.sources.map(_._1) == Seq("fact", "dim")))
   }
 
-  test("_reflected marker roundtrips names with spaces/colons; rejects line separators; old format re-bootstraps") {
+  test("reflected record roundtrips names with spaces/colons; rejects line separators; old format re-bootstraps") {
+    import graft.ops.CdcTable
     val root = tmpDir("reflmarker")
-    val p = new CdcPipeline(spark, new graft.sources.FileEnvelopeSource(s"$root/env"),
-      s"$root/ckpt", s"$root/tables")
-    val viewPath = s"$root/view"
-    assert(new java.io.File(viewPath).mkdirs())
+    val view = new CdcTable(spark, s"$root/view", Seq("id"))
     val entries = Seq("my fact" -> 3L, "dim:with:colons" -> 5L)
-    p.writeReflected(viewPath, entries)
-    assert(p.readReflected(viewPath).contains(entries))
-    intercept[IllegalArgumentException](
-      p.writeReflected(viewPath, Seq("bad\nname" -> 1L)))
-    // a pre-r11 space-separated multi-entry marker must parse as None or a
-    // non-matching name list (one re-bootstrap), never as a wrong window
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(viewPath, CdcPipeline.ReflectedMarker), "a:3 b:5")
-    val old = p.readReflected(viewPath)
-    assert(old.forall(_.map(_._1) != Seq("a", "b")))
+    view.reflecting(entries)(view.init(Seq((1L, "a")).toDF("id", "v")))
+    assert(view.reflected.map(_.sources).contains(entries))
+    // a name the record cannot hold is rejected before the refresh runs
+    var ran = false
+    Seq("bad\nname", "bad\rname").foreach { bad =>
+      intercept[IllegalArgumentException](view.reflecting(Seq(bad -> 1L)) { ran = true })
+    }
+    assert(!ran)
+    // the earlier formats — a `_reflected` marker file beside the view (in
+    // either its line or its space-separated shape) and GramView's
+    // single-version tag — hold no record: the view re-bootstraps once and
+    // never replays a window from them
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(view.path, "_reflected"), "a:3\nb:5")
+    view.init(view.read)
+    assert(view.reflected.isEmpty)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(view.path, "_reflected"), "a:3 b:5")
+    view.withCommitTags(Map("gram.reflected_source_version" -> "3"))(view.init(view.read))
+    assert(view.reflected.isEmpty)
   }
 
   test("join view registered on a non-PK dim column fails fast, never silently maintains a wrong view") {
