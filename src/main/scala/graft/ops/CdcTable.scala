@@ -692,9 +692,8 @@ final class CdcTable(
     * visible exactly iff the commit is.
     */
   def withCommitTags[A](tags: Map[String, String])(body: => A): A = {
-    require(tags.forall { case (k, v) =>
-      !k.exists(c => c == '\t' || c == '\n') && !v.exists(c => c == '\t' || c == '\n') },
-      "commit tags must not contain tabs or newlines")
+    require(tags.forall { case (k, v) => !(k + v).exists(c => c == '\t' || c == '\n' || c == '\r') },
+      "commit tags must not contain tabs or line separators")
     val prev = pendingTags
     pendingTags = prev ++ tags
     try body finally pendingTags = prev
@@ -727,17 +726,21 @@ final class CdcTable(
     * the head it was verified against; it counts only while that version
     * is still the head, so any later commit — a RESTORE included —
     * retires it. Source names may hold spaces and colons, not tabs or
-    * line separators.
+    * line separators ([[withCommitTags]] rejects those).
+    *
+    * A view's table has ONE writer, its refresh (maintenance of the view
+    * table runs between refreshes, not beside them), so a reservation
+    * above the head when a refresh starts can only be a crashed earlier
+    * refresh — or an orphan of a view written before the record existed
+    * — and is reclaimed here: the refresh recovers by itself instead of
+    * meeting a dead writer's claim on every retry.
     */
   def reflecting[A](sources: Seq[(String, Long)])(body: => A): A = {
-    require(sources.nonEmpty, "a reflected record names at least one source")
-    sources.foreach { case (n, _) =>
-      require(n.nonEmpty && !n.exists(c => c == '\t' || c == '\n' || c == '\r'),
-        s"source name '${n.replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")}' " +
-          "is empty or holds a tab or line separator — unrepresentable in the reflected record")
-    }
+    require(sources.nonEmpty && sources.forall(_._1.nonEmpty),
+      "a reflected record names at least one source, each by a non-empty name")
     val tags = reflectedTags(sources)
     val before = currentVersion
+    reclaim(before.getOrElse(0L) + 1)
     val out = withCommitTags(tags)(body)
     currentVersion.filter(head => before.contains(head)).foreach { head =>
       io.writeAtomic(fastForwardFile.getPath, renderTags(tags + (ReflectedHeadTag -> head.toString)))
@@ -1623,10 +1626,23 @@ final class CdcTable(
               currentVersion.getOrElse(0L) + 1 == nxt &&
               io.lastModified(versionDir(nxt).getPath) == sig._2)
             // stale for the whole observed backoff: presumed dead
-            io.deleteRecursively(versionDir(nxt).getPath)
+            reclaim(nxt)
       }
     }
   }
+
+  /** Remove a dead writer's reservation of version `n` (above the
+    * pointer): its commit dir and deletion vector first, its version dir
+    * last, so a reclaim cut short is redone by the next one. A later
+    * commit of `n` then starts clean — a stale vector left behind would
+    * otherwise read as that commit's deletes.
+    */
+  private def reclaim(n: Long): Unit =
+    if (io.exists(versionDir(n).getPath)) {
+      io.deleteRecursively(commitDir(n).getPath)
+      io.deleteRecursively(dvVersionDir(n).getPath)
+      io.deleteRecursively(versionDir(n).getPath)
+    }
 
   // ------------------------------------------------------- deletion vectors
 

@@ -16,10 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `groupCols`, one version per refresh. The source version it reflects
   * rides that version's commit ([[CdcTable.reflecting]]), so data and
   * freshness record commit atomically: a crash mid-refresh leaves both at
-  * the previous refresh, and the retried refresh re-derives the same
-  * target from there — never re-APPLIES a delta to an already-refreshed
-  * aggregate. A view persisted before the record existed reads as never
-  * refreshed and recomputes once.
+  * the previous refresh, and the retried refresh reclaims the crashed
+  * one's reservation and re-derives the same target from there — never
+  * re-APPLIES a delta to an already-refreshed aggregate. A view persisted
+  * before the record existed reads as never refreshed and recomputes once.
   */
 final class MaterializedView(
     spark: SparkSession,
@@ -51,12 +51,13 @@ final class MaterializedView(
     * Idempotent — safe to call after every micro-batch.
     */
   def refresh(): Unit = table.currentVersion.foreach { target =>
+    val at = Seq(table.path -> target)
     // readVersion(target), NOT table.read: read re-resolves the current
     // pointer at action time, so a concurrent commit past `target` would
     // mix a NEWER snapshot into a view recorded as `target` — the next
     // refresh would then re-apply that delta on top (double count)
-    def recompute(): Unit =
-      viewTable.init(IncrementalView.compute(table.readVersion(target), groupCols, sumCols, extCols))
+    def recompute(): Unit = viewTable.reflecting(at)(
+      viewTable.init(IncrementalView.compute(table.readVersion(target), groupCols, sumCols, extCols)))
     reflectedVersion match {
       case Some(r) if r == target => ()
       // a view persisted under other sum/extrema columns lacks columns the
@@ -64,24 +65,20 @@ final class MaterializedView(
       // incremental plan would then fail on every refresh, so detect the
       // schema gap up front and recompute once — the rewrite migrates it
       case Some(r) if r < target && table.keys.nonEmpty && hasCurrentSchema =>
-        viewTable.reflecting(Seq(table.path -> target)) {
-          // the plan is lazy, so a concurrent expire() of base version r
-          // surfaces either here (changesBetween throws the dedicated
-          // ExpiredVersionException) or when the aggregate materializes;
-          // localCheckpoint materializes it (group-cardinality-sized)
-          // BEFORE init reserves a view version, so the fallback's commit
-          // never meets a half-finished one. The dirty-group recompute
-          // scans the target through the stats-pruned version-pinned face.
-          try viewTable.init(
-            IncrementalView.refresh(read, table.changesBetween(r, target),
-              groupCols, sumCols, extCols,
-              (preds: Seq[FileSkipping.Pred]) => table.readWhereAt(target, preds))
-              .localCheckpoint())
-          catch {
-            case e: Throwable if CdcTable.isExpiredBase(e, Seq(table.path)) => recompute()
-          }
+        // the plan is lazy, so a concurrent expire() of base version r
+        // surfaces either here (changesBetween throws the dedicated
+        // ExpiredVersionException) or only when init writes the aggregate;
+        // the fallback's own reflecting reclaims a reservation the failed
+        // write left. The dirty-group recompute scans the target through
+        // the stats-pruned version-pinned face.
+        try viewTable.reflecting(at)(viewTable.init(
+          IncrementalView.refresh(read, table.changesBetween(r, target),
+            groupCols, sumCols, extCols,
+            (preds: Seq[FileSkipping.Pred]) => table.readWhereAt(target, preds))))
+        catch {
+          case e: Throwable if CdcTable.isExpiredBase(e, Seq(table.path)) => recompute()
         }
-      case _ => viewTable.reflecting(Seq(table.path -> target))(recompute())
+      case _ => recompute()
     }
   }
 

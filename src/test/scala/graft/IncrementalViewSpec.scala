@@ -249,12 +249,9 @@ class IncrementalViewSpec extends SparkSpec {
     assert(mv.reflectedVersion.contains(reflected))
     assert(!sorted(mv.read).exists(_._1 == "junk"))
 
-    // the crashed writer's reservation is reclaimed (the takeover step of
-    // mergeWithRetry); the retried refresh re-derives the target from the
-    // old record — NOT a delta double-apply — and lands exactly at the
-    // recompute
-    java.nio.file.Files.walk(java.nio.file.Paths.get(f"$root/view/v$orphan%08d"))
-      .sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    // the retried refresh reclaims the orphan and re-derives the target
+    // from the old record (idempotent re-derivation, NOT a delta
+    // double-apply) and lands exactly at the recompute
     mv.refresh()
     assert(mv.reflectedVersion.contains(target))
     assert(sorted(mv.read) == sorted(IncrementalView.compute(t.read, Seq("grp"), Seq("amt"))))
@@ -288,6 +285,40 @@ class IncrementalViewSpec extends SparkSpec {
     // and the migrated view resumes INCREMENTAL maintenance afterwards
     t.merge(Seq((4L, Some("b"), Some(7L), 2L, "c")).toDF("id", "grp", "amt", "ts", "__op"), "ts")
     mv.refresh()
+    assert(sorted(mv.read) == sorted(IncrementalView.compute(t.read, Seq("grp"), Seq("amt"))))
+  }
+
+  test("an old-layout MaterializedView holding crashed refreshes' orphan dirs still refreshes") {
+    import graft.ops.MaterializedView
+    val root = tmpDir("mvieworphan")
+    val t = new CdcTable(spark, s"$root/t", Seq("id"), retainVersions = 10)
+    t.init(Seq((1L, Some("a"), Some(10L)), (2L, Some("b"), Some(20L))).toDF("id", "grp", "amt"))
+    val v1 = t.currentVersion.get
+    def upsert(id: Long, grp: String, amt: Long, ts: Long): Unit =
+      t.merge(Seq((id, Some(grp), Some(amt), ts, "c")).toDF("id", "grp", "amt", "ts", "__op"), "ts")
+    // the old layout names view dirs by source version; two refreshes of
+    // the old build crashed after writing their target dirs, so orphans
+    // sit at the pointer's next two numbers — which the view's own table
+    // reserves next
+    val view = IncrementalView.compute(t.read, Seq("grp"), Seq("amt"))
+    view.write.parquet(f"$root/view/v$v1%08d")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$root/view", CdcTable.CurrentPointer), f"v$v1%08d")
+    upsert(3L, "a", 5L, 1L)
+    upsert(4L, "b", 7L, 2L)
+    Seq(v1 + 1, v1 + 2).foreach { v =>
+      Seq(("junk", 999L, 999L)).toDF("grp", IncrementalView.CountCol, "amt")
+        .write.parquet(f"$root/view/v$v%08d")
+    }
+    val mv = new MaterializedView(spark, t, s"$root/view", Seq("grp"), Seq("amt"))
+    mv.refresh()
+    assert(mv.reflectedVersion.contains(t.currentVersion.get))
+    assert(sorted(mv.read) == sorted(IncrementalView.compute(t.read, Seq("grp"), Seq("amt"))))
+    // the next refresh reserves the second orphan's number and reclaims it
+    upsert(5L, "a", 1L, 3L)
+    mv.refresh()
+    assert(mv.viewTable.currentVersion.contains(v1 + 2))
+    assert(mv.reflectedVersion.contains(t.currentVersion.get))
     assert(sorted(mv.read) == sorted(IncrementalView.compute(t.read, Seq("grp"), Seq("amt"))))
   }
 

@@ -37,10 +37,9 @@ class ReflectedRecordSpec extends SparkSpec {
   /** Run `open(path, io).refresh` over a fresh copy of the `template`
     * view once per N = 1, 2, ..., the view's TableIO dying at call N,
     * until a refresh completes. After each crash the view must hold its
-    * before or its after state, and — once the dead writer's reservation
-    * is reclaimed, as mergeWithRetry's takeover does — the next refresh
-    * must land on `want`. Returns the number of calls a whole refresh
-    * makes.
+    * before or its after state, and the next refresh — with whatever the
+    * dead one left on storage — must land on `want`. Returns the number
+    * of calls a whole refresh makes.
     */
   private def sweep(root: String, template: String, source: CdcTable,
                     open: (String, TableIO) => (CdcTable, () => Unit),
@@ -71,8 +70,6 @@ class ReflectedRecordSpec extends SparkSpec {
       val got = state(t, rows)
       assert(got == before || got == after, s"crash at TableIO call $n left a mixed state: $got")
       if (crashed) {
-        val dead = new java.io.File(path, f"v${t.currentVersion.get + 1}%08d")
-        if (dead.exists()) LocalTableIO.deleteRecursively(dead.getPath)
         refresh()
         assert(state(t, rows) == after, s"refresh after a crash at TableIO call $n")
       }
