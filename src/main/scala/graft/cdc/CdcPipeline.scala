@@ -29,52 +29,32 @@ final class CdcPipeline(
     source: graft.sources.EnvelopeSource,
     checkpointDir: String,
     tableRoot: String,
-    /** Materialized views to maintain inside the ingestion flow: after a
-      * table's micro-batch merge commits, its registered views refresh
-      * from the table's change data feed (merge -> CDF -> signed-delta
-      * refresh, no re-scan) — see [[graft.ops.MaterializedView]].
+    /** The artifacts maintained inside the ingestion flow, refreshed in
+      * this order after all of a micro-batch's table merges commit (and
+      * after an [[erase]]): every registered view one of whose source
+      * tables the batch touched catches up from those tables' change
+      * feeds through [[graft.ops.CdcTable.refreshView]] — a no-op when
+      * current, the window otherwise, a bootstrap when it has none or its
+      * window expired from retained history. The reference's
+      * stream-maintains-sink shape (incremental_kafka_s3_cdc.py:384-398),
+      * one registration per artifact kind:
+      *   - [[CdcPipeline.ViewSpec]]: a count/sum/avg/min/max
+      *     [[graft.ops.MaterializedView]] (signed-delta refresh);
+      *   - [[CdcPipeline.JoinViewSpec]]: an enriched fact ⋈ dimension(s)
+      *     [[graft.ops.JoinView]] (delta-bounded restricted recompute);
+      *   - [[CdcPipeline.DerivedViewSpec]]: a row-local
+      *     [[graft.ops.DerivedView]] (transform-of-delta upserts);
+      *   - [[CdcPipeline.SketchViewSpec]]: per-group HLL registers, a
+      *     [[graft.ops.SketchView]];
+      *   - [[CdcPipeline.AnnIndexSpec]]: an [[graft.ops.IvfIndex]] whose
+      *     first refresh trains the codebook and whose later ones assign
+      *     under it, never retraining.
       */
-    views: Seq[CdcPipeline.ViewSpec] = Nil,
-    /** Incremental JOIN views maintained inside the same flow: after all
-      * of a micro-batch's table merges commit, every registered join
-      * view whose fact or dimension table was touched refreshes through
-      * [[graft.ops.JoinView.refreshStar]] — merge -> CDF -> delta-bounded
-      * restricted recompute, file-skipped snapshot passes. The reference's
-      * stream-maintains-sink shape (incremental_kafka_s3_cdc.py:384-398)
-      * for the enriched-export case.
-      */
-    joinViews: Seq[CdcPipeline.JoinViewSpec] = Nil,
-    /** Incremental DERIVED tables maintained inside the same flow: after
-      * a batch's merges commit, every registered derived view whose
-      * source table was touched refreshes through
-      * [[graft.ops.DerivedView.refresh]] — transform-of-delta upserts
-      * plus shrink-exact deletes, never a source rescan. The chunk /
-      * signature / fingerprint index tables of a training pipeline, kept
-      * current by the ingest itself.
-      */
-    derivedViews: Seq[CdcPipeline.DerivedViewSpec] = Nil,
-    /** ANN indexes maintained inside the same flow: after a batch's
-      * merges commit, every registered index whose vector table was
-      * touched catches up through [[graft.ops.IvfIndex.refresh]] —
-      * assign(delta) against the frozen codebook, never a rebuild. The
-      * first touching batch trains the codebook ([[graft.ops.IvfIndex
-      * .build]]); an expired refresh window falls back to
-      * [[graft.ops.IvfIndex.rebootstrap]] (same codebook, snapshot
-      * re-assign), logged.
-      */
-    annIndexes: Seq[CdcPipeline.AnnIndexSpec] = Nil,
-    /** Distinct-count sketch views maintained inside the same flow: after
-      * a batch's merges commit, every registered [[graft.ops.SketchView]]
-      * whose source table was touched catches up from the change feed —
-      * register-merge for insert-only windows, dirty-group pruned
-      * recompute under deletes. The live "distinct users per segment"
-      * artifact, kept current by the ingest itself.
-      */
-    sketchViews: Seq[CdcPipeline.SketchViewSpec] = Nil) {
+    views: Seq[CdcPipeline.Maintained] = Nil) {
 
   /** File-backed convenience constructors (the offline default). */
   def this(spark: SparkSession, envelopeDir: String, checkpointDir: String,
-           tableRoot: String, views: Seq[CdcPipeline.ViewSpec]) =
+           tableRoot: String, views: Seq[CdcPipeline.Maintained]) =
     this(spark, new graft.sources.FileEnvelopeSource(envelopeDir), checkpointDir,
       tableRoot, views)
   def this(spark: SparkSession, envelopeDir: String, checkpointDir: String,
@@ -123,21 +103,16 @@ final class CdcPipeline(
             val tieCols = payload.columns.toSeq
               .filterNot(c => c == pk || c == "__ts_ms")
             table.merge(payload, "__ts_ms", tieCols)
-            maintainViews(t, table)
           case None =>
             // keyless tables degrade to append (reference K3)
-            val table = new CdcTable(spark, s"$tableRoot/$t", Nil)
-            table.append(decoded.drop("__deleted", "__db", "__topic", "__op"))
-            maintainViews(t, table)
+            new CdcTable(spark, s"$tableRoot/$t", Nil)
+              .append(decoded.drop("__deleted", "__db", "__topic", "__op"))
         }
       }
-      // join + derived views refresh AFTER every table of the batch has
-      // merged, so a batch carrying both fact and dimension rows
-      // refreshes once, from a consistent set of committed versions
-      maintainJoinViews(tables.toSet)
-      maintainDerivedViews(tables.toSet)
-      maintainAnnIndexes(tables.toSet)
-      maintainSketchViews(tables.toSet)
+      // views refresh AFTER every table of the batch has merged, so a
+      // batch carrying both fact and dimension rows refreshes once, from
+      // a consistent set of committed versions
+      maintain(tables.toSet)
     } finally {
       withMeta.unpersist(): Unit
     }
@@ -148,7 +123,8 @@ final class CdcPipeline(
     * merge-on-read vector commit ([[CdcTable.deleteVectored]] — data
     * files untouched, kilobytes written) and propagate the deletion
     * through EVERY artifact registered over it — materialized views,
-    * join views on either side, derived index tables, ANN indexes — in
+    * join views on either side, derived index tables, sketch views, ANN
+    * indexes — in
     * this one call. The next micro-batch would pick the delete up
     * anyway (every maintenance path consumes the change feed), but
     * erasure must not wait on ingest traffic arriving.
@@ -167,13 +143,8 @@ final class CdcPipeline(
     require(keys.nonEmpty,
       s"erasure needs a keyed table ($tableName is append-only — no row identity to diff " +
         "through the maintenance paths)")
-    val table = new CdcTable(spark, path, keys)
-    table.deleteVectored(condition)
-    maintainViews(tableName, table)
-    maintainJoinViews(Set(tableName))
-    maintainDerivedViews(Set(tableName))
-    maintainAnnIndexes(Set(tableName))
-    maintainSketchViews(Set(tableName))
+    new CdcTable(spark, path, keys).deleteVectored(condition)
+    maintain(Set(tableName))
   }
 
   /** The merge-key columns `tablePath` was actually committed with (the
@@ -205,158 +176,69 @@ final class CdcPipeline(
           "under the wrong identity and silently produce a wrong view")
     }
 
-  private def maintainViews(tableName: String, table: CdcTable): Unit =
-    views.filter(_.table == tableName).foreach { vs =>
-      new graft.ops.MaterializedView(spark, table, vs.viewPath, vs.groupCols, vs.sumCols, vs.extCols)
-        .refresh()
-    }
-
-  /** Refresh every registered join view one of whose sides the batch
-    * touched. The view's table records the (fact, dim...) versions it
-    * matches in the refresh's own commit ([[CdcTable.reflecting]]), so a
-    * crash leaves view rows and record together at the previous refresh
-    * and the next batch re-runs that window. A reflected version that
-    * already expired from the table's retained history falls back to a
-    * full re-init at the current versions.
+  /** Refresh, in registration order, every registered view one of whose
+    * source tables `touched` names. Each source opens under the keys its
+    * spec diffs it with (validated first), or the keys it was ingested
+    * with when the spec names none; each view kind supplies only its
+    * window and bootstrap bodies to [[CdcTable.refreshView]], whose record
+    * rides the refresh commit: a crash leaves view rows and record
+    * together at the previous refresh, and the next batch re-runs that
+    * window.
     */
-  private def maintainJoinViews(touched: Set[String]): Unit =
-    joinViews
-      .filter(j => touched(j.factTable) || j.dims.exists(d => touched(d.table)))
-      .foreach { j =>
-        import graft.ops.JoinView
-        validateKeys(j.viewPath, j.factTable, j.factKeys)
-        j.dims.foreach(d => validateKeys(j.viewPath, d.table, d.on.map(_._2)))
-        val fact = new CdcTable(spark, s"$tableRoot/${j.factTable}", j.factKeys)
-        val dims = j.dims.map(d =>
-          d -> new CdcTable(spark, s"$tableRoot/${d.table}", d.on.map(_._2)))
-        if (fact.currentVersion.isDefined && dims.forall(_._2.currentVersion.isDefined)) {
-          val fv = fact.currentVersion.get
-          val dvs = dims.map(_._2.currentVersion.get)
-          val names = j.factTable +: j.dims.map(_.table)
-          val at = names.zip(fv +: dvs)
+  private def maintain(touched: Set[String]): Unit =
+    views.filter(_.sources.exists(s => touched(s._1))).foreach { v =>
+      val tables = v.sources.map { case (name, keys) =>
+        val path = s"$tableRoot/$name"
+        keys.foreach(validateKeys(v.path, name, _))
+        new CdcTable(spark, path, keys.getOrElse(recordedKeys(path).getOrElse(Nil)))
+      }
+      val ts = new java.sql.Timestamp(System.currentTimeMillis())
+      v match {
+        case m: CdcPipeline.ViewSpec =>
+          new graft.ops.MaterializedView(spark, tables.head, m.viewPath, m.groupCols,
+            m.sumCols, m.extCols).refresh()
+        case j: CdcPipeline.JoinViewSpec =>
+          import graft.ops.JoinView
+          val (fact, dims) = (tables.head, j.dims.zip(tables.tail))
           val view = new CdcTable(spark, j.viewPath, j.factKeys)
-          val ts = new java.sql.Timestamp(System.currentTimeMillis())
           // default payload: every dimension column that is neither a
           // join key nor pipeline meta (__ts_ms etc — the fact side
           // already carries its own copies; they must not collide)
           def payloadOf(d: CdcPipeline.DimSpec, t: CdcTable): Seq[String] =
             d.payload.getOrElse(t.read.columns.toSeq
               .filterNot(c => c.startsWith("__") || d.on.map(_._2).contains(c)))
-          def bootstrap(): Unit = {
-            val joined = dims.zip(dvs).foldLeft(fact.readVersion(fv)) {
+          // the record names the sources in spec order, so a view whose
+          // dimension list was edited (same arity, different table)
+          // re-bootstraps instead of replaying the new table's feed
+          // against state built from the old one
+          view.refreshView(j.sources.map(_._1).zip(tables)) { w =>
+            JoinView.refreshStar(view, fact, w.head._1, w.head._2,
+              dims.zip(w.tail).map { case ((d, t), (from, to)) =>
+                JoinView.StarDim(t, from, to, d.on, Some(payloadOf(d, t)))
+              }, ts, j.outer)
+          } { at =>
+            val joined = dims.zip(at.tail).foldLeft(fact.readVersion(at.head)) {
               case (acc, ((d, t), dv)) =>
                 val proj = t.readVersion(dv).select(
-                  (d.on.map(_._2) ++ payloadOf(d, t)).distinct
-                    .map(org.apache.spark.sql.functions.col): _*)
+                  (d.on.map(_._2) ++ payloadOf(d, t)).distinct.map(col): _*)
                 JoinView.compute(acc, proj, d.on, j.outer)
             }
-            view.reflecting(at)(view.init(joined.withColumn(JoinView.TsCol, lit(ts))))
+            view.init(joined.withColumn(JoinView.TsCol, lit(ts)))
           }
-          // the record holds (table, version) PAIRS and refresh demands
-          // the names line up with the spec: a view whose dimension list
-          // was edited (same arity, different table) must re-bootstrap,
-          // not replay the new table's feed against state built from the
-          // old one
-          view.reflected.map(_.sources) match {
-            case Some(vs) if vs == at => () // already current
-            case Some(vs) if vs.map(_._1) == names =>
-              try view.reflecting(at) {
-                JoinView.refreshStar(view, fact, vs.head._2, fv,
-                  dims.zip(dvs).zip(vs.tail).map { case (((d, t), dv), (_, d0)) =>
-                    JoinView.StarDim(t, d0, dv, d.on, Some(payloadOf(d, t)))
-                  }, ts, j.outer)
-              } catch {
-                case e: Throwable
-                    if CdcTable.isExpiredBase(e, (fact +: dims.map(_._2)).map(_.path)) =>
-                  CdcPipeline.log.warn(
-                    s"join view ${j.viewPath}: reflected window expired from " +
-                      "retained history, falling back to full re-bootstrap", e)
-                  bootstrap()
-              }
-            case _ => bootstrap() // never reflected, or the table list changed
+        case d: CdcPipeline.DerivedViewSpec =>
+          import graft.ops.DerivedView
+          val (source, view) = (tables.head, new CdcTable(spark, d.viewPath, d.viewKeys))
+          view.refreshView(Seq(d.table -> source)) { case Seq((from, to)) =>
+            DerivedView.refresh(view, source, from, to, d.transform, ts)
+          } { at =>
+            view.init(DerivedView.compute(source.readVersion(at.head), d.transform)
+              .withColumn(DerivedView.TsCol, lit(ts)))
           }
-        } // else: a side not ingested yet — nothing to enrich
-      }
-
-  /** Catch up every registered ANN index whose vector table the batch
-    * touched. The lists table records the source version it reflects in
-    * each refresh commit, like the views: replays are no-ops, a crashed
-    * refresh re-runs one delta-sized window, and an expired window
-    * degrades to a snapshot re-assign under the SAME frozen codebook —
-    * assignments stay comparable across the fallback.
-    */
-  private def maintainAnnIndexes(touched: Set[String]): Unit =
-    annIndexes.filter(a => touched(a.table)).foreach { a =>
-      validateKeys(a.indexPath, a.table, a.tableKeys)
-      val source = new CdcTable(spark, s"$tableRoot/${a.table}", a.tableKeys)
-      source.currentVersion.foreach { _ =>
-        val idx = new graft.ops.IvfIndex(spark, a.indexPath, a.k)
-        if (!idx.exists) idx.build(source)
-        else try idx.refresh(source)
-        catch {
-          case e: Throwable if CdcTable.isExpiredBase(e, Seq(source.path)) =>
-            CdcPipeline.log.warn(
-              s"ann index ${a.indexPath}: reflected version expired from " +
-                "retained history, re-assigning the snapshot under the frozen codebook", e)
-            idx.rebootstrap(source)
-        }
-      }
-    }
-
-  /** Catch up every registered sketch view whose source table the batch
-    * touched ([[graft.ops.SketchView.refresh]] records the reflected
-    * version in its own commit); an expired window degrades to a
-    * snapshot re-bootstrap (same registers), logged.
-    */
-  private def maintainSketchViews(touched: Set[String]): Unit =
-    sketchViews.filter(sv => touched(sv.table)).foreach { sv =>
-      validateKeys(sv.viewPath, sv.table, sv.tableKeys)
-      val source = new CdcTable(spark, s"$tableRoot/${sv.table}", sv.tableKeys)
-      source.currentVersion.foreach { _ =>
-        val view = new graft.ops.SketchView(spark, source, sv.viewPath,
-          sv.groupCols, sv.hashExpr)
-        try view.refresh()
-        catch {
-          case e: Throwable if CdcTable.isExpiredBase(e, Seq(source.path)) =>
-            CdcPipeline.log.warn(
-              s"sketch view ${sv.viewPath}: reflected window expired from " +
-                "retained history, re-sketching the snapshot", e)
-            view.bootstrap()
-        }
-      }
-    }
-
-  /** Refresh every registered derived view whose source table the batch
-    * touched — same record discipline as [[maintainJoinViews]] (the
-    * reflected version rides the refresh commit, expired windows
-    * re-bootstrap).
-    */
-  private def maintainDerivedViews(touched: Set[String]): Unit =
-    derivedViews.filter(d => touched(d.table)).foreach { d =>
-      import graft.ops.DerivedView
-      validateKeys(d.viewPath, d.table, d.tableKeys)
-      val source = new CdcTable(spark, s"$tableRoot/${d.table}", d.tableKeys)
-      source.currentVersion.foreach { sv =>
-        val view = new CdcTable(spark, d.viewPath, d.viewKeys)
-        val ts = new java.sql.Timestamp(System.currentTimeMillis())
-        val at = Seq(d.table -> sv)
-        def bootstrap(): Unit = view.reflecting(at) {
-          view.init(DerivedView.compute(source.readVersion(sv), d.transform)
-            .withColumn(DerivedView.TsCol, lit(ts)))
-        }
-        view.reflected.flatMap(_.of(d.table)) match {
-          case Some(v0) if v0 == sv => ()
-          case Some(v0) =>
-            try view.reflecting(at)(DerivedView.refresh(view, source, v0, sv, d.transform, ts))
-            catch {
-              case e: Throwable if CdcTable.isExpiredBase(e, Seq(source.path)) =>
-                CdcPipeline.log.warn(
-                  s"derived view ${d.viewPath}: reflected version expired from " +
-                    "retained history, falling back to full re-bootstrap", e)
-                bootstrap()
-            }
-          case _ => bootstrap() // never reflected, or re-pointed at a new source
-        }
+        case s: CdcPipeline.SketchViewSpec =>
+          new graft.ops.SketchView(spark, tables.head, s.viewPath, s.groupCols, s.hashExpr)
+            .refresh()
+        case a: CdcPipeline.AnnIndexSpec =>
+          new graft.ops.IvfIndex(spark, a.indexPath, a.k).refresh(tables.head)
       }
     }
 
@@ -376,7 +258,17 @@ final class CdcPipeline(
 }
 
 object CdcPipeline {
-  private[cdc] val log = org.slf4j.LoggerFactory.getLogger(classOf[CdcPipeline])
+  /** A view registration: one artifact the pipeline keeps current from
+    * the tables it ingests.
+    */
+  sealed trait Maintained {
+    /** Where the artifact lives. */
+    def path: String
+    /** Its source tables in record order, each with the merge keys the
+      * spec diffs it under (None: the keys it was ingested with).
+      */
+    def sources: Seq[(String, Option[Seq[String]])]
+  }
 
   /** Declarative view registration for the pipeline: maintain at
     * `viewPath` the per-`groupCols` count/sum/avg aggregate of ingested
@@ -385,7 +277,10 @@ object CdcPipeline {
     */
   final case class ViewSpec(table: String, viewPath: String,
                             groupCols: Seq[String], sumCols: Seq[String],
-                            extCols: Seq[String] = Nil)
+                            extCols: Seq[String] = Nil) extends Maintained {
+    def path: String = viewPath
+    def sources: Seq[(String, Option[Seq[String]])] = Seq(table -> None)
+  }
 
   /** One dimension of a registered join view: the ingested table's name,
     * the `(factCol, dimKey)` join mapping, and an optional payload
@@ -407,9 +302,12 @@ object CdcPipeline {
                                 on: Seq[(String, String)],
                                 outer: Boolean = false,
                                 dimPayload: Option[Seq[String]] = None,
-                                extraDims: Seq[DimSpec] = Nil) {
+                                extraDims: Seq[DimSpec] = Nil) extends Maintained {
     /** All dimensions, primary first. */
     def dims: Seq[DimSpec] = DimSpec(dimTable, on, dimPayload) +: extraDims
+    def path: String = viewPath
+    def sources: Seq[(String, Option[Seq[String]])] =
+      (factTable -> Some(factKeys)) +: dims.map(d => d.table -> Some(d.on.map(_._2)))
   }
 
   /** Declarative DERIVED-view registration: maintain at `viewPath` the
@@ -421,6 +319,10 @@ object CdcPipeline {
   final case class DerivedViewSpec(table: String, tableKeys: Seq[String],
                                    viewPath: String, viewKeys: Seq[String],
                                    transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      extends Maintained {
+    def path: String = viewPath
+    def sources: Seq[(String, Option[Seq[String]])] = Seq(table -> Some(tableKeys))
+  }
 
   /** Declarative sketch-view registration: maintain at `viewPath` the
     * per-`groupCols` HLL distinct-count registers over `hashExpr` of
@@ -429,7 +331,10 @@ object CdcPipeline {
     */
   final case class SketchViewSpec(table: String, tableKeys: Seq[String],
                                   viewPath: String, groupCols: Seq[String],
-                                  hashExpr: String)
+                                  hashExpr: String) extends Maintained {
+    def path: String = viewPath
+    def sources: Seq[(String, Option[Seq[String]])] = Seq(table -> Some(tableKeys))
+  }
 
   /** Declarative ANN-index registration: maintain at `indexPath` an
     * [[graft.ops.IvfIndex]] over `table` (which must expose the index's
@@ -437,7 +342,10 @@ object CdcPipeline {
     * first touching batch and thereafter refreshed at change-feed cost.
     */
   final case class AnnIndexSpec(table: String, tableKeys: Seq[String],
-                                indexPath: String, k: Int = 16)
+                                indexPath: String, k: Int = 16) extends Maintained {
+    def path: String = indexPath
+    def sources: Seq[(String, Option[Seq[String]])] = Seq(table -> Some(tableKeys))
+  }
 
   /** LEGACY marker from pre-`_table_meta` builds (one key per line;
     * empty file = keyless) — still read, no longer written: the table's

@@ -85,13 +85,19 @@ final class IvfIndex(
   }
 
   /** Train the codebook on the source snapshot and bootstrap the lists
-    * as assign(snapshot), recording the source version it reflects.
+    * as assign(snapshot), recording the source version it reflects — an
+    * explicit rebuild: it retrains even when a codebook exists.
     */
   def build(source: CdcTable): Unit = {
     val v = source.currentVersion.getOrElse(
       throw new IllegalStateException(s"cannot index an empty table"))
+    train(source.readVersion(v))
+    lists.reflecting(Seq(source.path -> v))(lists.init(assign(source.readVersion(v))))
+  }
+
+  private def train(snapshot: DataFrame): Unit = {
     graft.functions.VectorFunctions.register(spark)
-    quantized(source.readVersion(v)).select("vec_id", "qe").createOrReplaceTempView("ivf_train_src")
+    quantized(snapshot).select("vec_id", "qe").createOrReplaceTempView("ivf_train_src")
     val cents = spark.sql(
       s"""WITH ${graft.IndexQueries.sparkKmeansFor("ivf_", "ivf_train_src", k)}
          |SELECT cid, ce FROM ivf_c2""".stripMargin)
@@ -99,7 +105,6 @@ final class IvfIndex(
       .sortBy(_._1)
     io.writeAtomic(centroidsFile,
       cents.map { case (cid, ce) => s"$cid,${ce.mkString(",")}" }.mkString("\n"))
-    lists.reflecting(Seq(source.path -> v))(lists.init(assign(source.readVersion(v))))
   }
 
   /** Nearest-frozen-centroid assignment of `src` rows — the row-local
@@ -119,45 +124,24 @@ final class IvfIndex(
       .select(col("vec_id"), col("best.cid").as("cid"), col("best.qe").as("qe"))
   }
 
-  /** Catch the lists up to the source's current version: one
-    * [[DerivedView]] refresh over the change feed — assign(delta), with
-    * deletes/shrinks handled by the view's keyed merge. Idempotent; a
-    * no-op when already current. Lists with no record of `source` (an
-    * index built before the record existed) re-assign the snapshot once
-    * ([[rebootstrap]]).
+  /** Catch the lists up to the source's current version
+    * ([[CdcTable.refreshView]]): one [[DerivedView]] refresh over the
+    * change feed — assign(delta), with deletes/shrinks handled by the
+    * view's keyed merge. Idempotent; a no-op when already current. Lists
+    * with no usable record of `source` (never indexed, an index built
+    * before the record existed, or a window expired from the source's
+    * retained history) bootstrap: the first trains the codebook, every
+    * later one re-assigns the snapshot under the EXISTING frozen codebook,
+    * so the lists stay comparable with every previously served result
+    * (the codebook never changes outside an explicit [[build]]).
     */
-  def refresh(source: CdcTable): Unit = source.currentVersion.foreach { to =>
-    indexedVersion(source) match {
-      case Some(from) if from == to => ()
-      case Some(from) if from < to =>
-        lists.reflecting(Seq(source.path -> to)) {
-          DerivedView.refresh(lists, source, from, to, assign,
-            new java.sql.Timestamp(0L))
-        }
-      case _ => rebootstrap(source)
+  def refresh(source: CdcTable): Unit =
+    lists.refreshView(Seq(source.path -> source)) { case Seq((from, to)) =>
+      DerivedView.refresh(lists, source, from, to, assign, new java.sql.Timestamp(0L))
+    } { to =>
+      if (!exists) train(source.readVersion(to.head))
+      lists.init(assign(source.readVersion(to.head)))
     }
-  }
-
-  /** Re-derive the lists from the CURRENT source snapshot under the
-    * EXISTING frozen codebook — the recovery path when the refresh
-    * window's base version has expired from retained history (the lists
-    * stay comparable with every previously served result, because the
-    * codebook never changes outside an explicit [[build]]). One
-    * assign(snapshot) pass merged through the lists table: stale keys
-    * delete, everything else upserts.
-    */
-  def rebootstrap(source: CdcTable): Unit = source.currentVersion.foreach { v =>
-    val cur = assign(source.readVersion(v)).localCheckpoint()
-    val stale = lists.read.select("vec_id")
-      .join(cur.select("vec_id"), Seq("vec_id"), "left_anti")
-    val batch = cur.withColumn(DerivedView.OpCol, lit("u"))
-      .unionByName(stale.withColumn(DerivedView.OpCol, lit("d")),
-        allowMissingColumns = true)
-      .withColumn(DerivedView.TsCol, lit(new java.sql.Timestamp(0L)))
-    // one assignment row per vec_id + disjoint anti-joined deletes: the
-    // batch is already uniquely keyed, skip the latest-wins shuffle
-    lists.reflecting(Seq(source.path -> v))(lists.mergePreDeduped(batch))
-  }
 
   /** Cluster the list files by cid so each probe's equality filter
     * prunes to the files actually holding that list — `target` files,

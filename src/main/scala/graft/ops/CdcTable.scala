@@ -445,9 +445,12 @@ final class CdcTable(
     }
   }
 
-  /** `(files a readWhere(preds) scan opens, files total)` at the current
-    * version — the skipping effectiveness number specs and plan audits
-    * assert on; metadata-only.
+  /** `(files a readWhere(preds) scan opens, files it considers)` at the
+    * current version — the skipping effectiveness number specs and plan
+    * audits assert on; metadata-only. The second figure counts only the
+    * files of the data directories the predicates keep (on a partitioned
+    * table, the months — or days, hours — their bounds allow), not every
+    * file of the version: `scanProfile(Nil)._2` is the table's total.
     */
   def scanProfile(preds: Seq[FileSkipping.Pred]): (Int, Int) =
     scanProfileAt(currentOrThrow, preds)
@@ -765,6 +768,45 @@ final class CdcTable(
       require(i > 0)
       (e.substring(0, i), e.substring(i + 1).toLong)
     }).toOption.map(Reflected(head, _))
+  }
+
+  /** The one refresh protocol of a maintained view kept in THIS table:
+    * bring it to the heads of `sources`, `(name, table)` pairs whose
+    * names are what the record stores. Reads each head once and does
+    * nothing while a source has no version yet.
+    *
+    *   - The record names exactly those heads: nothing runs, no view
+    *     version is burned.
+    *   - It names the same sources in the same order, none past its
+    *     head: `window` applies the per-source `(from, to)` windows. If
+    *     a window has expired from its source's retained history
+    *     (`isExpiredBase`), the refresh logs that and bootstraps; the
+    *     fallback's own [[reflecting]] reclaims whatever the failed
+    *     window reserved.
+    *   - Anything else (no record, other sources, a record ahead of its
+    *     source): `bootstrap` rebuilds the view at the heads.
+    *
+    * Both bodies run under [[reflecting]], so the record rides their
+    * commit.
+    */
+  def refreshView(sources: Seq[(String, CdcTable)])(window: Seq[(Long, Long)] => Unit)(
+      bootstrap: Seq[Long] => Unit): Unit = {
+    val heads = sources.map(_._2.currentVersion)
+    if (heads.forall(_.isDefined)) {
+      val to = heads.flatten
+      val at = sources.map(_._1).zip(to)
+      reflected.map(_.sources) match {
+        case Some(r) if r == at => ()
+        case Some(r) if r.map(_._1) == at.map(_._1) && r.map(_._2).zip(to).forall(w => w._1 <= w._2) =>
+          try reflecting(at)(window(r.map(_._2).zip(to)))
+          catch {
+            case e: Throwable if isExpiredBase(e, sources.map(_._2.path)) =>
+              log.warn(s"view $path: reflected window expired from retained history, bootstrapping", e)
+              reflecting(at)(bootstrap(to))
+          }
+        case _ => reflecting(at)(bootstrap(to))
+      }
+    }
   }
 
   private def reflectedTags(sources: Seq[(String, Long)]): Map[String, String] =
@@ -1473,8 +1515,8 @@ final class CdcTable(
 
   /** [[merge]] minus the latest-wins dedup pass, for batches that are
     * ALREADY one row per key BY CONSTRUCTION — the maintained-view
-    * refreshes ([[JoinView.starBatch]], [[DerivedView.deltaBatch]],
-    * [[AnnIndex.rebootstrap]]) each emit exactly one CDC row per
+    * refreshes ([[JoinView.starBatch]], [[DerivedView.deltaBatch]])
+    * each emit exactly one CDC row per
     * affected view key, so the dedup's groupBy was a full extra shuffle
     * + aggregation of every refresh batch that provably returned its
     * input unchanged. Raw CDC feeds (multiple events per key) must keep
@@ -2604,7 +2646,7 @@ object CdcTable {
     * propagates instead of silently degrading every refresh to a full
     * re-bootstrap.
     */
-  def isExpiredBase(e: Throwable, sourcePaths: Seq[String]): Boolean =
+  private def isExpiredBase(e: Throwable, sourcePaths: Seq[String]): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).exists {
       case _: ExpiredVersionException => true
       case f: java.io.FileNotFoundException =>

@@ -631,9 +631,37 @@ object FileSkipping {
     * so `between` extracts as the single two-sided range callers expect.
     */
   def predsOf(pred: org.apache.spark.sql.Column): Seq[Pred] =
-    merged(conjuncts(org.apache.spark.sql.graft.ColumnExpr.expression(pred)))
+    merged(extracted(org.apache.spark.sql.graft.ColumnExpr.expression(pred))._1)
 
-  private def conjuncts(e: expressions.Expression): Seq[Pred] = {
+  /** STRICT extraction for metadata-answered aggregates
+    * ([[CdcTable.countWhere]]): Some(preds) only when EVERY conjunct of
+    * `pred` is EXACTLY expressible — equality, inclusive bounds
+    * (`>=`/`<=`/BETWEEN), all-literal IN, IS [NOT] NULL, composed with
+    * AND. No relaxation is permitted, unlike [[predsOf]]: the caller
+    * counts full-match files BLIND from their sidecar row counts instead
+    * of re-filtering them, so a strict bound (`a > 5` would have to
+    * relax to `>= 5`), an OR, a function call, or an unextractable
+    * literal all answer None and the caller falls back to a scan —
+    * never a wrong count. The `expr(...)` parse and the DSL shape
+    * extract alike.
+    */
+  def predsOfExact(pred: org.apache.spark.sql.Column): Option[Seq[Pred]] = {
+    // deliberately NOT merged(): bound intersection keeps only the
+    // tightest ORDERABLE bounds, which for a pathological mixed-type
+    // conjunction could drop a constraint — fatal for a blind count.
+    // Conjunct lists are correct as-is (mustMatch/mayMatch are ∀/∃ over
+    // them); merging only adds prune power the count path can live
+    // without.
+    val (preds, exact) = extracted(org.apache.spark.sql.graft.ColumnExpr.expression(pred))
+    Some(preds).filter(_ => exact)
+  }
+
+  /** The one predicate walker: the skippable conjuncts of `e`, and
+    * whether they say EXACTLY what `e` says — false as soon as a strict
+    * bound was relaxed to an inclusive one, a conjunct contributed
+    * nothing, or an OR joined branches.
+    */
+  private def extracted(e: expressions.Expression): (Seq[Pred], Boolean) = {
     import expressions._
     def attr(x: Expression): Option[String] = x match {
       case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => Some(a.name)
@@ -687,111 +715,47 @@ object FileSkipping {
         Some((f.nameParts.head.toLowerCase(java.util.Locale.ROOT), f.arguments))
       case _ => None
     }
+    // a conjunct is exact when it yields the `n` predicates it states,
+    // none of them a relaxed strict bound
+    def kept(ps: Seq[Pred], n: Int = 1, strict: Boolean = false) = (ps, ps.size == n && !strict)
     shape(e) match {
-      case Some(("and", Seq(l, r))) => conjuncts(l) ++ conjuncts(r)
+      case Some(("and", Seq(l, r))) =>
+        val ((lp, le), (rp, re)) = (extracted(l), extracted(r))
+        (lp ++ rp, le && re)
       case Some(("or", Seq(l, r))) =>
         // a disjunct prunes only if BOTH branches extract something — an
         // unextractable branch could match any row, so the whole OR then
         // contributes nothing. Branches are merged independently (their
         // conjuncts intersect per column), and a branch that is itself a
         // lone AnyOf flattens so `a OR b OR c` stays one level deep.
-        def branchesOf(x: Expression): Seq[Seq[Pred]] = merged(conjuncts(x)) match {
+        def branchesOf(x: Expression): Seq[Seq[Pred]] = merged(extracted(x)._1) match {
           case Seq(AnyOf(bs)) => bs
           case ps             => Seq(ps)
         }
         val (lb, rb) = (branchesOf(l), branchesOf(r))
-        if (lb.exists(_.isEmpty) || rb.exists(_.isEmpty)) Nil
-        else Seq(AnyOf(lb ++ rb))
-      case Some(("=" | "==", Seq(a, l))) => one(attr(a), litVal(l), lower = true, upper = true) ++
-        one(attr(l), litVal(a), lower = true, upper = true)
-      case Some((">=" | ">", Seq(a, l))) => one(attr(a), litVal(l), lower = true, upper = false) ++
-        one(attr(l), litVal(a), lower = false, upper = true)
-      case Some(("<=" | "<", Seq(a, l))) => one(attr(a), litVal(l), lower = false, upper = true) ++
-        one(attr(l), litVal(a), lower = true, upper = false)
+        (if (lb.exists(_.isEmpty) || rb.exists(_.isEmpty)) Nil else Seq(AnyOf(lb ++ rb)), false)
+      case Some(("=" | "==", Seq(a, l))) => kept(one(attr(a), litVal(l), lower = true, upper = true) ++
+        one(attr(l), litVal(a), lower = true, upper = true))
+      case Some((op @ (">=" | ">"), Seq(a, l))) => kept(one(attr(a), litVal(l), lower = true, upper = false) ++
+        one(attr(l), litVal(a), lower = false, upper = true), strict = op == ">")
+      case Some((op @ ("<=" | "<"), Seq(a, l))) => kept(one(attr(a), litVal(l), lower = false, upper = true) ++
+        one(attr(l), litVal(a), lower = true, upper = false), strict = op == "<")
       case Some(("between", Seq(a, lo, hi))) =>
-        one(attr(a), litVal(lo), lower = true, upper = false) ++
-          one(attr(a), litVal(hi), lower = false, upper = true)
-      case Some(("isnull", Seq(a)))    => attr(a).map(FileSkipping.IsNull(_)).toSeq
-      case Some(("isnotnull", Seq(a))) => attr(a).map(FileSkipping.NotNull(_)).toSeq
+        kept(one(attr(a), litVal(lo), lower = true, upper = false) ++
+          one(attr(a), litVal(hi), lower = false, upper = true), n = 2)
+      case Some(("isnull", Seq(a)))    => kept(attr(a).map(FileSkipping.IsNull(_)).toSeq)
+      case Some(("isnotnull", Seq(a))) => kept(attr(a).map(FileSkipping.NotNull(_)).toSeq)
       case Some(("in", a +: vals)) if vals.nonEmpty =>
         // all values must be extractable literals, or the conjunct
         // contributes nothing (an unextractable member could match rows
         // the extracted subset would wrongly prune)
-        (attr(a), vals.map(litVal)) match {
+        kept((attr(a), vals.map(litVal)) match {
           case (Some(c), ls) if ls.forall(_.isDefined) =>
             Seq(FileSkipping.InSet(c, ls.map(_.get)))
           case _ => Nil
-        }
-      case _ => Nil
+        })
+      case _ => (Nil, false)
     }
-  }
-
-  /** STRICT extraction for metadata-answered aggregates
-    * ([[CdcTable.countWhere]]): Some(preds) only when EVERY conjunct of
-    * `pred` is EXACTLY expressible — equality, inclusive bounds
-    * (`>=`/`<=`/BETWEEN), all-literal IN, IS [NOT] NULL, composed with
-    * AND. No relaxation is permitted, unlike [[predsOf]]: the caller
-    * counts full-match files BLIND from their sidecar row counts instead
-    * of re-filtering them, so a strict bound (`a > 5` would have to
-    * relax to `>= 5`), an OR, a function call, or an unextractable
-    * literal all answer None and the caller falls back to a scan —
-    * never a wrong count. Expects the resolved-shape parse tree
-    * `expr(...)` produces.
-    */
-  def predsOfExact(pred: org.apache.spark.sql.Column): Option[Seq[Pred]] = {
-    import expressions._
-    def attr(x: Expression): Option[String] = x match {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def litOf(x: Expression): Option[Any] = x match {
-      case Literal(v, dt) if v != null => dt match {
-        case org.apache.spark.sql.types.StringType => Some(v.toString)
-        case org.apache.spark.sql.types.DateType =>
-          Some(java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong).toString)
-        case org.apache.spark.sql.types.TimestampType => Some(v.asInstanceOf[Long])
-        case _: org.apache.spark.sql.types.DecimalType =>
-          Some(v.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal)
-        case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType =>
-          Some(v.asInstanceOf[Number].longValue)
-        case org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType =>
-          Some(v.asInstanceOf[Number].doubleValue)
-        case _ => None
-      }
-      case _ => None
-    }
-    def eq(a: Expression, b: Expression): Option[Seq[Pred]] =
-      (for { c <- attr(a); v <- litOf(b) } yield Seq(Range(c, Some(v), Some(v)): Pred))
-        .orElse(for { c <- attr(b); v <- litOf(a) } yield Seq(Range(c, Some(v), Some(v)): Pred))
-    def bound(a: Expression, b: Expression, aLower: Boolean): Option[Seq[Pred]] =
-      (for { c <- attr(a); v <- litOf(b) } yield Seq(
-        (if (aLower) Range(c, Some(v), None) else Range(c, None, Some(v))): Pred))
-        .orElse(for { c <- attr(b); v <- litOf(a) } yield Seq(
-          (if (aLower) Range(c, None, Some(v)) else Range(c, Some(v), None)): Pred))
-    def walk(e: Expression): Option[Seq[Pred]] = e match {
-      case And(l, r) => for { a <- walk(l); b <- walk(r) } yield a ++ b
-      case EqualTo(a, b) => eq(a, b)
-      case GreaterThanOrEqual(a, b) => bound(a, b, aLower = true)
-      case LessThanOrEqual(a, b)    => bound(a, b, aLower = false)
-      case expressions.IsNull(a)    => attr(a).map(c => Seq(FileSkipping.IsNull(c): Pred))
-      case expressions.IsNotNull(a) => attr(a).map(c => Seq(NotNull(c): Pred))
-      case expressions.In(v, list) if list.nonEmpty =>
-        (attr(v), list.map(litOf)) match {
-          case (Some(c), ls) if ls.forall(_.isDefined) =>
-            Some(Seq(FileSkipping.InSet(c, ls.map(_.get)): Pred))
-          case _ => None
-        }
-      case _ => None // strict: anything else defeats the blind count
-    }
-    // deliberately NOT merged(): bound intersection keeps only the
-    // tightest ORDERABLE bounds, which for a pathological mixed-type
-    // conjunction could drop a constraint — fatal for a blind count.
-    // Conjunct lists are correct as-is (mustMatch/mayMatch are ∀/∃ over
-    // them); merging only adds prune power the count path can live
-    // without.
-    walk(org.apache.spark.sql.graft.ColumnExpr.expression(pred))
   }
 
   /** A disjunction of point lookups on ONE column is just an IN list —

@@ -49,21 +49,16 @@ final class GramView(
   /** Source version the persisted matrix reflects, if any. */
   def reflectedVersion: Option[Long] = table.reflected.flatMap(_.of(source.path))
 
-  /** Bring the matrix current with the source's head: bootstrap on
-    * first call, CDF-windowed signed delta afterwards; a no-op when
-    * already current.
+  /** Bring the matrix current with the source's head
+    * ([[CdcTable.refreshView]]): bootstrap on first call, CDF-windowed
+    * signed delta afterwards; a no-op when already current. An expired
+    * window (the reflected version fell out of the source's retained
+    * history) recomputes the matrix from the snapshot, logged.
     */
-  def refresh(): Unit = source.currentVersion.foreach { cur =>
-    reflectedVersion match {
-      case Some(v) if v == cur => ()
-      case Some(v) if v < cur =>
-        table.reflecting(Seq(source.path -> cur))(applyWindow(v, cur))
-      case _ =>
-        table.reflecting(Seq(source.path -> cur)) {
-          table.init(gramOf(source.readVersion(cur), vecCol))
-        }
-    }
-  }
+  def refresh(): Unit =
+    table.refreshView(Seq(source.path -> source)) { case Seq((from, to)) =>
+      applyWindow(from, to)
+    }(to => table.init(gramOf(source.readVersion(to.head), vecCol)))
 
   private def applyWindow(from: Long, to: Long): Unit = {
     val feed = source.changesBetween(from, to)

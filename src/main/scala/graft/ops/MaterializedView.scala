@@ -42,45 +42,35 @@ final class MaterializedView(
       throw new java.io.FileNotFoundException(s"no materialized view at $path — refresh() first")
     else viewTable.read
 
-  /** Bring the view to the table's CURRENT version: full compute on
-    * bootstrap, CDF signed-delta afterwards (provably equal to the
-    * recompute — IncrementalViewSpec). Falls back to a full recompute
-    * when the reflected base version has expired from the table's
-    * retained history (the view lagged more than `retainVersions`
-    * commits) and for keyless tables (no row identity to diff).
-    * Idempotent — safe to call after every micro-batch.
+  /** Bring the view to the table's CURRENT version
+    * ([[CdcTable.refreshView]]): full compute on bootstrap, CDF
+    * signed-delta afterwards (provably equal to the recompute —
+    * IncrementalViewSpec). Recomputes instead when the reflected base
+    * version has expired from the table's retained history (the view
+    * lagged more than the table's `retainVersions` commits), for keyless
+    * tables (no row identity to diff) and for a view persisted under
+    * other columns. Idempotent — safe to call after every micro-batch.
     */
-  def refresh(): Unit = table.currentVersion.foreach { target =>
-    val at = Seq(table.path -> target)
-    // readVersion(target), NOT table.read: read re-resolves the current
-    // pointer at action time, so a concurrent commit past `target` would
-    // mix a NEWER snapshot into a view recorded as `target` — the next
-    // refresh would then re-apply that delta on top (double count)
-    def recompute(): Unit = viewTable.reflecting(at)(
-      viewTable.init(IncrementalView.compute(table.readVersion(target), groupCols, sumCols, extCols)))
-    reflectedVersion match {
-      case Some(r) if r == target => ()
+  def refresh(): Unit =
+    viewTable.refreshView(Seq(table.path -> table)) { case Seq((from, to)) =>
       // a view persisted under other sum/extrema columns lacks columns the
       // current IncrementalView maintains (e.g. __nn_/avg_/min_/max_); the
       // incremental plan would then fail on every refresh, so detect the
-      // schema gap up front and recompute once — the rewrite migrates it
-      case Some(r) if r < target && table.keys.nonEmpty && hasCurrentSchema =>
-        // the plan is lazy, so a concurrent expire() of base version r
-        // surfaces either here (changesBetween throws the dedicated
-        // ExpiredVersionException) or only when init writes the aggregate;
-        // the fallback's own reflecting reclaims a reservation the failed
-        // write left. The dirty-group recompute scans the target through
-        // the stats-pruned version-pinned face.
-        try viewTable.reflecting(at)(viewTable.init(
-          IncrementalView.refresh(read, table.changesBetween(r, target),
-            groupCols, sumCols, extCols,
-            (preds: Seq[FileSkipping.Pred]) => table.readWhereAt(target, preds))))
-        catch {
-          case e: Throwable if CdcTable.isExpiredBase(e, Seq(table.path)) => recompute()
-        }
-      case _ => recompute()
-    }
-  }
+      // schema gap up front and recompute once — the rewrite migrates it.
+      // The dirty-group recompute scans the target through the
+      // stats-pruned version-pinned face.
+      if (table.keys.isEmpty || !hasCurrentSchema) recompute(to)
+      else viewTable.init(IncrementalView.refresh(read, table.changesBetween(from, to),
+        groupCols, sumCols, extCols,
+        (preds: Seq[FileSkipping.Pred]) => table.readWhereAt(to, preds)))
+    }(to => recompute(to.head))
+
+  // readVersion(target), NOT table.read: read re-resolves the current
+  // pointer at action time, so a concurrent commit past `target` would
+  // mix a NEWER snapshot into a view recorded as `target` — the next
+  // refresh would then re-apply that delta on top (double count)
+  private def recompute(target: Long): Unit =
+    viewTable.init(IncrementalView.compute(table.readVersion(target), groupCols, sumCols, extCols))
 
   // the columns the CURRENT IncrementalView.compute emits; a persisted
   // view missing any of them was built for other columns and must

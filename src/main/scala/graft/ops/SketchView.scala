@@ -55,27 +55,16 @@ final class SketchView(
   /** Source version the persisted view reflects, if any. */
   def reflectedVersion: Option[Long] = table.reflected.flatMap(_.of(source.path))
 
-  /** Bring the view current with the source's head: bootstrap on first
-    * call, CDF-windowed refresh afterwards; a no-op when already
-    * current. An expired window (reflected version fell out of retained
-    * history) throws [[CdcTable.ExpiredVersionException]]: only the
-    * caller knows if the full re-read of [[bootstrap]] is acceptable.
+  /** Bring the view current with the source's head
+    * ([[CdcTable.refreshView]]): bootstrap on first call, CDF-windowed
+    * refresh afterwards; a no-op when already current. An expired window
+    * (the reflected version fell out of the source's retained history)
+    * re-sketches the snapshot, logged.
     */
-  def refresh(): Unit = source.currentVersion.foreach { cur =>
-    reflectedVersion match {
-      case Some(v) if v == cur => ()
-      case Some(v) if v < cur =>
-        table.reflecting(Seq(source.path -> cur))(applyWindow(v, cur))
-      case _ => bootstrap()
-    }
-  }
-
-  /** Re-sketch the source's current snapshot, whatever the view holds. */
-  def bootstrap(): Unit = source.currentVersion.foreach { cur =>
-    table.reflecting(Seq(source.path -> cur)) {
-      table.init(summarized(regsOf(source.readVersion(cur), groupCols, hashExpr)))
-    }
-  }
+  def refresh(): Unit =
+    table.refreshView(Seq(source.path -> source)) { case Seq((from, to)) =>
+      applyWindow(from, to)
+    }(to => table.init(summarized(regsOf(source.readVersion(to.head), groupCols, hashExpr))))
 
   private def applyWindow(from: Long, to: Long): Unit = {
     val feed = source.changesBetween(from, to)

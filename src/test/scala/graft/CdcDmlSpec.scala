@@ -274,6 +274,12 @@ class CdcDmlSpec extends SparkSpec {
     // the extractor refuses and the scan fallback still answers exactly
     assert(graft.ops.FileSkipping.predsOfExact(expr("id > 100")).isEmpty)
     assert(graft.ops.FileSkipping.predsOfExact(expr("length(v) = 3")).isEmpty)
+    // the DSL shape extracts through the same walker: strict and OR-ed
+    // conditions refuse, an inclusive bound is exact
+    assert(graft.ops.FileSkipping.predsOfExact(col("id") > 100).isEmpty)
+    assert(graft.ops.FileSkipping.predsOfExact(col("id") > 100 || col("id") < 5).isEmpty)
+    assert(graft.ops.FileSkipping.predsOfExact(col("id") >= 100) ==
+      Some(Seq(graft.ops.FileSkipping.Range("id", Some(100L), None))))
     assert(count("SELECT COUNT(*) FROM ct WHERE id > 100") == 900L)
     // 743: the 7 non-null single-digit ids ("v1".."v9") have length 2
     assert(count("SELECT COUNT(*) FROM ct WHERE length(v) >= 3") == 743L)

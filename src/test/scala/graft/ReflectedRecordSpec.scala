@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc.CdcPipeline
 import graft.envelope.EnvelopeCodec
-import graft.ops.{CdcTable, GramView, JoinView, LocalTableIO, SketchView, TableIO}
+import graft.ops.{CdcTable, GramView, IvfIndex, JoinView, LocalTableIO, SketchView, TableIO}
 
 /** The reflected record a maintained view's table keeps
   * ([[CdcTable.reflecting]] / [[CdcTable.reflected]]): it commits with
@@ -141,6 +141,34 @@ class ReflectedRecordSpec extends SparkSpec {
     assert(calls > 3, s"the sweep must cover the fast-forward, saw $calls calls")
   }
 
+  private def listRows(df: DataFrame): Set[(Long, Long, Seq[Long])] =
+    df.select("vec_id", "cid", "qe").as[(Long, Long, Seq[Long])].collect().toSet
+
+  test("IvfIndex: a crash at any TableIO call of a refresh leaves the before or the after state") {
+    val root = tmpDir("crashivf")
+    val source = new CdcTable(spark, s"$root/vecs", Seq("vec_id"), retainVersions = 5)
+    def vec(i: Int) = Array.tabulate(4)(d => ((i * 7 + d * 3) % 11 - 5).toFloat)
+    source.init((1 to 24).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"))
+    def open(path: String, io: TableIO) = {
+      val idx = new IvfIndex(spark, path, k = 4, io = io)
+      (idx.lists, () => idx.refresh(source))
+    }
+    open(s"$root/template", LocalTableIO)._2()
+    val frozen = new IvfIndex(spark, s"$root/template", k = 4)
+    val codebook = frozen.centroids.map { case (cid, ce) => (cid, ce.toSeq) }
+    // a window that inserts, moves and deletes vectors
+    source.merge(Seq((25L, vec(3), "c"), (2L, vec(9), "u"), (4L, vec(4), "d"))
+      .toDF("vec_id", "embedding", "__op").withColumn("mts", lit(2L)), "mts")
+    val calls = sweep(root, s"$root/template", source, open, listRows,
+      listRows(frozen.assign(source.read)))
+    assert(calls > 10, s"the sweep must cover the commit, saw $calls calls")
+    (1 to calls + 2).foreach { n =>
+      assert(new IvfIndex(spark, s"$root/copy$n", k = 4).centroids
+        .map { case (cid, ce) => (cid, ce.toSeq) } == codebook,
+        s"copy $n: a refresh must never retrain the codebook")
+    }
+  }
+
   test("compacting a GramView table between refreshes keeps the next refresh incremental") {
     val root = tmpDir("gramcompact")
     val io = new CrashingIO()
@@ -174,7 +202,7 @@ class ReflectedRecordSpec extends SparkSpec {
       rows.map { case (k, name, ts, op) => (k, name, new java.sql.Timestamp(ts), op) }
         .toDF("k", "name", "ts", "__op"), table = "dim", pk = "k", opCol = "__op", tsCol = "ts")
     def run(): Unit = new CdcPipeline(spark, new graft.sources.FileEnvelopeSource(envDir),
-      s"$root/ckpt", tables, joinViews = Seq(spec)).runOnce()
+      s"$root/ckpt", tables, views = Seq(spec)).runOnce()
     val view = new CdcTable(spark, s"$root/jview", Seq("id"))
     def recompute = JoinView.compute(new CdcTable(spark, s"$tables/fact", Seq("id")).read,
       new CdcTable(spark, s"$tables/dim", Seq("k")).read.select("k", "name"), Seq("fk" -> "k"))

@@ -165,7 +165,7 @@ class StreamingSpec extends SparkSpec {
         table = "dim", pk = "k", opCol = "__op", tsCol = "ts")
     def run(): Unit =
       new CdcPipeline(spark, new graft.sources.FileEnvelopeSource(envDir), ckpt, tables,
-        joinViews = Seq(jv)).runOnce()
+        views = Seq(jv)).runOnce()
     def assertViewCurrent(label: String): Unit = {
       val fact = new CdcTable(spark, s"$tables/fact", Seq("id"))
       val dim = new CdcTable(spark, s"$tables/dim", Seq("k"))
@@ -267,7 +267,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(envDir)
     val e = intercept[Exception] {
       new CdcPipeline(spark, new graft.sources.FileEnvelopeSource(envDir), ckpt, tables,
-        joinViews = Seq(bad)).runOnce()
+        views = Seq(bad)).runOnce()
     }
     assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).take(10)
       .exists(t => t.isInstanceOf[IllegalArgumentException] &&
@@ -296,7 +296,7 @@ class StreamingSpec extends SparkSpec {
         table = tbl, pk = kCol, opCol = "__op", tsCol = "ts")
     def run(): Unit =
       new CdcPipeline(spark, new graft.sources.FileEnvelopeSource(envDir), ckpt, tables,
-        joinViews = Seq(jv)).runOnce()
+        views = Seq(jv)).runOnce()
     def assertViewCurrent(label: String): Unit = {
       val fact = new CdcTable(spark, s"$tables/fact", Seq("id"))
       val dimA = new CdcTable(spark, s"$tables/dimA", Seq("ka"))
@@ -356,7 +356,7 @@ class StreamingSpec extends SparkSpec {
         table = "docs", pk = "id", opCol = "__op", tsCol = "ts")
     def run(): Unit =
       new CdcPipeline(spark, new graft.sources.FileEnvelopeSource(envDir), ckpt, tables,
-        derivedViews = Seq(dv)).runOnce()
+        views = Seq(dv)).runOnce()
     def assertCurrent(label: String): Unit = {
       val source = new CdcTable(spark, s"$tables/docs", Seq("id"))
       val view = new CdcTable(spark, s"$root/chunks", Seq("id", "chunk_id"))
@@ -418,7 +418,7 @@ class StreamingSpec extends SparkSpec {
         table = "hits", pk = "id", opCol = "__op", tsCol = "ts")
     def run(): Unit =
       new CdcPipeline(spark, new graft.sources.FileEnvelopeSource(envDir), ckpt, tables,
-        sketchViews = Seq(spec)).runOnce()
+        views = Seq(spec)).runOnce()
     def assertCurrent(label: String): Unit = {
       val source = new CdcTable(spark, s"$tables/hits", Seq("id"))
       val view = new CdcTable(spark, s"$root/dau", Seq("seg"))
@@ -462,7 +462,7 @@ class StreamingSpec extends SparkSpec {
         table = "vectors", pk = "vec_id", opCol = "__op", tsCol = "ts")
     def run(): Unit =
       new CdcPipeline(spark, new graft.sources.FileEnvelopeSource(envDir), ckpt, tables,
-        annIndexes = Seq(spec)).runOnce()
+        views = Seq(spec)).runOnce()
     def emb(seed: Int): Seq[Float] =
       (0 until 8).map(d => ((seed * 31 + d * 7) % 13 - 6).toFloat)
     def assertCurrent(label: String): Unit = {
